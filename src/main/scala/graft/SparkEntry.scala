@@ -102,12 +102,11 @@ object SparkEntry {
       Pipeline.fullPipeline(s, clips(s, dir), Seq("pass"))),
     // X3 tolerant-decode accounting (malformed payloads skipped, not fatal)
     "x3_tolerant_decode" -> ((s, dir) => {
-      val m = clips(s, dir).filter(Pipeline.gate)
-        .join(broadcast(Rules.df(s)), expr("contains(transcript, pattern)"))
-      m.groupBy("rule_id").agg(
+      val m = clips(s, dir).select(explode(Pipeline.matching(Rules.all)).as("m"))
+      m.groupBy(col("m.rule_id").as("rule_id")).agg(
         count(lit(1)).as("matched_total"),
-        sum(when(Pipeline.decodeOk, 1L).otherwise(0L)).as("decoded_total"),
-        sum(when(Pipeline.decodeOk, 0L).otherwise(1L)).as("skipped_total"))
+        sum(when(col("m.decode_ok"), 1L).otherwise(0L)).as("decoded_total"),
+        sum(when(col("m.decode_ok"), 0L).otherwise(1L)).as("skipped_total"))
     }),
     // A1 conservation-law counters
     "a1_counters" -> ((s, dir) => Pipeline.counters(s, clips(s, dir))),
@@ -182,7 +181,7 @@ object SparkEntry {
     // carried as an epoch-nanos long column — the RFC3339Nano parity path
     // (offsets are integer seconds, so ns arithmetic is exact bigint math).
     "m10_time_ns" -> ((s, dir) => {
-      val m = Pipeline.matches(clips(s, dir), s)
+      val m = Pipeline.explodeMatches(clips(s, dir), Rules.surviving(Nil))
       m.select(col("clip_id"), col("rule_id"),
         (unix_micros(col("event_time").cast("timestamp_ltz")) * 1000L +
           when(col("r.ts_offset_s") > 0, col("r.ts_offset_s") * 1000000000L)

@@ -7,7 +7,7 @@ package graft.audio
   */
 object Oracles {
 
-  /** matches + tolerant decode, mirrored from Pipeline.matches. */
+  /** matches + tolerant decode, mirrored from Pipeline.events. */
   val MATCHES_CTE: String = """
 matches AS (
   SELECT c.*, r.rule_id, r.payload_json

@@ -1,36 +1,43 @@
 package graft.audio
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{array, lit, struct}
 import org.apache.spark.sql.types._
 
+/** The decoded payload of a rule — the analog of the reference's typed
+  * Result (reference: /root/reference/internal/openreports/processor.go:322-340).
+  * Field names and types follow [[Rules.payloadSchema]]. */
+final case class Payload(message: String, policy: String, rule: String, severity: String,
+                         category: String, result: String, tsOffsetS: Long)
+
 /** A transcript rule — the graft analog of the reference's `results[]`
-  * payload (an array of JSON strings, each decoded into a typed Result;
-  * reference: /root/reference/internal/openreports/processor.go:322-340).
+  * payload (an array of JSON strings, each decoded into a typed Result).
   *
-  * `pattern` is matched against the clip transcript (substring match);
-  * `payloadJson` carries the Result-shaped payload and is decoded with
-  * tolerant semantics (malformed JSON ⇒ that match is skipped, the rest of
-  * the clip's matches survive — processor.go:229-241).
+  * `pattern` is matched against the clip transcript (substring match).
+  * `payloadJson` is the payload as JSON text, which the DuckDB oracle
+  * decodes with tolerant semantics (malformed JSON ⇒ that match is skipped,
+  * the rest of the clip's matches survive — processor.go:229-241).
   *
-  * `result` is the payload's pre-decoded result field (None ⇔ the payload
-  * is malformed). It MUST mirror payloadJson — [[Rules.mkRule]] is the
-  * single constructor that keeps the two in sync — and exists so the
-  * pipeline's per-row match predicate can use literal booleans/strings
-  * instead of re-parsing the static payload JSON on every row. */
+  * `payload` is the same payload already decoded (None ⇔ `payloadJson` is
+  * malformed). It MUST mirror payloadJson — [[Rules.mkRule]] is the single
+  * constructor that keeps the two in sync, and a test pins the pair against
+  * Spark's own JSON decode — so the engine never parses the static payload
+  * JSON: the decoded struct enters the plan as a literal. */
 final case class RuleDef(ruleId: String, pattern: String, payloadJson: String,
-                         result: Option[String])
+                         payload: Option[Payload]) {
+  def decodeOk: Boolean = payload.isDefined
+}
 
 object Rules {
 
-  /** Single constructor keeping payloadJson and the pre-decoded result in
-    * sync (see [[RuleDef.result]]). */
+  /** Single constructor keeping payloadJson and the decoded payload in sync
+    * (see [[RuleDef.payload]]). */
   private def mkRule(ruleId: String, pattern: String, message: String,
                      policy: String, rule: String, severity: String,
                      category: String, result: String, tsOffsetS: Long): RuleDef =
     RuleDef(ruleId, pattern,
       s"""{"message":"$message","policy":"$policy","rule":"$rule","severity":"$severity","category":"$category","result":"$result","ts_offset_s":$tsOffsetS}""",
-      Some(result))
+      Some(Payload(message, policy, rule, severity, category, result, tsOffsetS)))
 
   /** Static rule set. Edge cases mirror the reference test matrix
     * (processor_test.go:387-441): empty severity (⇒ finding_severity unset,
@@ -68,35 +75,37 @@ object Rules {
     StructField("ts_offset_s", LongType),
   ))
 
-  /** DDL of one rule element in [[arrayLit]]. */
-  val ruleStructDdl: String =
-    "struct<rule_id:string,pattern:string,payload_json:string,decode_ok:boolean,result:string>"
+  /** Type of one rule element in [[literal]]. */
+  val ruleStruct: StructType = StructType(Seq(
+    StructField("rule_id", StringType),
+    StructField("pattern", StringType),
+    StructField("decode_ok", BooleanType),
+    StructField("r", payloadSchema),
+  ))
 
-  /** The rule set as a LITERAL Catalyst array of structs. This is what lets
-    * the full pipeline evaluate per-clip matching as a pure expression —
-    * `filter(Rules.arrayLit, clip-predicate)` — with no join at all, which
-    * in turn keeps [[graft.operators.Pipeline.fullPipeline]] single-scan
-    * and map-only (the R2 pass-through needs "did ANY rule survive", and
-    * deriving that from the transformed output forces a re-scan +
-    * anti-join that cannot broadcast at 10^12 clips).
-    *
-    * `decode_ok` and `result` are FOLDED AT PLAN BUILD: payload validity
-    * and status are properties of the static rule set, not of the data,
-    * so the hot per-row match predicate does zero JSON parsing — the
-    * payload struct is decoded only for matched rows after the explode. */
-  def arrayLit: Column = array(all.map(r => struct(
-    lit(r.ruleId).as("rule_id"),
-    lit(r.pattern).as("pattern"),
-    lit(r.payloadJson).as("payload_json"),
-    lit(r.result.isDefined).as("decode_ok"),
-    r.result.map(lit(_)).getOrElse(lit(null).cast("string")).as("result"))): _*)
+  /** Rules that survive the tolerant decode (X3: a malformed payload skips
+    * that match, reference processor.go:229-241) and the IN-list status
+    * filter (F2: empty keeps all, processor.go:702-716) — decided here,
+    * once, because both are properties of the static rule set and not of
+    * the data. */
+  def surviving(allowed: Seq[String]): Seq[RuleDef] =
+    all.filter(_.payload.exists(p => allowed.isEmpty || allowed.contains(p.result)))
 
-  /** Small dimension → always broadcast-joined against the clip stream. */
-  def df(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    all.map(r => (r.ruleId, r.pattern, r.payloadJson))
-      .toDF("rule_id", "pattern", "payload_json")
-  }
+  /** `rules` as ONE literal Catalyst array of [[ruleStruct]] — the rule set
+    * folded into the plan. Each element carries `rule_id`, `pattern`,
+    * `decode_ok` and the decoded payload struct `r` (NULL when the payload
+    * is malformed), so per-clip matching is a pure expression over the
+    * literal (`filter(literal, contains(transcript, pattern))`, see
+    * [[graft.operators.Pipeline.matching]]): no join against the rule set
+    * and no JSON parsing per row. */
+  def literal(rules: Seq[RuleDef]): Column =
+    array(rules.map { rd =>
+      val r = rd.payload.fold(lit(null)) { p =>
+        struct(lit(p.message), lit(p.policy), lit(p.rule), lit(p.severity),
+          lit(p.category), lit(p.result), lit(p.tsOffsetS))
+      }
+      struct(lit(rd.ruleId), lit(rd.pattern), lit(rd.decodeOk), r).cast(ruleStruct)
+    }: _*).cast(ArrayType(ruleStruct)) // the cast types the empty array too
 
   private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
 

@@ -29,19 +29,20 @@ object Metrics {
       approx_count_distinct(col("clip_id")).as("expanded_clips_approx"),
       sum(round(col("risk_score") * 10).cast("bigint")).as("risk_x10_total"))
 
-  /** Labeled error counters on the PRE-decode match stream — the analog of
-    * the reference's processing_errors_total{error_type} (reference
+  /** Labeled error counters on the clip stream — the analog of the
+    * reference's processing_errors_total{error_type} (reference
     * internal/openreports/processor.go:24-38, :179-187). Labels become
     * metric-name suffixes (observed metrics are flat columns):
-    * decode_error = malformed payload JSON skipped by the tolerant decode;
-    * shape_error = well-formed JSON whose shape defeats the struct decode. */
-  def observeErrors(rawMatches: DataFrame): DataFrame =
-    rawMatches.observe(ErrorsObservationName,
-      sum(when(!graft.operators.Pipeline.decodeOk, 1L).otherwise(0L))
-        .as("errors_decode_error_total"),
-      sum(when(graft.operators.Pipeline.decodeOk &&
-          from_json(col("payload_json"), graft.audio.Rules.payloadSchema).isNull, 1L)
-        .otherwise(0L)).as("errors_shape_error_total"))
+    * decode_error = a gated clip matched a rule whose payload JSON is
+    * malformed, and the tolerant decode skipped that match. Counted from the
+    * rule set's folded `decode_ok` flags with the match kernel — no JSON is
+    * parsed. There is no shape_error label: a payload is decoded from typed
+    * fields, and RulesSpec pins every rule's `decode_ok` to its JSON
+    * validity, so well-formed JSON the struct decode rejects cannot occur. */
+  def observeErrors(clips: DataFrame): DataFrame =
+    clips.observe(ErrorsObservationName,
+      sum(graft.operators.Pipeline.matchCount(graft.audio.Rules.all.filterNot(_.decodeOk)))
+        .as("errors_decode_error_total"))
 
   /** Collects observed metrics per batchId; when `persistRoot` is given,
     * each batch's counters are also written as

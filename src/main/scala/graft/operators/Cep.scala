@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * The SAME transition function drives both the batch implementation (window
   * functions over a sorted partition — used by the oracle-checked query) and
   * the streaming implementation (`flatMapGroupsWithState`, see
-  * [[graft.streaming.StreamingCep]]).
+  * [[graft.streaming.StreamingJobs.streamingCep]]).
   */
 object Cep {
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.audio.Rules
+import graft.audio.{RuleDef, Rules}
 
 /** The reference's per-record normalize/classify/enrich pipeline
   * (reference: /root/reference/internal/openreports/processor.go:50-320 and
@@ -12,10 +12,11 @@ import graft.audio.Rules
   * severity maps to finding_severity=MEDIUM but risk_score=0.0
   * (processor.go:463-493; pinned by processor_test.go:398 vs :431).
   *
-  * Scale notes: the rule side is a tiny dimension → always `broadcast()`;
-  * the whole match+transform is a single WholeStageCodegen stage with no
-  * shuffle (verified via explain) — it is embarrassingly parallel, which is
-  * what makes the N→4N ≥0.8 scaling criterion reachable.
+  * Scale notes: the static rule set is folded into the plan as one literal
+  * array ([[Rules.literal]]), so rule matching is a per-row expression — no
+  * join, no exchange, no JSON parsing. The whole match+transform is one
+  * map-only pass over a single scan (PlanSpec-pinned) — embarrassingly
+  * parallel, which is what makes the N→4N ≥0.8 scaling criterion reachable.
   */
 object Pipeline {
 
@@ -26,39 +27,31 @@ object Pipeline {
   val gate: Column =
     col("codec").isin("pcm_s16le", "wav") && col("transcript").isNotNull
 
-  // ------------------------------------------------- X1+X3: match + decode
-  /** True iff the payload is well-formed JSON. `from_json` alone cannot
-    * express the reference's skip-on-parse-error semantics: in PERMISSIVE
-    * mode it yields a struct of nulls for malformed input, not a null
-    * struct. `try_parse_json` (variant) returns NULL exactly on malformed. */
-  val decodeOk: Column = try_parse_json(col("payload_json")).isNotNull
+  // ------------------------------------------- X1+X3+F2: the match kernel
+  /** The rule-match kernel every events path shares: per clip, the array of
+    * `rules` whose pattern occurs in the transcript (X1 substring match over
+    * the rule set folded into the plan by [[Rules.literal]]); NULL when the
+    * gate fails. Tolerant decode (X3) and status filter (F2) are properties
+    * of the static rules, decided when choosing `rules`
+    * ([[Rules.surviving]]), so the row loop does one `contains` per
+    * candidate rule and never parses JSON. */
+  def matching(rules: Seq[RuleDef]): Column =
+    when(gate, filter(Rules.literal(rules),
+      rr => contains(col("transcript"), rr.getField("pattern"))))
 
-  /** Rule-eval explode (X1) BEFORE the tolerant decode: one clip × N
-    * matching rules via a broadcast theta-join on substring containment.
-    * Exposed separately so the streaming path can `observe()` labeled
-    * error counters on the pre-filter stream (the decode-skipped rows are
-    * gone after [[matches]]). */
-  def rawMatches(clips: DataFrame, spark: SparkSession): DataFrame =
-    clips.filter(gate)
-      .join(broadcast(Rules.df(spark)), expr("contains(transcript, pattern)"))
+  /** How many of `rules` match the clip; 0 when the gate fails. */
+  def matchCount(rules: Seq[RuleDef]): Column =
+    // coalesce BEFORE size: with ANSI off, legacy size(null) = -1 would
+    // slip through a post-size coalesce and silently corrupt the counters
+    size(coalesce(matching(rules), Rules.literal(Nil)))
 
-  /** Tolerant JSON decode (X3) over [[rawMatches]]: malformed payloads are
-    * dropped, matching the reference's skip-that-element semantics
-    * (processor.go:229-241). */
-  def decodeFiltered(raw: DataFrame): DataFrame =
-    raw.filter(decodeOk)
-      .withColumn("r", from_json(col("payload_json"), Rules.payloadSchema))
-      .filter(col("r").isNotNull)
-
-  /** X1 + X3 in one call. */
-  def matches(clips: DataFrame, spark: SparkSession): DataFrame =
-    decodeFiltered(rawMatches(clips, spark))
-
-  // ----------------------------------------------------- F2: status filter
-  /** IN-list status filter (F2) — empty filter keeps all
-    * (reference internal/openreports/processor.go:702-716). */
-  def statusFilter(allowed: Seq[String]): Column =
-    if (allowed.isEmpty) lit(true) else col("r.result").isin(allowed: _*)
+  /** The kernel's explode: one row per (clip, matching rule) carrying the
+    * rule's `rule_id` and decoded payload struct `r`. */
+  def explodeMatches(clips: DataFrame, rules: Seq[RuleDef]): DataFrame =
+    clips.withColumn("m", explode(matching(rules)))
+      .withColumn("rule_id", col("m.rule_id"))
+      .withColumn("r", col("m.r"))
+      .drop("m")
 
   // ------------------------------------------------------- E2: event key
   /** clip_id-derived event key (E2 analog of pod-name workload inference,
@@ -123,16 +116,14 @@ object Pipeline {
 
   // ----------------------------------------------- full transform (M1-M11)
   /** The complete field mapping (reference transformToSecurityEvent,
-    * processor.go:345-460 + MAPPING.md). Input: the matches() frame with
-    * struct column `r`. Event ids are content-derived (sha256) instead of
-    * UUIDv4 — replay-stable exactly-once output requires deterministic ids
-    * (SURVEY §7.6.2); documented divergence from reference M2. */
-  /** The event column set as (name → expression) pairs, shared verbatim by
-    * [[transformed]] (the join-side frame from [[matches]]) and the
-    * single-scan [[fullPipeline]] (which wraps the non-carry columns in a
-    * pass-through guard). Expects columns `clip_id sr_hz dur_ms codec
-    * tenant_id event_id event_time rule_id` plus the decoded payload
-    * struct `r`. */
+    * processor.go:345-460 + MAPPING.md) as (name → expression) pairs,
+    * shared verbatim by [[events]] and [[fullPipeline]] (which wraps the
+    * non-carry columns in a pass-through guard). Expects columns `clip_id
+    * sr_hz dur_ms codec tenant_id event_id event_time rule_id` plus the
+    * decoded payload struct `r`. Event ids are content-derived (sha256)
+    * instead of UUIDv4 — replay-stable exactly-once output requires
+    * deterministic ids (SURVEY §7.6.2); documented divergence from
+    * reference M2. */
   def eventFields: Seq[(String, Column)] = {
     val sev = col("r.severity")
     val res = col("r.result")
@@ -189,58 +180,34 @@ object Pipeline {
   private val carryCols: Set[String] =
     Set("clip_id", "sr_hz", "dur_ms", "codec", "tenant_id", "src_event_id", "event_time")
 
-  def transformed(m: DataFrame): DataFrame =
-    m.select(eventFields.map { case (n, c) => c.as(n) }: _*)
-
-  /** matches → filter → transform, one call. */
+  /** match → tolerant decode → status filter → transform, one call: the
+    * kernel's explode over the surviving rules, then the field mapping. */
   def events(spark: SparkSession, clips: DataFrame, allowed: Seq[String] = Nil): DataFrame = {
     Rules.validateStatusFilter(allowed).left.foreach(e => throw new IllegalArgumentException(e))
-    transformed(matches(clips, spark).filter(statusFilter(allowed)))
+    explodeMatches(clips, Rules.surviving(allowed))
+      .select(eventFields.map { case (n, c) => c.as(n) }: _*)
   }
 
   // --------------------------------------------- R2: identity pass-through
-  /** Per-rule surviving-match predicate over ONE element of
-    * [[Rules.arrayLit]]: substring match (X1) + tolerant decode (X3) +
-    * status filter (F2), folded into a single expression so "which rules
-    * survive for this clip" needs no join. Decode validity and status come
-    * from the literal's pre-folded `decode_ok`/`result` fields — the hot
-    * row loop does ZERO JSON parsing (payloads are static; parsing them
-    * per row per rule was ~half the single-scan plan's cost). */
-  private def ruleSurvives(allowed: Seq[String])(rr: Column): Column = {
-    val statusOk =
-      if (allowed.isEmpty) lit(true)
-      else rr.getField("result").isin(allowed: _*)
-    contains(col("transcript"), rr.getField("pattern")) &&
-      rr.getField("decode_ok") && statusOk
-  }
-
-  /** Surviving-rule array per clip (null when the gate fails, empty when no
-    * rule survives — either way the clip passes through). A pure expression
-    * over the literal rule set: the scale-critical property is that the
-    * matched/pass-through decision never leaves the row. */
-  def matchedRules(allowed: Seq[String]): Column =
-    when(gate, filter(Rules.arrayLit, rr => ruleSurvives(allowed)(rr)))
-
   /** Full pipeline with pass-through union (R2): clips that fail the gate,
     * match no rule, or whose matches were ALL status-filtered out pass
     * through unchanged (reference processor.go:190-209 — the easy-to-miss
     * semantic).
     *
-    * Single-scan, map-only: each clip computes its surviving-rule array as
-    * a pure expression over the literal rule set, then one conditional
-    * explode emits either the transformed events or a single pass-through
-    * marker row — no second scan, no distinct, no anti-join, no broadcast
+    * Single-scan, map-only: each clip computes its surviving-rule array
+    * with the [[matching]] kernel, then one outer explode emits either the
+    * transformed events or a single pass-through marker row — no second scan, no distinct, no anti-join, no broadcast
     * of matched ids (the round-2 plan broadcast ALL matched clip_ids,
     * which cannot broadcast at 10^12 clips). The executed plan is one
     * parquet scan with zero joins and zero exchanges (PlanSpec-pinned). */
   def fullPipeline(spark: SparkSession, clips: DataFrame, allowed: Seq[String] = Nil): DataFrame = {
     Rules.validateStatusFilter(allowed).left.foreach(e => throw new IllegalArgumentException(e))
-    val mr = matchedRules(allowed)
-    val nullRule = lit(null).cast(Rules.ruleStructDdl)
+    // explode_outer emits one NULL rule for a null (gate failed) or empty
+    // (nothing survived) array: that row is the pass-through marker
     val exploded = clips
-      .withColumn("mrule", explode(when(size(mr) > 0, mr).otherwise(array(nullRule))))
+      .withColumn("mrule", explode_outer(matching(Rules.surviving(allowed))))
       .withColumn("rule_id", col("mrule.rule_id"))
-      .withColumn("r", from_json(col("mrule.payload_json"), Rules.payloadSchema))
+      .withColumn("r", col("mrule.r"))
     val isEvent = col("mrule").isNotNull
     exploded.select(eventFields.filterNot(_._1 == "match_status").map { case (n, c) =>
       (if (carryCols(n)) c else when(isEvent, c)).as(n)
@@ -258,18 +225,14 @@ object Pipeline {
   /** Conservation-law counters (A1, reference METRICS.md:42): incoming =
     * passthrough + expanded-parents; outgoing = events + passthrough.
     *
-    * Single-scan: the per-clip surviving-event count is
-    * `size(matchedRules)` — a pure expression — so the whole query is one
+    * Single-scan: the per-clip surviving-event count is the kernel's
+    * [[matchCount]] — a pure expression — so the whole query is one
     * scan + a partial/final aggregate; no join-back against the event
     * output (the round-2 shape re-scanned the source and shuffled a
     * per-clip count table). */
   def counters(spark: SparkSession, clips: DataFrame, allowed: Seq[String] = Nil): DataFrame = {
     Rules.validateStatusFilter(allowed).left.foreach(e => throw new IllegalArgumentException(e))
-    // coalesce BEFORE size: with ANSI off, legacy size(null) = -1 would
-    // slip through a post-size coalesce and silently corrupt the counters
-    val n = size(coalesce(matchedRules(allowed),
-      array().cast(s"array<${Rules.ruleStructDdl}>")))
-    clips.select(n.as("n"))
+    clips.select(matchCount(Rules.surviving(allowed)).as("n"))
       .agg(
         count(lit(1)).as("incoming_logs_total"),
         sum(col("n")).as("expanded_events_total"),

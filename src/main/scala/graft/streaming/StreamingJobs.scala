@@ -15,10 +15,11 @@ object StreamingJobs {
   private def tsUs(t: java.sql.Timestamp): Long =
     (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
 
-  /** Transformed event stream from a streaming clip source. The rule side
-    * is a static broadcast dimension → stream-static join, stateless, no
-    * shuffle; the whole normalize/classify/enrich stage scales linearly
-    * with executors (the reference's "scale up replicas" model). */
+  /** Transformed event stream from a streaming clip source. The rule set
+    * is folded into the plan ([[Pipeline.matching]]), so the stream is
+    * stateless and map-only — no join, no shuffle; the whole
+    * normalize/classify/enrich stage scales linearly with executors (the
+    * reference's "scale up replicas" model). */
   def events(spark: SparkSession, clipStream: DataFrame,
              statusFilter: Seq[String] = Nil): DataFrame =
     // watermarks demand TIMESTAMP (LTZ); parquet sources may carry NTZ —
@@ -26,19 +27,13 @@ object StreamingJobs {
     Pipeline.events(spark, clipStream, statusFilter)
       .withColumn("event_time", col("event_time").cast("timestamp"))
 
-  /** [[events]] with the labeled error counters observed on the pre-decode
-    * match stream (processing_errors_total{error_type} analog): the
-    * decode-skipped rows are counted per micro-batch by error type before
-    * the tolerant filter drops them, collected by [[graft.metrics.Metrics.Listener]]. */
+  /** [[events]] with the labeled error counters observed on the clip
+    * stream (processing_errors_total{error_type} analog): matches the
+    * tolerant decode skips are counted per micro-batch by error type,
+    * collected by [[graft.metrics.Metrics.Listener]]. */
   def eventsObserved(spark: SparkSession, clipStream: DataFrame,
-                     statusFilter: Seq[String] = Nil): DataFrame = {
-    graft.audio.Rules.validateStatusFilter(statusFilter)
-      .left.foreach(e => throw new IllegalArgumentException(e))
-    val raw = graft.metrics.Metrics.observeErrors(Pipeline.rawMatches(clipStream, spark))
-    Pipeline.transformed(
-      Pipeline.decodeFiltered(raw).filter(Pipeline.statusFilter(statusFilter)))
-      .withColumn("event_time", col("event_time").cast("timestamp"))
-  }
+                     statusFilter: Seq[String] = Nil): DataFrame =
+    events(spark, graft.metrics.Metrics.observeErrors(clipStream), statusFilter)
 
   /** Watermarked tumbling-window aggregate (append mode: windows emit once
     * finalized; late rows beyond the watermark are dropped). */

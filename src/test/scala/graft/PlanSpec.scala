@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{IntervalJoin, Pipeline, Windows}
@@ -18,12 +19,37 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("events pipeline: broadcast rule join, zero data shuffles") {
-    val plan = planOf(Pipeline.events(spark, ClipTable.clips(spark, sf)))
-    assert(plan.contains("BroadcastNestedLoopJoin"))
-    // the only exchange allowed is the broadcast of the rule dimension
-    assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
-      s"unexpected shuffle in the map-only pipeline:\n$plan")
+  /** The rule-match kernel's plan shape: the rule set is folded into the
+    * plan, so there is one source scan, no join against the rules, no
+    * exchange, and no JSON decode of the static payloads. */
+  private def assertKernelPlan(plan: String): Unit = {
+    assert("FileScan|BatchScan".r.findAllIn(plan).size == 1,
+      s"expected exactly one source scan:\n$plan")
+    assert(!plan.contains("Join"), s"unexpected join in the events plan:\n$plan")
+    assert(!plan.contains("Exchange"), s"unexpected exchange in the map-only plan:\n$plan")
+    assert("(?i)from_json|parse_?json|JsonToStructs".r.findFirstIn(plan).isEmpty,
+      s"the static rule payloads must not be JSON-decoded per row:\n$plan")
+  }
+
+  test("events pipeline: single scan, no join, no exchange, no JSON decode") {
+    assertKernelPlan(planOf(Pipeline.events(spark, ClipTable.clips(spark, sf))))
+    assertKernelPlan(planOf(Pipeline.events(spark, ClipTable.clips(spark, sf), Seq("fail"))))
+  }
+
+  test("streaming eventsObserved: single scan, no join, no exchange, no JSON decode") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val ms = MemoryStream[Clip]
+    val q = graft.streaming.StreamingJobs.eventsObserved(s, ms.toDF())
+      .writeStream.format("memory").queryName("plan_events_observed").start()
+    try {
+      ms.addData(Clip("clip-t0-s0-0000000001", 16000, 500, "wav", "login ok user 4",
+        java.sql.Timestamp.valueOf("2025-09-19 10:00:00"), 7L, 1L))
+      q.processAllAvailable()
+      assertKernelPlan(q.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString)
+    } finally q.stop()
   }
 
   test("events pipeline: column pruning reaches the parquet scan") {
@@ -126,8 +152,8 @@ class PlanSpec extends AnyFunSuite {
       Pipeline.events(spark, ClipTable.clips(spark, sf)),
       IntervalJoin.activations(spark, sf), maxBroadcastBytes = Some(0L))
     val plan = planOf(df)
-    // the events pipeline legitimately contains the 8-row rule BNLJ; the
-    // INTERVAL join (the one touching active_from) must never be one
+    // the INTERVAL join (the one touching active_from) must never be a
+    // nested loop
     val nestedLoop = plan.linesIterator.filter(l =>
       l.contains("BroadcastNestedLoopJoin") || l.contains("CartesianProduct"))
     assert(!nestedLoop.exists(_.contains("active_from")),

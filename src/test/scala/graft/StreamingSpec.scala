@@ -1642,6 +1642,48 @@ class StreamingSpec extends AnyFunSuite {
     } finally { q.stop(); s.streams.removeListener(listener) }
   }
 
+  test("eventsObserved over micro-batches equals batch Pipeline.events, with and without a status filter") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    // every rule (malformed one included), multi-rule clips, a gate-failing
+    // codec and a null transcript, split over three micro-batches
+    val batches = Seq(
+      Seq(clip("clip-t0-s0-0000000001", "access denied privilege escalation", "2025-09-19 10:00:00", 1),
+        clip("clip-t1-s0-0000000002", "login ok user 4", "2025-09-19 10:01:00", 2),
+        clip("clip-t2-s1-0000000003", "policy skipped user 1", "2025-09-19 10:02:00", 3)),
+      Seq(clip("clip-t0-s1-0000000004", "user 2 user 3", "2025-09-19 10:03:00", 4),
+        clip("clip-t1-s1-0000000005", "user 4", "2025-09-19 10:04:00", 5),
+        Clip("clip-t2-s2-0000000006", 16000, 500, "opus-stub", "access denied user 4",
+          ts("2025-09-19 10:05:00"), 7L, 6L)),
+      Seq(Clip("clip-t3-s2-0000000007", 16000, 500, "wav", null, ts("2025-09-19 10:06:00"), 7L, 7L),
+        clip("clip-t3-s3-0000000008", "nothing matches here", "2025-09-19 10:07:00", 8),
+        clip("clip-t3-s3-0000000009", "access denied login ok user 1", "2025-09-19 10:08:00", 9)))
+    def sorted(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    Seq(Nil, Seq("fail", "error")).zipWithIndex.foreach { case (filter, i) =>
+      val ms = MemoryStream[Clip]
+      val listener = new graft.metrics.Metrics.Listener(queryName = Some(s"eq_out_$i"))
+      s.streams.addListener(listener)
+      val q = StreamingJobs.eventsObserved(s, ms.toDF(), filter)
+        .writeStream.outputMode("append").format("memory").queryName(s"eq_out_$i").start()
+      try {
+        batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+        val streamed = sorted(s.sql(s"SELECT * FROM eq_out_$i"))
+        val batch = sorted(Pipeline.events(s, batches.flatten.toDF(), filter))
+        assert(streamed.nonEmpty && streamed == batch, s"filter=$filter")
+        // the malformed rule matched two GATED 'user 4' clips; the
+        // opus-stub one fails the gate and is not a decode error. Progress
+        // reaches the listener asynchronously: wait for all three batches.
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (listener.byBatch.size < batches.size && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(listener.totals.get("errors_decode_error_total").contains(2L),
+          s"filter=$filter: ${listener.totals}")
+      } finally { q.stop(); s.streams.removeListener(listener) }
+    }
+  }
+
   test("per-row lineage: ordered golden replay is reproducible") {
     val s = spark
     import s.implicits._
