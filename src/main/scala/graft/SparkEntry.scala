@@ -41,7 +41,13 @@ object SparkEntry {
     * parallelism that does not exist and silently disable the fix — the
     * r6 review catch). Footer reads are bounded: none at all when the
     * file count already reaches the target, and early-exit once enough
-    * row groups are seen. */
+    * row groups are seen.
+    *
+    * The probe only chooses a plan, so it never fails one: a footer that
+    * cannot be read (corrupt or non-parquet file) counts as no row groups,
+    * so units the probe cannot see lead to the repartition branch, which
+    * is correct at any input size. Whether the scan skips or rejects such
+    * a file stays the session's call (`spark.sql.files.ignoreCorruptFiles`). */
   private def spread(df: DataFrame, key: String): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     val files = df.inputFiles
@@ -51,15 +57,16 @@ object SparkEntry {
         // few files: the splittable unit is the row group — count them
         // from footers (≤ files.length reads, early exit at `want`)
         val conf = df.sparkSession.sessionState.newHadoopConf()
+        def rowGroups(file: String): Int = scala.util.Try {
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(file), conf)
+          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try reader.getRowGroups.size()
+          finally reader.close()
+        }.getOrElse(0)
         var units = 0
         val it = files.iterator
-        while (units < want && it.hasNext) {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(it.next()), conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try units += reader.getRowGroups.size()
-          finally reader.close()
-        }
+        while (units < want && it.hasNext) units += rowGroups(it.next())
         units >= want
       }
     if (enough) df else df.repartition(want, col(key))

@@ -56,11 +56,16 @@ object Pipeline {
   // ------------------------------------------------------- E2: event key
   /** clip_id-derived event key (E2 analog of pod-name workload inference,
     * reference processor.go:561-620): split on '-', drop the last two
-    * segments, rejoin; needs ≥3 segments to produce anything. */
+    * segments, rejoin; needs ≥3 segments to produce anything.
+    *
+    * Computed without splitting: the last two segments are the text after
+    * the second-to-last '-' (`substring_index(.., -2)`, the whole id when
+    * it has fewer than two dashes), so the key is the prefix before that
+    * dash — no per-row array of segments, no rejoin. */
   def eventKey(clipId: Column): Column = {
-    val parts = split(clipId, "-")
-    when(size(parts) >= lit(3),
-      array_join(slice(parts, lit(1), size(parts) - 2), "-"))
+    val tail = substring_index(clipId, "-", -2)
+    when(length(tail) < length(clipId),
+      clipId.substr(lit(1), length(clipId) - length(tail) - 1))
   }
 
   // ------------------------------------------------- M4/M5/M6 lookup maps

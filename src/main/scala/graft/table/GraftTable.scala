@@ -84,6 +84,15 @@ object GraftTable {
     * driver I/O per micro-batch). Negligible runtime cost; never read on
     * the data path. */
   val metaReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Parquet dictionary budget (`parquet.dictionary.page.size`, bytes) of
+    * every data write. The 1 MiB default exceeds a micro-batch file's whole
+    * column chunk, so a column of unique values (ids, hashes) hashed every
+    * value into a dictionary that parquet then dropped for not compressing.
+    * At 16 KiB such a column falls back to plain after a few hundred values;
+    * low-cardinality columns stay under it and keep their dictionaries.
+    * Only encodings change, never content — so a constant, not a setting. */
+  private[table] val DictionaryBudget = 16 * 1024
 }
 
 /** @param bloomFor columns to equip with per-file parquet bloom filters
@@ -282,19 +291,15 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       (cols, ndv)
     }
 
-  /** Persist the declared bloom layout (no-op when unconfigured or
-    * already recorded) and return the writer with per-column parquet
-    * bloom options applied. Called by every data-writing path with the
-    * DataFrame being written and that write's directory-partition
-    * columns: a typo'd / case-mismatched / partition bloom column would
-    * otherwise be persisted as the authoritative layout and silently
-    * never produce a bloom (parquet matches the option name
-    * case-sensitively; partition values live in paths, not files) —
-    * every later takedown would quietly fall back to stats-only
+  /** The one data write (commit, compaction, every DML rewrite): `df` as
+    * parquet under `dir`, partitioned by `partitionCols`, with the
+    * [[GraftTable.DictionaryBudget]] and the bloom layout — persisted here
+    * first, so a typo'd / case-mismatched / partition bloom column fails
+    * instead of becoming the authoritative layout that never produces a
+    * bloom (parquet matches option names case-sensitively; partition
+    * values live in paths) and silently reduces takedowns to stats-only
     * pruning. */
-  private def withBloomOpts(df: DataFrame, partitionCols: Seq[String],
-                            w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
-      : org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
+  private def writeParquet(df: DataFrame, partitionCols: Seq[String], dir: Path): Unit = {
     if (bloomFor.nonEmpty && !Files.exists(p("BLOOM"))) {
       // validate against the UNION of this batch's columns and the
       // persisted table schema: a schema-evolving batch may legitimately
@@ -306,10 +311,13 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       writeAtomic(p("BLOOM"), s"${bloomFor.mkString(",")}\n$bloomNdv")
     }
     val (cols, ndv) = bloomLayout
-    cols.foldLeft(w) { (acc, c) =>
+    val base = df.write.mode("overwrite")
+      .option("parquet.dictionary.page.size", GraftTable.DictionaryBudget.toString)
+    val w = cols.foldLeft(base) { (acc, c) =>
       acc.option(s"parquet.bloom.filter.enabled#$c", "true")
         .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
     }
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir.toString)
   }
 
   /** Reject a would-be-persisted bloom layout naming columns that can
@@ -928,12 +936,8 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     val mergedSchema = mergeSchemas(schemaOf, deepNullable(df.schema))
 
     val dataDir = p("data", s"batch=$batchId")
-    val writer = withBloomOpts(df, partitionBy, df.write.mode("overwrite"))
     commitPhaseCount.incrementAndGet()
-    commitPhase("write") {
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(dataDir.toString)
-    }
+    commitPhase("write") { writeParquet(df, partitionBy, dataDir) }
     writeAtomic(p("SCHEMA"), mergedSchema.json)
     if (partitionBy.nonEmpty && partCols != partitionBy)
       writeAtomic(p("PARTCOLS"), partitionBy.mkString(","))
@@ -991,10 +995,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // rewrite dirs stay value-pure, so pruning / key-grouping survive.
     // `targetFiles` then applies per partition value (repartition by the
     // partition cols first would put each value in one writer task).
-    val pc = partCols.filter(src.columns.contains)
-    val rewriter = withBloomOpts(src, pc, src.repartition(targetFiles).write.mode("overwrite"))
-    (if (pc.nonEmpty) rewriter.partitionBy(pc: _*) else rewriter)
-      .parquet(dataDir.toString)
+    writeParquet(src.repartition(targetFiles), partCols.filter(src.columns.contains), dataDir)
 
     val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), Some(src.schema))
     publishRewrite("rewrite", v, written.toSeq, batchIds.toSeq, mergedBatchIds.toSeq, "{}")
@@ -1432,9 +1433,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
           .unionByName(src0)
 
       val dataDir = p("data", s"merge=v$v")
-      val pc = partCols.filter(outRows.columns.contains)
-      val w = withBloomOpts(outRows, pc, outRows.write.mode("overwrite"))
-      (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(dataDir.toString)
+      writeParquet(outRows, partCols.filter(outRows.columns.contains), dataDir)
       val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), Some(tableSchema))
       val (live, empty) = written.partition(_.rows > 0)
       empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
@@ -1551,9 +1550,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
             return affected
           case Right((outRows, affectedOf0)) =>
             affectedOf = affectedOf0
-            val pc = partCols.filter(outRows.columns.contains)
-            val w = withBloomOpts(outRows, pc, outRows.write.mode("overwrite"))
-            (if (pc.nonEmpty) w.partitionBy(pc: _*) else w).parquet(dataDir.toString)
+            writeParquet(outRows, partCols.filter(outRows.columns.contains), dataDir)
             writtenFiles(dataDir, spark.sessionState.newHadoopConf(),
               tableSchema.orElse(Some(outRows.schema)))
         }

@@ -185,4 +185,31 @@ class PropertySpec extends AnyFunSuite {
     assert(rows.forall(r => r.getLong(2) >= 0L && r.getLong(2) < (1L << 32)),
       "morton code left the 32-bit range")
   }
+
+  test("event key: substring kernel equals the split-based definition for any id") {
+    val s = spark
+    import org.apache.spark.sql.functions._
+    import s.implicits._
+    // the definition the kernel replaced: split on '-', drop the last two
+    // segments, rejoin; NULL below three segments
+    def bySplit(c: org.apache.spark.sql.Column) = {
+      val parts = split(c, "-")
+      when(size(parts) >= lit(3), array_join(slice(parts, lit(1), size(parts) - 2), "-"))
+    }
+    // ids over a dash-heavy alphabet: empty segments, leading / trailing /
+    // doubled '-', zero to many dashes, multi-byte and non-BMP characters
+    val idGen: Gen[String] = Gen.choose(0, 9).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("-", "-", "a", "bc", "é", "😀", "9", "--")).map(_.mkString))
+    val fixed = Seq("", "-", "--", "---", "a", "a-b", "a-b-c", "-a-b", "a-b-", "a--b",
+      "cert-manager-cainjector-89fd4b8f9-t9xlf", "é-😀-x", "clip-t3-s1-0000000042")
+    val ids: Seq[String] = fixed ++ samples(Gen.listOfN(200, idGen), 3).flatten :+ null
+    val rows = ids.toDF("id")
+      .select(col("id"), Pipeline.eventKey(col("id")).as("k"), bySplit(col("id")).as("ref"))
+      .collect()
+    assert(rows.length == ids.length)
+    rows.foreach(r => assert(r.getString(1) == r.getString(2), s"id=${r.getString(0)}"))
+    // the generator really reaches every arity class (none / NULL / "" key)
+    val keys = rows.map(r => Option(r.getString(1)))
+    assert(keys.contains(None) && keys.contains(Some("")) && keys.exists(_.exists(_.nonEmpty)))
+  }
 }
