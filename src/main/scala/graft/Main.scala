@@ -280,7 +280,7 @@ object Main {
         println(s"""{"job":"describe","version":${table.version},""" +
           s""""rows":${files.map(_.rows).sum},"files":${files.size},""" +
           s""""bytes":${files.map(_.bytes).sum},""" +
-          s""""layout":${arr(table.layout)},"partition_by":${arr(table.partCols)},""" +
+          s""""partition_by":${arr(table.partCols)},""" +
           s""""bloom_for":${arr(bloomCols)},"bloom_ndv":$ndvJson,""" +
           s""""schema":${table.schemaOf.map(_.json).getOrElse("null")}}""")
       }
@@ -385,10 +385,6 @@ object Main {
     spark.streams.addListener(listener)
     lazy val table = new GraftTable(conf.output,
       bloomFor = conf.bloomFor, bloomNdv = conf.bloomNdv)
-    // NOTE: the ExactlyOnceSink is constructed only after the
-    // --partition-by validation below — its constructor writes the output
-    // table's LAYOUT metadata, and a rejected config must exit before the
-    // sink touches the output (C1: reject before any side effect).
 
     // input auto-detection: a graft-table root streams through the V2
     // source — manifest-exact offsets plus the full files/bytes/ROWS

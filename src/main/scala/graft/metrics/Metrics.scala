@@ -93,13 +93,6 @@ object Metrics {
       * at any time while the stream runs. */
     def totals: Map[String, Long] = totalsMap.readOnlySnapshot().toMap
 
-    /** Current totals as a one-row-per-counter DataFrame snapshot (the
-      * in-process queryable view; JMX is the out-of-process scrape). */
-    def totalsDf(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      import spark.implicits._
-      totals.toSeq.sortBy(_._1).toDF("counter", "value")
-    }
-
     private[metrics] def countersJson: String =
       totals.toSeq.sortBy(_._1)
         .map { case (k, v) => s"${'"'}$k${'"'}:$v" }.mkString("{", ",", "}")

@@ -231,7 +231,7 @@ final class GraftV2Table(root: String, tableSchema: StructType)
         // honor time travel: an as-of read's aggregate must fold the
         // manifests of THAT snapshot, not the latest
         val asOf = Option(options.get("version")).map(_.toLong).getOrElse(table.version)
-        // rows > 0: a row-less file (empty clusterBy range partition) has
+        // rows > 0: a row-less file (an empty batch's schema-only file) has
         // no footer stats and contributes nothing to any aggregate — it
         // must not disqualify the metadata answer
         val fs = table.manifestsUpTo(asOf).flatMap(table.manifestFiles)
@@ -306,14 +306,7 @@ final class GraftV2Table(root: String, tableSchema: StructType)
         Option(options.get("maxBytesPerTrigger")).map(_.toLong),
         Option(options.get("maxRowsPerTrigger")).map(_.toLong),
         pushed.toSeq,
-        // layout columns for storage-partitioned reads: explicit option
-        // wins, else the layout the sink declared on the table
-        Option(options.get("layout")) match {
-          case Some(l) => l.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
-          case None =>
-            val t = new GraftTable(root)
-            if (t.layout.nonEmpty) t.layout else t.partCols
-        },
+        new GraftTable(root).partCols,
         Option(options.get("version")).map(_.toLong))
     }
 }
@@ -347,7 +340,7 @@ final class GraftScan(root: String, schema: StructType,
                       maxBytesPerTrigger: Option[Long],
                       maxRowsPerTrigger: Option[Long],
                       filters: Seq[Filter],
-                      layout: Seq[String] = Nil,
+                      keyCols: Seq[String],
                       asOfVersion: Option[Long] = None)
     extends Scan with SupportsReportStatistics with SupportsReportPartitioning
     with SupportsRuntimeFiltering {
@@ -375,7 +368,7 @@ final class GraftScan(root: String, schema: StructType,
   private val snapshotVersion: Long =
     asOfVersion.getOrElse(new GraftTable(root).version)
 
-  // rows > 0: an empty range partition writes a row-less file whose footer
+  // rows > 0: an empty batch writes a row-less file whose footer
   // has no stats — planning it adds a no-op task and (worse) withdraws the
   // storage-partitioned single-value claim for the whole scan
   private def liveFiles(table: GraftTable): Seq[FileInfo] =
@@ -400,18 +393,18 @@ final class GraftScan(root: String, schema: StructType,
     }
   }
 
-  // ---- storage-partitioned reads over the clusterBy layout -----------
-  // A value-clustered table's files are each single-valued on the layout
-  // columns; when the manifests PROVE that (min == max and an exact ZERO
-  // null count — parquet bounds never cover nulls — for every selected
-  // file), the scan reports KeyGroupedPartitioning and Spark plans
+  // ---- storage-partitioned reads over the partition columns ----------
+  // A directory-partitioned table's files are each single-valued on its
+  // partition columns; when the manifests PROVE that (min == max and an
+  // exact ZERO null count — parquet bounds never cover nulls — for every
+  // selected file), the scan reports KeyGroupedPartitioning and Spark plans
   // groupBy/join on those keys WITHOUT a shuffle (enable
   // spark.sql.sources.v2.bucketing.enabled; Spark groups same-key files
-  // into one partition). Any non-conforming file — pre-layout history,
+  // into one partition). Any non-conforming file — pre-partitioning history,
   // missing stats, unsupported type — degrades the whole scan to unknown
   // partitioning: a plain scan, never a wrong answer.
 
-  /** Typed Catalyst partition-key value for one layout column, or None if
+  /** Typed Catalyst partition-key value for one key column, or None if
     * this file cannot prove single-valuedness for it. */
   private def keyValue(fi: FileInfo, colName: String, dt: DataType): Option[Any] =
     fi.stats.get(colName).filter(s => s.nulls == 0L && s.min == s.max).flatMap { s =>
@@ -432,25 +425,25 @@ final class GraftScan(root: String, schema: StructType,
       } catch { case _: NumberFormatException => None }
     }
 
-  private def layoutTypes: Option[Seq[DataType]] =
-    if (layout.isEmpty) None
+  private def keyTypes: Option[Seq[DataType]] =
+    if (keyCols.isEmpty) None
     else {
       val byName = schema.fields.map(f => f.name -> f.dataType).toMap
-      val ts = layout.map(byName.get)
+      val ts = keyCols.map(byName.get)
       if (ts.forall(_.isDefined)) Some(ts.map(_.get)) else None
     }
 
   private def fileKey(fi: FileInfo, types: Seq[DataType]): Option[Array[Any]] = {
-    val vs = layout.zip(types).map { case (c, t) => keyValue(fi, c, t) }
+    val vs = keyCols.zip(types).map { case (c, t) => keyValue(fi, c, t) }
     if (vs.forall(_.isDefined)) Some(vs.map(_.get).toArray) else None
   }
 
   override def outputPartitioning(): Partitioning = {
     val fs = liveFiles(new GraftTable(root))
-    layoutTypes.filter(ts => fs.nonEmpty && fs.forall(fileKey(_, ts).isDefined)) match {
+    keyTypes.filter(ts => fs.nonEmpty && fs.forall(fileKey(_, ts).isDefined)) match {
       case Some(_) =>
         new KeyGroupedPartitioning(
-          layout.map(c => Expressions.identity(c): org.apache.spark.sql.connector.expressions.Expression).toArray,
+          keyCols.map(c => Expressions.identity(c): org.apache.spark.sql.connector.expressions.Expression).toArray,
           fs.size)
       case None => new UnknownPartitioning(fs.size)
     }
@@ -460,7 +453,7 @@ final class GraftScan(root: String, schema: StructType,
     private val table = new GraftTable(root)
     override def planInputPartitions(): Array[InputPartition] = {
       val fs = liveFiles(table)
-      layoutTypes.filter(ts => fs.nonEmpty && fs.forall(fileKey(_, ts).isDefined)) match {
+      keyTypes.filter(ts => fs.nonEmpty && fs.forall(fileKey(_, ts).isDefined)) match {
         case Some(ts) =>
           fs.map(fi => GraftKeyedInputPartition(fi.path, fi.rows, fileKey(fi, ts).get, fi.pv)
             : InputPartition).toArray
@@ -633,8 +626,8 @@ case class GraftInputPartition(path: String, rows: Long,
                                pv: Map[String, Option[String]] = Map.empty)
     extends InputPartition
 
-/** A file provably single-valued on the scan's layout columns; `key`
-  * holds the Catalyst-internal values in layout order. */
+/** A file provably single-valued on the scan's key columns; `key`
+  * holds the Catalyst-internal values in key-column order. */
 case class GraftKeyedInputPartition(path: String, rows: Long, key: Array[Any],
                                     pv: Map[String, Option[String]] = Map.empty)
     extends InputPartition with HasPartitionKey {

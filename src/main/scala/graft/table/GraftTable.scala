@@ -243,19 +243,6 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         s"pointer swap refused publishing v${v + 1} of $root: another " +
           "writer advanced the table (the table is single-writer)")
 
-  /** Declared cluster-layout columns (see [[ExactlyOnceSink]] `clusterBy`):
-    * a hint that data files are value-clustered on these columns. Purely
-    * advisory — correctness never depends on it (readers re-check per-file
-    * single-valuedness from manifest stats before exploiting it). */
-  def layout: Seq[String] =
-    if (!Files.exists(p("LAYOUT"))) Nil
-    else new String(Files.readAllBytes(p("LAYOUT")), StandardCharsets.UTF_8)
-      .trim.split(",").toSeq.filter(_.nonEmpty)
-
-  def setLayout(cols: Seq[String]): Unit = synchronized {
-    if (layout != cols) writeAtomic(p("LAYOUT"), cols.mkString(","))
-  }
-
   /** Table schema from metadata (written at every commit). Authoritative
     * for partition-layout tables, whose data files do NOT contain the
     * partition columns — inferring from a file would lose them. */
@@ -266,9 +253,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       .asInstanceOf[org.apache.spark.sql.types.StructType])
 
   /** Declared directory-partition columns (recorded by the first
-    * partitioned commit): unlike the advisory [[layout]], these are
-    * guaranteed single-valued per file and low-cardinality by
-    * construction — compact() preserves this layout on rewrite. */
+    * partitioned commit): single-valued per file and low-cardinality by
+    * construction — compact() preserves this layout on rewrite, and
+    * storage-partitioned reads key on them. */
   def partCols: Seq[String] =
     if (!Files.exists(p("PARTCOLS"))) Nil
     else new String(Files.readAllBytes(p("PARTCOLS")), StandardCharsets.UTF_8)
@@ -1536,7 +1523,8 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       val candRows = cands.map(_.rows).sum
       var affectedOf: Long => Long = identity
       // persisted only when the transform needs TWO passes (update counts
-      // matches, then writes — the z-order two-pass cache pattern);
+      // matches, then writes — in foreachBatch-style plans every action
+      // recomputes the source);
       // delete's single write pass must not pay full candidate-set
       // caching on the 100 TB takedown path. Released after the write.
       val tableSchema = schemaOf
@@ -1584,126 +1572,20 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
   * _lineage_row) — the (batch, record, result) analog of the reference's
   * order-preserving splice (processor.go:137-256): the pipeline is map-only
   * (no shuffle), so partition-local row order IS source file order, and
-  * `ORDER BY` the triple reconstructs the replay order deterministically.
-  *
-  * `clusterBy` is the partition-layout lever (SURVEY §7.2): rows are
-  * RANGE-partitioned + sorted on the given columns before the write, so
-  * each data file covers a narrow value range and the manifest's min/max
-  * stats make equality/range predicates on those columns prune to few
-  * files — Spark-first "hidden partitioning": the layout lives in the
-  * data + stats (the column stays IN the files, so reads need no
-  * path-derived columns), not in directory names. `clusterFiles` pins the
-  * file count (AQE otherwise sizes — and may coalesce — the ranges).
-  * Note: clusterBy introduces one shuffle per micro-batch; leave it empty
-  * for strictly map-only sinks (lineage row order is per-FILE after
-  * clustering, not source order). */
-/** Z-order clustering: interleave the bit patterns of two normalized
-  * dimensions so rows close in EITHER dimension land in the same files —
-  * per-file min/max stats then prune filters on either column alone
-  * (single-column range clustering only prunes its leading column).
-  * Pure column algebra (shift/and/or bit spreading), whole-stage
-  * codegen'd; normalization is per-batch min/max (one tiny agg job),
-  * 16 bits per dimension. */
-object Zorder {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions._
-
-  /** Spread the low 16 bits of `x` to even bit positions (classic
-    * morton-code magic numbers, as column ops). */
-  private def spread(x: Column): Column = {
-    val a = (x.bitwiseOR(shiftleft(x, 8))).bitwiseAND(lit(0x00FF00FFL))
-    val b = (a.bitwiseOR(shiftleft(a, 4))).bitwiseAND(lit(0x0F0F0F0FL))
-    val c = (b.bitwiseOR(shiftleft(b, 2))).bitwiseAND(lit(0x33333333L))
-    (c.bitwiseOR(shiftleft(c, 1))).bitwiseAND(lit(0x55555555L))
-  }
-
-  /** 32-bit morton code of two 16-bit normalized dimensions. */
-  def interleave(a16: Column, b16: Column): Column =
-    spread(a16).bitwiseOR(shiftleft(spread(b16), 1))
-
-  /** Normalize a numeric/timestamp column to [0, 65535] given batch
-    * bounds. Nulls and every non-finite case (NaN value, NaN/zero/
-    * infinite span) collapse to 0, and clamping happens in DOUBLE space
-    * BEFORE the long cast — under Spark 4's default ANSI mode a
-    * CAST(NaN/∞ AS BIGINT) throws and would wedge the stream on one bad
-    * row; clamped finite doubles always cast safely. */
-  def normalize16(c: Column, min: Column, max: Column): Column = {
-    val cd = c.cast("double")
-    val span = max.cast("double") - min.cast("double")
-    val frac = (cd - min.cast("double")) / span * 65535D
-    when(c.isNull || isnan(cd) || isnan(span) || span <= 0D || isnan(frac), 0D)
-      .otherwise(least(greatest(frac, lit(0D)), lit(65535D)))
-      .cast("long")
-  }
-
-  private[table] val ZCol = "_graft_zorder"
-
-  /** df with a [[ZCol]] morton column over two dimensions, normalized by
-    * the batch's own min/max. */
-  def withZ(df: DataFrame, dims: (String, String)): DataFrame = {
-    val (a, b) = dims
-    require(!df.columns.contains(ZCol),
-      s"column name $ZCol is reserved by the z-order writer")
-    val r = df.agg(min(col(a)).as("a0"), max(col(a)).as("a1"),
-      min(col(b)).as("b0"), max(col(b)).as("b1")).head()
-    def l(i: Int): Column = lit(r.get(i))
-    df.withColumn(ZCol, interleave(normalize16(col(a), l(0), l(1)),
-      normalize16(col(b), l(2), l(3))))
-  }
-}
-
+  * `ORDER BY` the triple reconstructs the replay order deterministically. */
 final class ExactlyOnceSink(val table: GraftTable,
-                            metrics: Long => Map[String, Long] = _ => Map.empty,
                             lineage: Boolean = false,
-                            clusterBy: Seq[String] = Nil,
-                            clusterFiles: Option[Int] = None,
-                            partitionBy: Seq[String] = Nil,
-                            zorderBy: Option[(String, String)] = None) {
-  // advertise the layout so readers can discover it (storage-partitioned
-  // scans); stats-verified at read time, so a pre-layout history is safe.
-  // partitionBy wins: its files are single-valued BY CONSTRUCTION (one
-  // directory per value), while clusterBy purity depends on range
-  // boundaries landing between values. (zorderBy is a pruning layout,
-  // not a key layout — z-neighbor files are multi-valued by design.)
-  require(zorderBy.isEmpty || clusterBy.isEmpty,
-    "zorderBy and clusterBy are mutually exclusive — one write order per file")
-  if (partitionBy.nonEmpty) table.setLayout(partitionBy)
-  else if (clusterBy.nonEmpty) table.setLayout(clusterBy)
-
+                            partitionBy: Seq[String] = Nil) {
   def write(df: DataFrame, batchId: Long): Unit = {
-    // z-order needs a bounds agg BEFORE the write; in foreachBatch every
-    // action recomputes the batch plan, so cache it for the two passes
-    val src = if (zorderBy.isDefined) df.persist() else df
-    try {
-      val clustered = zorderBy match {
-        case Some(dims) =>
-          // morton-order range clustering: each file covers a small 2-D
-          // tile, so per-file min/max stats are narrow in BOTH dimensions —
-          // equality/range filters on EITHER column prune (a single-column
-          // range layout only prunes its own column)
-          val z = Zorder.withZ(src, dims)
-          (clusterFiles match {
-            case Some(n) => z.repartitionByRange(n, col(Zorder.ZCol))
-            case None => z.repartitionByRange(col(Zorder.ZCol))
-          }).sortWithinPartitions(col(Zorder.ZCol)).drop(Zorder.ZCol)
-        case None if clusterBy.isEmpty => src
-        case None =>
-          val cols = clusterBy.map(col)
-          (clusterFiles match {
-            case Some(n) => src.repartitionByRange(n, cols: _*)
-            case None => src.repartitionByRange(cols: _*)
-          }).sortWithinPartitions(cols: _*)
-      }
-      val out =
-        if (!lineage) clustered
-        else clustered
-          .withColumn("_lineage_batch", lit(batchId))
-          .withColumn("_lineage_part", spark_partition_id().cast("long"))
-          // low 33 bits of monotonically_increasing_id = per-partition counter
-          .withColumn("_lineage_row",
-            monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-      table.commit(out, batchId, metrics(batchId), partitionBy)
-      ()
-    } finally if (zorderBy.isDefined) { src.unpersist(); () }
+    val out =
+      if (!lineage) df
+      else df
+        .withColumn("_lineage_batch", lit(batchId))
+        .withColumn("_lineage_part", spark_partition_id().cast("long"))
+        // low 33 bits of monotonically_increasing_id = per-partition counter
+        .withColumn("_lineage_row",
+          monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
+    table.commit(out, batchId, partitionBy = partitionBy)
+    ()
   }
 }

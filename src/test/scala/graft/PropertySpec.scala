@@ -166,26 +166,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("morton interleave is injective over the full 16-bit domain (column algebra)") {
-    val s = spark
-    import org.apache.spark.sql.functions._
-    import s.implicits._
-    // 20k deterministic pseudo-random pairs + the corner cases: the
-    // column-expression bit spreading must map distinct (a, b) to
-    // distinct z (a miscoded magic mask silently merges tiles, which
-    // degrades z-pruning without failing any result)
-    val pairs = ((0 until 20000).map { i =>
-      (((i * 48271) & 0xFFFF).toLong, ((i * 16807 + 11) & 0xFFFF).toLong)
-    } ++ Seq((0L, 0L), (65535L, 65535L), (0L, 65535L), (65535L, 0L))).distinct
-    val df = pairs.toDF("a", "b")
-      .withColumn("z", graft.table.Zorder.interleave(col("a"), col("b")))
-    val rows = df.collect()
-    assert(rows.map(_.getLong(2)).distinct.length == pairs.length,
-      "interleave collided: distinct (a,b) pairs mapped to the same z")
-    assert(rows.forall(r => r.getLong(2) >= 0L && r.getLong(2) < (1L << 32)),
-      "morton code left the 32-bit range")
-  }
-
   test("event key: substring kernel equals the split-based definition for any id") {
     val s = spark
     import org.apache.spark.sql.functions._

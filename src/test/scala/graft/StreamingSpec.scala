@@ -1267,70 +1267,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.sameElements(expected))
   }
 
-  test("filelog source: JSON-lines stream with tolerant decode feeds the pipeline") {
-    val s = spark
-    import s.implicits._
-    val dir = Files.createTempDirectory("filelog").toString
-    def line(id: String, tr: String, t: String, eid: Long) =
-      s"""{"clip_id":"$id","sr_hz":16000,"dur_ms":500,"codec":"wav","transcript":"$tr","event_time":"$t","tenant_id":7,"event_id":$eid}"""
-    Files.write(java.nio.file.Paths.get(dir, "a.jsonl"), java.util.Arrays.asList(
-      line("clip-t0-s0-0000000001", "access denied", "2025-09-19T10:00:00Z", 1),
-      "this is not json at all",
-      line("clip-t0-s0-0000000002", "login ok", "2025-09-19T10:01:00Z", 2),
-      """{"valid_json": "but no clip_id"}""",
-      line("clip-t0-s0-0000000003", "nothing matches", "2025-09-19T10:02:00Z", 3)))
-    // batch form decodes 3 of 5 lines
-    assert(graft.sources.FileLog.readClipsBatch(s, dir).count() == 3)
-    // streaming form drives the full event pipeline end-to-end
-    val q = graft.sources.FileLog.readClips(s, dir)
-      .transform(df => StreamingJobs.events(s, df))
-      .writeStream.outputMode("append").format("memory").queryName("filelog_out").start()
-    try {
-      q.processAllAvailable()
-      // 2 transcript matches (access denied + login ok); malformed skipped
-      assert(s.sql("SELECT * FROM filelog_out").count() == 2)
-    } finally q.stop()
-  }
-
-  test("push source (OTLP analog): socket push → WAL → tolerant decode → pipeline") {
-    val s = spark
-    val wal = Files.createTempDirectory("push_wal").toString
-    def line(id: String, tr: String, t: String, eid: Long) =
-      s"""{"clip_id":"$id","sr_hz":16000,"dur_ms":500,"codec":"wav","transcript":"$tr","event_time":"$t","tenant_id":7,"event_id":$eid}"""
-    val q = graft.sources.PushLog.readClips(s, wal)
-      .transform(df => StreamingJobs.events(s, df))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt_push").toString)
-      .format("memory").queryName("push_out").start()
-    try {
-      // the receiver starts with the stream's initialization — poll for it
-      val d0 = System.nanoTime() + 10_000_000_000L
-      while (graft.sources.PushReceiver.boundPort(wal).isEmpty &&
-        System.nanoTime() < d0) Thread.sleep(20)
-      val port = graft.sources.PushReceiver.boundPort(wal).get
-      val sock = new java.net.Socket("127.0.0.1", port)
-      val w = new java.io.PrintWriter(
-        new java.io.OutputStreamWriter(sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), true)
-      w.println(line("clip-t0-s0-0000000001", "access denied", "2025-09-19T10:00:00Z", 1))
-      w.println("this is not json at all")
-      w.println(line("clip-t0-s0-0000000002", "login ok", "2025-09-19T10:01:00Z", 2))
-      w.println("""{"valid_json": "but no clip_id"}""")
-      w.flush(); sock.close()
-      // durable receipt: wait until all 4 lines hit the WAL, then drain
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (graft.sources.PushReceiver.ensure(wal, 0).count < 4 &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-      assert(graft.sources.PushReceiver.ensure(wal, 0).count == 4, "push lines not persisted")
-      q.processAllAvailable()
-      // 2 events (access denied + login ok); junk pushes skipped, not fatal
-      assert(s.sql("SELECT * FROM push_out").count() == 2)
-      // durable-receipt replay: a batch re-read returns the same 4 raw lines
-      val raw = s.read.format(classOf[graft.sources.GraftPushProvider].getName)
-        .option("wal", wal).load()
-      assert(raw.count() == 4)
-    } finally { q.stop(); graft.sources.PushReceiver.stop(wal) }
-  }
-
   test("streaming fullPipeline (R2 union) is map-only streamable, matches batch") {
     val s = spark
     import s.implicits._
@@ -1403,160 +1339,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(r.getAs[Array[Byte]]("norm_bytes").length == 2 * n, r.toString)
       }
     } finally q.stop()
-  }
-
-  test("push WAL recovery truncates a trailing partial line; seek index serves offsets") {
-    val s = spark
-    val wal = Files.createTempDirectory("push_wal_rec").toString
-    // legacy single-file layout: recovery must adopt it as segment 0
-    val legacy = java.nio.file.Paths.get(wal, "push.wal")
-    val lines = (0 until 2500).map(i => s"""{"n":$i}""")
-    // simulate a crash mid-append: complete lines + a partial fragment
-    Files.write(legacy, (lines.mkString("\n") + "\n" + """{"partial""").getBytes("UTF-8"))
-    val rcv = graft.sources.PushReceiver.ensure(wal, 0)
-    try {
-      assert(rcv.count == 2500, "partial fragment must not count as a line")
-      val seg0 = java.nio.file.Paths.get(rcv.segmentList.head._2)
-      assert(!Files.exists(legacy) && seg0.getFileName.toString.endsWith(".wal"),
-        "legacy push.wal must migrate to the segmented layout")
-      assert(Files.readAllBytes(seg0).last == '\n'.toByte, "fragment must be truncated")
-      val raw = s.read.format(classOf[graft.sources.GraftPushProvider].getName)
-        .option("wal", wal).load()
-      assert(raw.count() == 2500)
-      // sparse index: a reader for a late range seeks, not re-reads from 0
-      val (path, pos, ln) = rcv.seekFor(2400)
-      assert(ln == 2048 && pos > 0, s"expected the 1024-line index point, got ($pos, $ln)")
-      val r = new graft.sources.PushPartitionReader(rcv.segmentList, 2400, 2500, path, pos, ln)
-      try {
-        var cnt = 0
-        while (r.next()) cnt += 1
-        assert(cnt == 100)
-      } finally r.close()
-    } finally graft.sources.PushReceiver.stop(wal)
-  }
-
-  test("push WAL rotation: segments roll at the byte budget; reads span the chain") {
-    val s = spark
-    val wal = Files.createTempDirectory("push_wal_rot").toString
-    // tiny budget: every ~2 lines starts a new segment
-    val rcv = graft.sources.PushReceiver.ensure(wal, 0, segmentBytes = 32L)
-    try {
-      val sock = new java.net.Socket("127.0.0.1", rcv.port)
-      val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), true)
-      (0 until 100).foreach(i => w.println(f"""{"n":$i%04d}"""))
-      w.flush(); sock.close()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (rcv.count < 100 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(rcv.count == 100)
-      val segs = rcv.segmentList
-      assert(segs.size > 10, s"expected many segments at a 32-byte budget, got ${segs.size}")
-      // offsets are global: a cross-segment read returns every line once
-      val raw = s.read.format(classOf[graft.sources.GraftPushProvider].getName)
-        .option("wal", wal).load().collect().map(_.getString(0)).sorted
-      assert(raw.length == 100 && raw.toSeq == (0 until 100).map(i => f"""{"n":$i%04d}"""))
-      // a seek into a sealed mid-chain segment lands at that segment's head
-      val (path, pos, ln) = rcv.seekFor(51)
-      assert(pos == 0L && ln <= 51 && path != segs.last._2)
-    } finally graft.sources.PushReceiver.stop(wal)
-  }
-
-  test("push WAL: concurrent connections interleave without loss, duplication, or tearing") {
-    val s = spark
-    val wal = Files.createTempDirectory("push_wal_conc").toString
-    // small segments force rotation to race the concurrent appends
-    val rcv = graft.sources.PushReceiver.ensure(wal, 0, segmentBytes = 256L)
-    try {
-      val nConns = 4
-      val perConn = 250
-      val threads = (0 until nConns).map { c =>
-        new Thread(() => {
-          val sock = new java.net.Socket("127.0.0.1", rcv.port)
-          val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-            sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), true)
-          (0 until perConn).foreach(i => w.println(f"""{"conn":$c,"n":$i%05d}"""))
-          w.flush(); sock.close()
-        }, s"push-conc-$c")
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      val deadline = System.nanoTime() + 15_000_000_000L
-      while (rcv.count < nConns * perConn && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(rcv.count == nConns * perConn)
-      // every line arrives exactly once and untorn (valid JSON, full set)
-      val raw = s.read.format(classOf[graft.sources.GraftPushProvider].getName)
-        .option("wal", wal).load().collect().map(_.getString(0))
-      assert(raw.length == nConns * perConn)
-      val parsed = raw.map { l =>
-        val m = """\{"conn":(\d+),"n":(\d{5})\}""".r
-        l match { case m(c, n) => (c.toInt, n.toInt) case _ => fail(s"torn line: $l") }
-      }
-      assert(parsed.toSet.size == nConns * perConn, "duplicated or lost lines")
-      assert(parsed.groupBy(_._1).forall { case (_, xs) => xs.map(_._2).sorted.toSeq == (0 until perConn) })
-    } finally graft.sources.PushReceiver.stop(wal)
-  }
-
-  test("push WAL segmented recovery scans only the active segment") {
-    val wal = Files.createTempDirectory("push_wal_segrec").toString
-    def seg(start: Long) = java.nio.file.Paths.get(wal, f"push.$start%020d.wal")
-    // two sealed segments + an active one with a partial trailing fragment
-    Files.write(seg(0), "a\nb\nc\n".getBytes("UTF-8"))
-    Files.write(seg(3), "d\ne\n".getBytes("UTF-8"))
-    Files.write(seg(5), "f\n{\"part".getBytes("UTF-8"))
-    val rcv = graft.sources.PushReceiver.ensure(wal, 0)
-    try {
-      assert(rcv.count == 6, s"3+2+1 complete lines, got ${rcv.count}")
-      assert(Files.readAllBytes(seg(5)).last == '\n'.toByte, "active-segment fragment truncated")
-      assert(Files.readAllBytes(seg(0)).length == 6, "sealed segments untouched by recovery")
-      val (p0, _, l0) = rcv.seekFor(1)
-      assert(p0 == seg(0).toString && l0 == 0)
-    } finally graft.sources.PushReceiver.stop(wal)
-  }
-
-  test("push WAL reclaim drops consumed segments; floor is enforced") {
-    val wal = Files.createTempDirectory("push_wal_reclaim").toString
-    def seg(start: Long) = java.nio.file.Paths.get(wal, f"push.$start%020d.wal")
-    Files.write(seg(0), "a\nb\nc\n".getBytes("UTF-8"))
-    Files.write(seg(3), "d\ne\n".getBytes("UTF-8"))
-    Files.write(seg(5), "f\n".getBytes("UTF-8"))
-    val rcv = graft.sources.PushReceiver.ensure(wal, 0)
-    try {
-      // reclaim below 4: only segment [0,3) is entirely consumed
-      assert(rcv.reclaim(4) == 1 && !Files.exists(seg(0)) && Files.exists(seg(3)))
-      assert(rcv.firstRetainedLine == 3)
-      // the active segment never drops, even when fully consumed
-      assert(rcv.reclaim(100) == 1 && Files.exists(seg(5)))
-      assert(rcv.firstRetainedLine == 5)
-      val e = intercept[IllegalArgumentException](rcv.seekFor(2))
-      assert(e.getMessage.contains("retained floor"))
-    } finally graft.sources.PushReceiver.stop(wal)
-  }
-
-  test("push reclaimOnCommit: checkpointed commits retire segments behind the stream") {
-    val s = spark
-    val wal = Files.createTempDirectory("push_wal_roc").toString
-    val q = graft.sources.PushLog.readLines(s, wal,
-      maxRowsPerTrigger = Some(10), segmentBytes = Some(64L), reclaimOnCommit = true)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", Files.createTempDirectory("ckpt_roc").toString)
-      .format("memory").queryName("roc_out").start()
-    try {
-      val d0 = System.nanoTime() + 10_000_000_000L
-      while (graft.sources.PushReceiver.boundPort(wal).isEmpty &&
-        System.nanoTime() < d0) Thread.sleep(20)
-      val rcv = graft.sources.PushReceiver.ensure(wal, 0)
-      val sock = new java.net.Socket("127.0.0.1", rcv.port)
-      val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, java.nio.charset.StandardCharsets.UTF_8), true)
-      (0 until 200).foreach(i => w.println(f"""{"n":$i%06d}"""))
-      w.flush(); sock.close()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (rcv.count < 200 && System.nanoTime() < deadline) Thread.sleep(20)
-      q.processAllAvailable()
-      assert(s.sql("SELECT * FROM roc_out").count() == 200, "all lines delivered once")
-      assert(rcv.firstRetainedLine > 0,
-        "committed micro-batches should have retired leading segments")
-      assert(rcv.segmentList.size < 10, s"retention should bound live segments")
-    } finally { q.stop(); graft.sources.PushReceiver.stop(wal) }
   }
 
   test("streaming dedup drops cross-batch duplicates within the watermark") {
@@ -1746,24 +1528,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(tsPruned.count() == 100)
     // a filter outside every range plans zero files
     assert(df.filter(col("id") > 10000L).rdd.getNumPartitions == 0)
-  }
-
-  test("clusterBy layout: value-clustered files prune equality predicates tightly") {
-    val s = spark
-    import s.implicits._
-    val t = new GraftTable(Files.createTempDirectory("graft_cluster").toString)
-    val sink = new ExactlyOnceSink(t, clusterBy = Seq("codec"), clusterFiles = Some(3))
-    // interleaved codecs: without clustering, every file spans all three
-    val df = (0 until 3000).map(i =>
-      (i.toLong, Seq("pcm_s16le", "wav", "opus-stub")(i % 3))).toDF("id", "codec")
-      .repartition(6) // scatter values across partitions first
-    sink.write(df, 0L)
-    val read = s.read.format(classOf[graft.table.GraftSourceProvider].getName).load(t.root)
-    val all = read.rdd.getNumPartitions
-    val wav = read.filter(col("codec") === "wav")
-    assert(wav.rdd.getNumPartitions < all,
-      s"clustered layout should prune codec='wav' below $all files")
-    assert(wav.count() == 1000)
   }
 
   test("partition layout: values round-trip batch, stream, time travel, compaction") {
@@ -1965,50 +1729,6 @@ class StreamingSpec extends AnyFunSuite {
     // the table remains fully readable from the rewrite, layout intact
     assert(t.read(s).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
     assert(t.dataFiles.forall(_.contains("codec=")))
-  }
-
-  test("z-order layout: files prune on EITHER dimension; range layout only on its own") {
-    val s = spark
-    import s.implicits._
-    def grid(n: Int) = (0 until n).map(i => (i.toLong, ((i * 7919L) % n))).toDF("x", "y")
-      .repartition(8)
-    def provider = classOf[graft.table.GraftSourceProvider].getName
-    // z-ordered table: 16 files ≈ 4×4 tiles of the (x, y) plane
-    val tz = new GraftTable(Files.createTempDirectory("graft_z").toString)
-    new ExactlyOnceSink(tz, clusterFiles = Some(16), zorderBy = Some(("x", "y")))
-      .write(grid(20000), 0L)
-    val rz = s.read.format(provider).load(tz.root)
-    val all = rz.rdd.getNumPartitions
-    val zx = rz.filter(col("x") < 1000L)
-    val zy = rz.filter(col("y") < 1000L)
-    assert(zx.rdd.getNumPartitions <= all / 2 && zy.rdd.getNumPartitions <= all / 2,
-      s"z-order should prune both dims: x=${zx.rdd.getNumPartitions} " +
-        s"y=${zy.rdd.getNumPartitions} of $all")
-    assert(zx.count() == 1000 && zy.count() == 1000)
-    // control: single-column range layout prunes x but NOT y
-    val tr = new GraftTable(Files.createTempDirectory("graft_r").toString)
-    new ExactlyOnceSink(tr, clusterBy = Seq("x"), clusterFiles = Some(16))
-      .write(grid(20000), 0L)
-    val rr = s.read.format(provider).load(tr.root)
-    val rAll = rr.rdd.getNumPartitions
-    assert(rr.filter(col("x") < 1000L).rdd.getNumPartitions <= rAll / 2)
-    assert(rr.filter(col("y") < 1000L).rdd.getNumPartitions == rAll,
-      "a range layout on x cannot prune y — the z-order contrast")
-  }
-
-  test("z-order survives NaN/Infinity rows under ANSI (no cast crash, rows kept)") {
-    val s = spark
-    import s.implicits._
-    val t = new GraftTable(Files.createTempDirectory("graft_z_nan").toString)
-    val df = Seq((1L, 1.0), (2L, Double.NaN), (3L, Double.PositiveInfinity),
-      (4L, Double.NegativeInfinity), (5L, 2.0)).toDF("x", "y")
-    // max(y) = NaN under Spark ordering → the whole span is NaN; every
-    // row must still write (dimension collapses to 0, no ANSI cast error)
-    new ExactlyOnceSink(t, clusterFiles = Some(2), zorderBy = Some(("x", "y")))
-      .write(df, 0L)
-    assert(t.read(s).count() == 5)
-    val ys = t.read(s).collect().map(r => r.getDouble(1))
-    assert(ys.count(_.isNaN) == 1 && ys.count(_.isInfinite) == 2)
   }
 
   test("partition values with special characters round-trip the path encoding") {
