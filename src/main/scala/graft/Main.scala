@@ -267,22 +267,22 @@ object Main {
     }
     if (conf.job == "describe") {
       maintenance() {
-        // describe is read-only — the persisted BLOOM layout (if any) is
-        // what it reports; constructor params would never be consulted
+        // describe is read-only — it reports the current version's
+        // metadata; constructor params would never be consulted
         val table = new GraftTable(conf.output)
         val files = table.manifestsUpTo(table.version).flatMap(table.manifestFiles)
+        val meta = table.meta
         def arr(xs: Seq[String]) =
           xs.map(GraftTable.jsonString).mkString("[", ",", "]")
-        // a bloom-less table reports ndv as null, not the constructor
-        // default — nothing is persisted, so no concrete ndv exists
-        val (bloomCols, bloomNdv) = table.bloomLayout
-        val ndvJson = if (bloomCols.isEmpty) "null" else bloomNdv.toString
+        val bloomCols = meta.map(_.bloomFor).getOrElse(Nil)
+        // a bloom-less table reports ndv as null: it has no bloom layout
+        val ndvJson = meta.filter(_.bloomFor.nonEmpty).map(_.bloomNdv.toString).getOrElse("null")
         println(s"""{"job":"describe","version":${table.version},""" +
           s""""rows":${files.map(_.rows).sum},"files":${files.size},""" +
           s""""bytes":${files.map(_.bytes).sum},""" +
-          s""""partition_by":${arr(table.partCols)},""" +
+          s""""partition_by":${arr(meta.map(_.partitionBy).getOrElse(Nil))},""" +
           s""""bloom_for":${arr(bloomCols)},"bloom_ndv":$ndvJson,""" +
-          s""""schema":${table.schemaOf.map(_.json).getOrElse("null")}}""")
+          s""""schema":${meta.map(_.schema.json).getOrElse("null")}}""")
       }
       return
     }

@@ -9,7 +9,6 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -63,18 +62,13 @@ class GraftSourceProvider extends TableProvider {
     r
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val table = new GraftTable(rootOf(options))
-    // table metadata first: under a partition layout the data files do not
-    // contain the partition columns, so file-based inference would lose
-    // them (and their types)
-    table.schemaOf.getOrElse {
-      val files = table.dataFiles
-      require(files.nonEmpty,
-        s"cannot infer schema: no committed data files in ${rootOf(options)}")
-      SparkSession.active.read.parquet(files.head).schema
-    }
-  }
+  /** The current version's schema from its [[TableMeta]] — never a
+    * sampled footer: under a partition layout the data files do not
+    * contain the partition columns (or their types). */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    new GraftTable(rootOf(options)).meta.map(_.schema).getOrElse(
+      throw new IllegalArgumentException(
+        s"cannot infer schema: no committed version in ${rootOf(options)}"))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -306,7 +300,6 @@ final class GraftV2Table(root: String, tableSchema: StructType)
         Option(options.get("maxBytesPerTrigger")).map(_.toLong),
         Option(options.get("maxRowsPerTrigger")).map(_.toLong),
         pushed.toSeq,
-        new GraftTable(root).partCols,
         Option(options.get("version")).map(_.toLong))
     }
 }
@@ -340,7 +333,6 @@ final class GraftScan(root: String, schema: StructType,
                       maxBytesPerTrigger: Option[Long],
                       maxRowsPerTrigger: Option[Long],
                       filters: Seq[Filter],
-                      keyCols: Seq[String],
                       asOfVersion: Option[Long] = None)
     extends Scan with SupportsReportStatistics with SupportsReportPartitioning
     with SupportsRuntimeFiltering {
@@ -367,6 +359,10 @@ final class GraftScan(root: String, schema: StructType,
   // (plain partitions under a plan that expects HasPartitionKey).
   private val snapshotVersion: Long =
     asOfVersion.getOrElse(new GraftTable(root).version)
+
+  /** Storage-partitioning keys: the pinned snapshot's partition columns. */
+  private lazy val keyCols: Seq[String] =
+    new GraftTable(root).metaAt(snapshotVersion).map(_.partitionBy).getOrElse(Nil)
 
   // rows > 0: an empty batch writes a row-less file whose footer
   // has no stats — planning it adds a no-op task and (worse) withdraws the

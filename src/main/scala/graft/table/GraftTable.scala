@@ -44,15 +44,36 @@ final case class ManifestData(batchIds: Seq[Long], replacesUpTo: Option[Long],
   * new-key rows appended, in one commit. */
 final case class MergeStats(updated: Long, inserted: Long)
 
+/** One table version's metadata, published inside its snapshot node (the
+  * node's `"meta"` object) and therefore atomically with it: the union
+  * schema of every committed batch (deeply nullable — authoritative under
+  * a partition layout, whose data files lack the partition columns), the
+  * declared directory-partition columns, and the bloom-filter layout
+  * (`bloomNdv` = parquet `expected.ndv`; meaningful only when `bloomFor`
+  * is non-empty). A commit that aborts before its pointer swap leaves
+  * every reader on the previous version's metadata. */
+final case class TableMeta(schema: org.apache.spark.sql.types.StructType,
+                           partitionBy: Seq[String], bloomFor: Seq[String],
+                           bloomNdv: Long) {
+  private[table] def json: String = {
+    def arr(xs: Seq[String]) = xs.map(GraftTable.jsonString).mkString("[", ",", "]")
+    s"""{"schema":${schema.json},"partitionBy":${arr(partitionBy)},""" +
+      s""""bloomFor":${arr(bloomFor)},"bloomNdv":$bloomNdv}"""
+  }
+}
+
 /** From-scratch snapshot/manifest ACID table (Iceberg-style semantics, zero
   * Iceberg dependency — this sandbox ships Spark jars only; SURVEY §7.2).
   *
   * Layout under `root`:
   * {{{
   *   data/batch=<batchId>/part-*.parquet   column data, one dir per commit
-  *   manifests/manifest-<batchId>.json     file list + per-file lineage/rows/bytes/column-stats + metrics
-  *   snapshots/v<N>.json                   ordered list of committed manifests
+  *   manifests/manifest-<batchId>.json     file list + per-file lineage/rows/bytes/column-stats
+  *   snapshots/v<N>.json                   ordered list of committed manifests + the
+  *                                         version's [[TableMeta]] (schema, partition
+  *                                         columns, bloom layout)
   *   VERSION                               current snapshot number (atomic pointer)
+  *   LOCK                                  advisory single-writer lock
   * }}}
   *
   * Commit protocol (exactly-once, idempotent by batchId):
@@ -62,7 +83,8 @@ final case class MergeStats(updated: Long, inserted: Long)
   *      simply rewritten; readers never see it because only manifest-listed
   *      files are readable)
   *   3. write manifest via tmp + atomic rename
-  *   4. write snapshot v+1 and atomically swap VERSION
+  *   4. write snapshot v+1 (carrying v+1's metadata) and atomically swap
+  *      VERSION
   *
   * Readers resolve VERSION → snapshot → manifests → exact file list, so
   * crash leftovers in data/ are invisible. Renames are atomic on local and
@@ -97,10 +119,10 @@ object GraftTable {
 
 /** @param bloomFor columns to equip with per-file parquet bloom filters
   *   (written by every data-writing path, consulted by DML candidate
-  *   pruning — see [[BloomPrune]]). Persisted in the table (`BLOOM`
-  *   metadata file) on first write so maintenance jobs opened without
-  *   the parameter keep the layout; a persisted layout wins over the
-  *   constructor argument.
+  *   pruning — see [[BloomPrune]]). Adopted into the next version's
+  *   [[TableMeta]] by the first write of a table that has no layout yet,
+  *   so maintenance jobs opened without the parameter keep it; a table's
+  *   layout wins over the constructor argument.
   * @param bloomNdv expected distinct values per file for bloom sizing
   *   (parquet `expected.ndv`); ~1.2 MB/file/column at 1M, scales down
   *   linearly. */
@@ -112,30 +134,13 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
 
   /** Manifest paths are stored RELATIVE to the table root (and resolved
     * back on parse): a table directory can then be moved, copied, or
-    * mounted at a different prefix without orphaning its own data —
-    * absolute paths from pre-relativization manifests still resolve. */
+    * mounted at a different prefix without orphaning its own data. */
   private val rootAbs: Path = Paths.get(root).toAbsolutePath.normalize
   private def relativizePath(path: String): String = {
     val abs = Paths.get(path).toAbsolutePath.normalize
     if (abs.startsWith(rootAbs)) rootAbs.relativize(abs).toString else path
   }
-  private def resolvePath(stored: String): String =
-    if (Paths.get(stored).isAbsolute) stored
-    else if (stored.startsWith("data/")) {
-      // new-format relative paths always start with the data dir (commit
-      // and compact both write under root/data/). A table whose RELATIVE
-      // root is itself named "data" makes legacy cwd-relative paths look
-      // new-format — disambiguate by existence before trusting the root
-      // resolution (the probe is per manifest parse, then memoized)
-      val resolved = rootAbs.resolve(stored)
-      if (Files.exists(resolved) || !Files.exists(Paths.get(stored)))
-        resolved.toString
-      else stored
-    }
-    // legacy manifest from a table that was CREATED with a relative root:
-    // the stored path is cwd-relative and already includes the root
-    // segment — resolving it against the root would double the prefix
-    else stored
+  private def resolvePath(stored: String): String = rootAbs.resolve(stored).toString
 
   /** Cross-PROCESS single-writer guard: every mutating operation (commit,
     * compact, vacuum) holds an advisory file lock on root/LOCK for its
@@ -243,93 +248,99 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         s"pointer swap refused publishing v${v + 1} of $root: another " +
           "writer advanced the table (the table is single-writer)")
 
-  /** Table schema from metadata (written at every commit). Authoritative
-    * for partition-layout tables, whose data files do NOT contain the
-    * partition columns — inferring from a file would lose them. */
-  def schemaOf: Option[org.apache.spark.sql.types.StructType] =
-    if (!Files.exists(p("SCHEMA"))) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      new String(Files.readAllBytes(p("SCHEMA")), StandardCharsets.UTF_8))
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+  /** The current version's metadata (None on an empty table): served
+    * from the cached chain when it is current, else one node read. */
+  def meta: Option[TableMeta] = synchronized { metaOf(version) }
 
-  /** Declared directory-partition columns (recorded by the first
-    * partitioned commit): single-valued per file and low-cardinality by
-    * construction — compact() preserves this layout on rewrite, and
-    * storage-partitioned reads key on them. */
-  def partCols: Seq[String] =
-    if (!Files.exists(p("PARTCOLS"))) Nil
-    else new String(Files.readAllBytes(p("PARTCOLS")), StandardCharsets.UTF_8)
-      .trim.split(",").toSeq.filter(_.nonEmpty)
+  private def metaOf(v: Long): Option[TableMeta] =
+    if (v == chainVersion) Some(chainMeta) else metaAt(v)
 
-  /** Bloom-filter layout: `(columns, expected ndv)`. The persisted file
-    * (written by the first data write of a bloom-configured instance) is
-    * authoritative so every later writer — including a maintenance CLI
-    * that opened the table with defaults — keeps equipping rewrites with
-    * the same blooms; a rewrite that silently dropped them would turn a
-    * one-file takedown back into a full-table scan. */
-  def bloomLayout: (Seq[String], Long) =
-    if (!Files.exists(p("BLOOM"))) (bloomFor, bloomNdv)
-    else {
-      val lines = new String(Files.readAllBytes(p("BLOOM")), StandardCharsets.UTF_8)
-        .linesIterator.toSeq
-      val cols = lines.headOption.getOrElse("").trim.split(",").toSeq.filter(_.nonEmpty)
-      val ndv = lines.drop(1).headOption.map(_.trim).filter(_.nonEmpty)
-        .flatMap(_.toLongOption).getOrElse(bloomNdv)
-      (cols, ndv)
+  /** Metadata of version `v`: exactly one snapshot-node read, never a
+    * chain walk. */
+  private[table] def metaAt(v: Long): Option[TableMeta] =
+    if (v == 0) None else Some(parseMeta(v, readSnapshotNode(v)))
+
+  private def parseMeta(v: Long, node: com.fasterxml.jackson.databind.JsonNode): TableMeta = {
+    val m = node.get("meta")
+    if (m == null) throw new IllegalStateException(
+      s"snapshot v$v of $root carries no table metadata: it was written " +
+        "before versioned metadata and cannot be read")
+    TableMeta(org.apache.spark.sql.types.DataType.fromJson(m.get("schema").toString)
+      .asInstanceOf[org.apache.spark.sql.types.StructType],
+      texts(m, "partitionBy"), texts(m, "bloomFor"), m.get("bloomNdv").asLong())
+  }
+
+  private def texts(node: com.fasterxml.jackson.databind.JsonNode, key: String): Vector[String] =
+    node.get(key).elements().asScala.map(_.asText()).toVector
+
+  /** The metadata the version after `cur` publishes, worked out BEFORE
+    * any data is written so a rejected schema or bloom layout fails fast
+    * instead of after paying — and orphaning — a full batch's output:
+    *  - schema = [[mergeSchemas]] of the current schema and `incoming`,
+    *    stored deeply NULLABLE (schema evolution means older files read a
+    *    column as null, and a null under a non-nullable schema silently
+    *    corrupts to 0/"" downstream — Spark's file sources do the same);
+    *  - partition columns = the last non-empty `partitionBy`: compact()
+    *    and every DML rewrite preserve that layout, and storage-
+    *    partitioned reads key on it;
+    *  - bloom layout = the table's if it has one (so a maintenance CLI
+    *    opened with defaults keeps equipping rewrites with the same
+    *    blooms — dropping them would turn a one-file takedown back into a
+    *    full-table scan), otherwise this instance's validated `bloomFor`. */
+  private def nextMeta(cur: Option[TableMeta],
+                       incoming: org.apache.spark.sql.types.StructType,
+                       partitionBy: Seq[String]): TableMeta = {
+    val schema = mergeSchemas(cur.map(_.schema),
+      deepNullable(incoming).asInstanceOf[org.apache.spark.sql.types.StructType])
+    val curParts = cur.map(_.partitionBy).getOrElse(Nil)
+    val parts = if (partitionBy.nonEmpty) partitionBy else curParts
+    cur.filter(_.bloomFor.nonEmpty) match {
+      case Some(c) => TableMeta(schema, parts, c.bloomFor, c.bloomNdv)
+      case None =>
+        requireBloomCols(schema.fieldNames.toSet, partitionBy ++ curParts)
+        TableMeta(schema, parts, bloomFor, bloomNdv)
     }
+  }
+
+  /** Metadata of a rewrite (compaction/delete/update/merge) of version
+    * `v`: same schema and partition layout, bloom layout adopted as in
+    * [[nextMeta]] — so a bad `--bloom-for` fails at entry, BEFORE the
+    * candidate reads and rewrites run. */
+  private def rewriteMeta(v: Long): TableMeta = {
+    val cur = metaOf(v).get
+    nextMeta(Some(cur), cur.schema, Nil)
+  }
 
   /** The one data write (commit, compaction, every DML rewrite): `df` as
     * parquet under `dir`, partitioned by `partitionCols`, with the
-    * [[GraftTable.DictionaryBudget]] and the bloom layout — persisted here
-    * first, so a typo'd / case-mismatched / partition bloom column fails
-    * instead of becoming the authoritative layout that never produces a
-    * bloom (parquet matches option names case-sensitively; partition
-    * values live in paths) and silently reduces takedowns to stats-only
-    * pruning. */
-  private def writeParquet(df: DataFrame, partitionCols: Seq[String], dir: Path): Unit = {
-    if (bloomFor.nonEmpty && !Files.exists(p("BLOOM"))) {
-      // validate against the UNION of this batch's columns and the
-      // persisted table schema: a schema-evolving batch may legitimately
-      // omit an optional bloom column (it simply writes no bloom for it) —
-      // rejecting it here would kill a restarted ingest on a falsehood
-      requireBloomCols(
-        df.columns.toSet ++ schemaOf.map(_.fieldNames.toSet).getOrElse(Set.empty),
-        partitionCols)
-      writeAtomic(p("BLOOM"), s"${bloomFor.mkString(",")}\n$bloomNdv")
-    }
-    val (cols, ndv) = bloomLayout
+    * [[GraftTable.DictionaryBudget]] and `m`'s bloom layout. */
+  private def writeParquet(df: DataFrame, partitionCols: Seq[String], m: TableMeta,
+                           dir: Path): Unit = {
     val base = df.write.mode("overwrite")
       .option("parquet.dictionary.page.size", GraftTable.DictionaryBudget.toString)
-    val w = cols.foldLeft(base) { (acc, c) =>
+    val w = m.bloomFor.foldLeft(base) { (acc, c) =>
       acc.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
+        .option(s"parquet.bloom.filter.expected.ndv#$c", m.bloomNdv.toString)
     }
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(dir.toString)
   }
 
-  /** Reject a would-be-persisted bloom layout naming columns that can
-    * never produce a usable bloom: unknown (case-sensitive) names, or
-    * directory-partition columns (their values live in paths, not data
-    * files). A typo'd layout would otherwise be persisted as
-    * authoritative and every later takedown would silently fall back to
-    * stats-only pruning. */
+  /** Reject a would-be-adopted bloom layout naming columns that can never
+    * produce a usable bloom: unknown (case-sensitive — parquet matches
+    * option names that way) names, or directory-partition columns (their
+    * values live in paths, not data files). Checked against the MERGED
+    * schema: a schema-evolving batch may legitimately omit an optional
+    * bloom column (it simply writes no bloom for it). A typo'd layout
+    * would otherwise become authoritative and every later takedown would
+    * silently fall back to stats-only pruning. */
   private def requireBloomCols(known: Set[String], partitionCols: Seq[String]): Unit = {
     val bad = (bloomFor.filterNot(known.contains) ++
-      bloomFor.filter((partitionCols ++ partCols).contains)).distinct
+      bloomFor.filter(partitionCols.contains)).distinct
     require(bad.isEmpty,
       s"bloom column(s) ${bad.mkString(", ")} are not data columns " +
         "of this table (names are case-sensitive; partition columns live " +
         "in directory paths, not data files, and cannot carry blooms)")
   }
-
-  /** Early form of the same check for maintenance/DML entry points: a bad
-    * `--bloom-for` must fail BEFORE the candidate reads and rewrites run
-    * (update's two-pass transform can touch TBs before its write would
-    * finally throw). No-op when the layout is already persisted or the
-    * table has no schema yet. */
-  private def requireBloomColsEarly(): Unit =
-    if (bloomFor.nonEmpty && !Files.exists(p("BLOOM")))
-      schemaOf.foreach(s => requireBloomCols(s.fieldNames.toSet, Nil))
 
   // ---- metadata caches -----------------------------------------------
   // Manifests and snapshot nodes are immutable once written, so parsed
@@ -349,13 +360,19 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
   // uncached by design.
   private var chainVersion: Long = -1L
   private var chainSeq: Vector[String] = Vector.empty
+  private var chainMeta: TableMeta = _ // metadata of chainVersion
   private val manifestCache = scala.collection.concurrent.TrieMap.empty[String, ManifestData]
   private val addedCache = scala.collection.concurrent.TrieMap.empty[Long, Option[Seq[String]]]
 
   private def invalidateMetaCaches(): Unit = synchronized {
-    chainVersion = -1L; chainSeq = Vector.empty
+    chainVersion = -1L; chainSeq = Vector.empty; chainMeta = null
     manifestCache.clear(); addedCache.clear()
     idsCacheVersion = -1L
+  }
+
+  /** Record the chain of a version this instance resolved or published. */
+  private def cacheChain(v: Long, chain: Vector[String], m: TableMeta): Unit = {
+    chainVersion = v; chainSeq = chain; chainMeta = m
   }
 
   private def readSnapshotNode(v: Long): com.fasterxml.jackson.databind.JsonNode = {
@@ -363,48 +380,41 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     mapper.readTree(Files.readAllBytes(p("snapshots", s"v$v.json")))
   }
 
+  /** Apply one snapshot node to the chain below it: a delta node appends
+    * its `added`; a checkpoint/rewrite node carries the full list. */
+  private def applyNode(below: => Vector[String],
+                        node: com.fasterxml.jackson.databind.JsonNode): Vector[String] =
+    if (node.has("manifests")) texts(node, "manifests") else below ++ texts(node, "added")
+
   /** Cold chain resolution via the parent walk — bottoms out at the
     * nearest full checkpoint, so ≤ checkpointInterval metadata reads. */
-  private def resolveChain(v: Long): Vector[String] =
-    if (v == 0) Vector.empty
-    else {
-      val node = readSnapshotNode(v)
-      if (node.has("manifests"))
-        node.get("manifests").elements().asScala.map(_.asText()).toVector
-      else
-        resolveChain(node.get("parent").asLong()) ++
-          node.get("added").elements().asScala.map(_.asText()).toVector
-    }
+  private def resolveChain(node: com.fasterxml.jackson.databind.JsonNode): Vector[String] =
+    applyNode({
+      val parent = node.get("parent").asLong()
+      if (parent == 0) Vector.empty else resolveChain(readSnapshotNode(parent))
+    }, node)
 
   /** Resolve snapshot v's full manifest list. Snapshots are a parent+delta
     * chain ({"parent": v-1, "added": [m]}) with a full {"manifests": [...]}
     * checkpoint every `checkpointInterval` commits, so commit cost is O(1)
     * amortized instead of rewriting the whole O(commits) list every time
-    * (the round-1 flaw). The newest resolved chain is cached and advanced
-    * by per-version deltas: a long-lived streaming reader pays O(new
-    * versions) metadata reads per trigger, never a fresh chain walk. */
+    * (the round-1 flaw). The newest resolved chain is cached (with its
+    * version's metadata) and advanced by per-version deltas: a long-lived
+    * streaming reader pays O(new versions) metadata reads per trigger,
+    * never a fresh chain walk. */
   private def snapshotManifests(v: Long): Seq[String] = synchronized {
     if (v == 0) Nil
     else if (v == chainVersion) chainSeq
     else {
+      val top = readSnapshotNode(v)
       val res =
-        if (chainVersion >= 0 && v > chainVersion) {
+        if (chainVersion >= 0 && v > chainVersion)
           // incremental advance: apply each newer node to the cached chain
-          // (a delta node appends its `added`; a checkpoint/rewrite node
-          // carries the full list and resets it)
-          var base = chainSeq
-          var k = chainVersion + 1
-          while (k <= v) {
-            val node = readSnapshotNode(k)
-            if (node.has("manifests"))
-              base = node.get("manifests").elements().asScala.map(_.asText()).toVector
-            else
-              base = base ++ node.get("added").elements().asScala.map(_.asText()).toVector
-            k += 1
+          (chainVersion + 1 to v).foldLeft(chainSeq) { (base, k) =>
+            applyNode(base, if (k == v) top else readSnapshotNode(k))
           }
-          base
-        } else resolveChain(v)
-      if (v > chainVersion) { chainVersion = v; chainSeq = res }
+        else resolveChain(top)
+      if (v > chainVersion) cacheChain(v, res, parseMeta(v, top))
       res
     }
   }
@@ -421,13 +431,11 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         else Seq(node.get("batchId").asLong())
       val replaces = if (node.has("replacesUpTo")) Some(node.get("replacesUpTo").asLong()) else None
       val files = node.get("files").elements().asScala.map { f =>
-        val stats =
-          if (!f.has("stats")) Map.empty[String, ColStats]
-          else f.get("stats").properties().asScala.map { e =>
-            val s = e.getValue
-            e.getKey -> ColStats(s.get("t").asText(), s.get("min").asText(), s.get("max").asText(),
-              if (s.has("nulls")) s.get("nulls").asLong() else -1L)
-          }.toMap
+        val stats = f.get("stats").properties().asScala.map { e =>
+          val s = e.getValue
+          e.getKey -> ColStats(s.get("t").asText(), s.get("min").asText(), s.get("max").asText(),
+            s.get("nulls").asLong())
+        }.toMap
         val pv =
           if (!f.has("pv")) Map.empty[String, Option[String]]
           else f.get("pv").properties().asScala.map { e =>
@@ -435,9 +443,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
           }.toMap
         // manifests store table-root-RELATIVE paths (resolved to absolute
         // here) so a table directory can be moved/copied/re-mounted and
-        // stay readable — absolute paths from older manifests pass through
+        // stay readable
         FileInfo(resolvePath(f.get("path").asText()), f.get("rows").asLong(),
-          if (f.has("bytes")) f.get("bytes").asLong() else 0L, stats, pv)
+          f.get("bytes").asLong(), stats, pv)
       }.toSeq
       val mergeIds =
         if (node.has("mergeIds")) node.get("mergeIds").elements().asScala.map(_.asLong()).toSeq
@@ -485,8 +493,8 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
   def manifestsUpTo(v: Long): Seq[String] = synchronized { snapshotManifests(v) }
 
   /** Manifests ADDED by commit k (the V2 source's per-version delta):
-    * straight from the chain node's `added` list, or a set-diff at full
-    * checkpoints / rewrites. None ⇔ version k was expired by [[vacuum]]
+    * straight from the chain node's `added` list, which every node
+    * carries. None ⇔ version k was expired by [[vacuum]]
     * (snapshot file gone) — fresh readers skip it (its manifests are not
     * in the live chain), resumed readers behind it must fail loudly. */
   def manifestsAddedAt(k: Long): Option[Seq[String]] = synchronized {
@@ -505,21 +513,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
   private def manifestsAddedAtUncached(k: Long): Option[Seq[String]] = {
     GraftTable.metaReads.incrementAndGet()
     if (!Files.exists(p("snapshots", s"v$k.json"))) None
-    else {
-      val node = readSnapshotNode(k)
-      if (node.has("added"))
-        Some(node.get("added").elements().asScala.map(_.asText()).toSeq)
-      else if (k > 1 && !Files.exists(p("snapshots", s"v${k - 1}.json")))
-        // legacy full node with an expired predecessor: the delta is
-        // unrecoverable — returning the full chain here once re-delivered
-        // every earlier row to resumed readers. Treat as expired (loud
-        // fail for resumed readers, skip for fresh ones).
-        None
-      else {
-        val prev = if (k == 1) Set.empty[String] else snapshotManifests(k - 1).toSet
-        Some(snapshotManifests(k).filterNot(prev))
-      }
-    }
+    else Some(texts(readSnapshotNode(k), "added"))
   }
 
   /** (path, rows) for every data file of one manifest. */
@@ -541,38 +535,32 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
 
   /** Time travel: read the table's DATA exactly as of snapshot `v`
     * (snapshots are immutable manifest lists, so any historical version
-    * stays readable). Columns follow the table's CURRENT union schema —
-    * a column added after `v` appears as all-null (per-snapshot schema
-    * tracking is intentionally out of scope; rows are exact). Partition-
-    * layout snapshots route through the V2 source, which re-injects the
-    * directory-encoded partition columns. */
+    * stays readable). Columns follow the schema in the CURRENT version's
+    * [[TableMeta]] — a column added after `v` appears as all-null (reading
+    * `v` under its own schema is intentionally out of scope; rows are
+    * exact). Partition-layout snapshots route through the V2 source,
+    * which re-injects the directory-encoded partition columns. */
   def readVersion(spark: SparkSession, v: Long): DataFrame = {
-    require(v >= 0 && v <= version, s"snapshot v$v does not exist (latest: v$version)")
-    val (files, partitioned) = synchronized {
+    val (files, partitioned, schema) = synchronized {
+      val latest = version
+      require(v >= 0 && v <= latest, s"snapshot v$v does not exist (latest: v$latest)")
       val ms = snapshotManifests(v)
       (ms.flatMap(m => manifest(m).files.map(_.path)),
-        ms.exists(m => manifest(m).files.exists(_.pv.nonEmpty)))
+        ms.exists(m => manifest(m).files.exists(_.pv.nonEmpty)), metaOf(latest).map(_.schema))
     }
     // zero-file versions (reachable: a delete that matched every row
     // publishes an empty file list) must still carry the table SCHEMA —
     // merge/delete/update resolve key/predicate columns against this
     // frame, and a column-less emptyDataFrame turns an insert-only MERGE
-    // into an AnalysisException
-    if (files.isEmpty) schemaOf match {
-      case Some(sc) =>
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), sc)
-      case None => spark.emptyDataFrame
-    }
+    // into an AnalysisException. Only an empty table (v0) has none.
+    if (files.isEmpty) schema.fold(spark.emptyDataFrame)(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
     else if (partitioned)
       spark.read.format(classOf[GraftSourceProvider].getName)
         .option("version", v).load(root)
-    else schemaOf match {
-      // explicit table schema keeps the fast vectorized reader AND
-      // schema evolution: files missing a later-added column read it as
-      // null instead of the column vanishing from one sampled footer
-      case Some(sc) => spark.read.schema(sc).parquet(files: _*)
-      case None => spark.read.parquet(files: _*)
-    }
+    // explicit table schema keeps the fast vectorized reader AND schema
+    // evolution: files missing a later-added column read it as null
+    else spark.read.schema(schema.get).parquet(files: _*)
   }
 
   /** Incremental streaming read over the table (S1 analog: the unbounded
@@ -740,7 +728,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * The directory stream is CLOSED (Files.list holds an fd until closed;
     * leaking one per commit starves the driver over a long stream). */
   private def writtenFiles(dataDir: Path, hconf: org.apache.hadoop.conf.Configuration,
-                           schema: Option[org.apache.spark.sql.types.StructType] = None): Array[FileInfo] = {
+                           schema: org.apache.spark.sql.types.StructType): Array[FileInfo] = {
     val walk = Files.walk(dataDir)
     val paths =
       try walk.iterator().asScala
@@ -762,7 +750,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         val synthetic = pv.flatMap { case (c, ov) =>
           for {
             v <- ov
-            dt <- schema.flatMap(_.fields.find(_.name == c)).map(_.dataType)
+            dt <- schema.fields.find(_.name == c).map(_.dataType)
             st <- synthStats(dt, v)
           } yield c -> st
         }.toMap
@@ -830,9 +818,6 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       case other => other
     }
   }
-  private def deepNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-    deepNullable(s: org.apache.spark.sql.types.DataType)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   /** Table schema = union of every committed batch's columns (existing
     * order first, new columns appended). A same-name column with a
@@ -848,12 +833,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         val byName = incoming.fields.map(f => f.name -> f).toMap
         old.fields.foreach { f =>
           byName.get(f.name).foreach { n =>
-            // nullability-NORMALIZED comparison: SCHEMA files written
-            // before deep relaxation carry non-nullable nested metadata,
-            // and StructType equality is nullability-sensitive — an
-            // unnormalized check would wedge every future commit to such
-            // a table behind a bogus "type migration" error
-            require(deepNullable(n.dataType) == deepNullable(f.dataType),
+            // both sides are deeply nullable (nextMeta relaxes the
+            // incoming schema), so plain type equality is the check
+            require(n.dataType == f.dataType,
               s"column ${f.name}: committed type ${f.dataType.simpleString} != " +
                 s"incoming ${n.dataType.simpleString} — implicit type migration is not supported")
           }
@@ -874,11 +856,6 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     }
   }
 
-  /** Commit one micro-batch. Returns false (no-op) if batchId is already in
-    * the current snapshot. Lineage = per-output-file row counts.
-    * `partitionBy` writes a Hive-style directory layout (`col=value/`):
-    * the partition columns live in the path, not the files — manifests
-    * record them per file and readers re-inject them as constants. */
   /** Cumulative wall-nanos per commit phase (`write` = distributed parquet
     * write, `footers` = driver-side footer-stat harvest, `meta` = manifest
     * + snapshot + pointer publication). Cheap always-on instrumentation:
@@ -900,7 +877,12 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     }
   }
 
-  def commit(df: DataFrame, batchId: Long, metrics: Map[String, Long] = Map.empty,
+  /** Commit one micro-batch. Returns false (no-op) if batchId is already in
+    * the current snapshot. Lineage = per-output-file row counts.
+    * `partitionBy` writes a Hive-style directory layout (`col=value/`):
+    * the partition columns live in the path, not the files — manifests
+    * record them per file and readers re-inject them as constants. */
+  def commit(df: DataFrame, batchId: Long,
              partitionBy: Seq[String] = Nil): Boolean = synchronized { withProcessLock("commit") {
     if (committedBatchIds.contains(batchId)) return false
     partitionBy.foreach { c =>
@@ -910,52 +892,36 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         s"partition column $c: ${f.dataType.simpleString} does not round-trip " +
           "through a path segment (use string/int/long/short/byte/boolean/date)")
     }
-    // table-level schema: authoritative under a partition layout (files
-    // alone cannot reproduce the partition columns or their types).
+    val v = version
     // MERGED, not overwritten: a later batch missing an optional column
-    // must not make earlier committed data unqueryable. Stored deeply
-    // NULLABLE: schema evolution means older files read the column as
-    // null, and a null under a non-nullable schema silently corrupts to
-    // 0/"" downstream (same convention as Spark's own file sources).
-    // Merged (and thus type-validated) BEFORE the data write: a rejected
-    // schema must fail fast, not after paying — and orphaning — a full
-    // batch's parquet output on every retry.
-    val mergedSchema = mergeSchemas(schemaOf, deepNullable(df.schema))
+    // must not make earlier committed data unqueryable
+    val next = nextMeta(metaOf(v), df.schema, partitionBy)
 
     val dataDir = p("data", s"batch=$batchId")
     commitPhaseCount.incrementAndGet()
-    commitPhase("write") { writeParquet(df, partitionBy, dataDir) }
-    writeAtomic(p("SCHEMA"), mergedSchema.json)
-    if (partitionBy.nonEmpty && partCols != partitionBy)
-      writeAtomic(p("PARTCOLS"), partitionBy.mkString(","))
-
+    commitPhase("write") { writeParquet(df, partitionBy, next, dataDir) }
     val written = commitPhase("footers") {
-      writtenFiles(dataDir, df.sparkSession.sessionState.newHadoopConf(),
-        Some(df.schema))
+      writtenFiles(dataDir, df.sparkSession.sessionState.newHadoopConf(), next.schema)
     }
     val totalRows = written.map(_.rows).sum
-    val filesJson = filesJsonOf(written)
-    val metricsJson = metrics.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
     val manifestName = s"manifest-$batchId.json"
     commitPhase("meta") {
     writeAtomic(p("manifests", manifestName),
-      s"""{"batchId":$batchId,"rows":$totalRows,"files":$filesJson,"metrics":$metricsJson}""")
+      s"""{"batchId":$batchId,"rows":$totalRows,"files":${filesJsonOf(written)}}""")
 
-    val v = version
+    val chain = snapshotManifests(v).toVector :+ manifestName
     // every node carries its own "added" list: per-version deltas must stay
     // resolvable even after vacuum expires the predecessor a full
-    // checkpoint would otherwise be diffed against (a diff fallback with a
-    // missing predecessor silently returned the WHOLE chain as "added")
+    // checkpoint would otherwise be diffed against
     val snapshotJson =
-      if ((v + 1) % checkpointInterval == 0) {
+      if ((v + 1) % checkpointInterval == 0)
         // periodic full checkpoint bounds the resolution walk
-        val manifests = snapshotManifests(v) :+ manifestName
-        s"""{"version":${v + 1},"added":[${jsonStr(manifestName)}],"manifests":${manifests.map(jsonStr).mkString("[", ",", "]")}}"""
-      } else
-        s"""{"version":${v + 1},"parent":$v,"added":[${jsonStr(manifestName)}]}"""
+        s"""{"version":${v + 1},"added":[${jsonStr(manifestName)}],"manifests":${chain.map(jsonStr).mkString("[", ",", "]")},"meta":${next.json}}"""
+      else
+        s"""{"version":${v + 1},"parent":$v,"added":[${jsonStr(manifestName)}],"meta":${next.json}}"""
     publishVersioned(p("snapshots", s"v${v + 1}.json"), snapshotJson)
     advancePointer(v)
+    cacheChain(v + 1, chain, next)
     if (idsCacheVersion == v) { idsCache += batchId; idsCacheVersion = v + 1 }
     }
     true
@@ -974,7 +940,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
   def compact(spark: SparkSession, targetFiles: Int = 32): Long = synchronized { withProcessLock("compact") {
     val v = version
     require(v > 0, "nothing to compact")
-    requireBloomColsEarly()
+    val next = rewriteMeta(v)
     val batchIds = committedBatchIds
     val dataDir = p("data", s"rewrite=v$v")
     val src = readVersion(spark, v)
@@ -982,10 +948,11 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // rewrite dirs stay value-pure, so pruning / key-grouping survive.
     // `targetFiles` then applies per partition value (repartition by the
     // partition cols first would put each value in one writer task).
-    writeParquet(src.repartition(targetFiles), partCols.filter(src.columns.contains), dataDir)
+    writeParquet(src.repartition(targetFiles), next.partitionBy.filter(src.columns.contains),
+      next, dataDir)
 
-    val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), Some(src.schema))
-    publishRewrite("rewrite", v, written.toSeq, batchIds.toSeq, mergedBatchIds.toSeq, "{}")
+    val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), next.schema)
+    publishRewrite("rewrite", v, written.toSeq, batchIds.toSeq, mergedBatchIds.toSeq, "{}", next)
     if (idsCacheVersion == v) idsCacheVersion = v + 1 // same ids, new version
     v + 1
   } }
@@ -994,11 +961,12 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * replaces the whole chain at version `v`: the surviving file set, the
     * covered streaming batch ids, the CARRIED-FORWARD merge-id namespace
     * (replay protection must survive later rewrites), and per-op metrics;
-    * then the v+1 checkpoint snapshot and the pointer. The shared tail of
-    * every copy-on-write mutation, so protocol fixes land once. */
+    * then the v+1 checkpoint snapshot carrying `next` and the pointer. The
+    * shared tail of every copy-on-write mutation, so protocol fixes land
+    * once. */
   private def publishRewrite(tag: String, v: Long, files: Seq[FileInfo],
                              coveredIds: Seq[Long], mergeIds: Seq[Long],
-                             metricsJson: String): Unit = {
+                             metricsJson: String, next: TableMeta): Unit = {
     val all = files.toArray.sortBy((x: FileInfo) => x.path)
     val manifestName = s"manifest-$tag-v$v.json"
     val mergeIdsJson =
@@ -1007,8 +975,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     publishVersioned(p("manifests", manifestName),
       s"""{"replacesUpTo":$v,"batchIds":${coveredIds.sorted.mkString("[", ",", "]")},"rows":${all.map(_.rows).sum},"files":${filesJsonOf(all)},"metrics":$metricsJson$mergeIdsJson}""")
     publishVersioned(p("snapshots", s"v${v + 1}.json"),
-      s"""{"version":${v + 1},"added":[${jsonStr(manifestName)}],"manifests":[${jsonStr(manifestName)}]}""")
+      s"""{"version":${v + 1},"added":[${jsonStr(manifestName)}],"manifests":[${jsonStr(manifestName)}],"meta":${next.json}}""")
     advancePointer(v)
+    cacheChain(v + 1, Vector(manifestName), next)
   }
 
   /** Retention: expire snapshots older than `keepFromVersion` and delete
@@ -1039,7 +1008,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       (keepFromVersion + 1 to cur).flatMap(k => manifestsAddedAt(k).getOrElse(Nil))).toSet
     // compare in ABSOLUTE-NORMALIZED space on BOTH sides: resolved
     // manifest paths and walked paths may otherwise differ in prefix form
-    // (relative table root, legacy cwd-relative manifests, ../ segments)
+    // (relative table root, ../ segments)
     // and a spurious mismatch here DELETES live data
     def canon(s: String): String = Paths.get(s).toAbsolutePath.normalize.toString
     val keptFiles = keptManifests.flatMap(m => manifestFileRows(m).map(r => canon(r._1)))
@@ -1317,9 +1286,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     *     DISJOINT from streaming batchIds (a collision would make the
     *     exactly-once sink silently drop a future micro-batch) and
     *     carried forward by every later rewrite manifest — so a replayed
-    *     merge (foreachBatch retry, job restart) is a no-op. Note: the
-    *     field was introduced with this operator; no released table
-    *     predates it.
+    *     merge (foreachBatch retry, job restart) is a no-op.
     *
     * Contract: `keys` must be non-null and unique in the source (a key
     * matched by two source rows is an ambiguous update — refused, the
@@ -1338,14 +1305,14 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // Resolved once — reused for the replay check and the publish below.
     val priorMergeIds = mergedBatchIds
     if (priorMergeIds.contains(batchId)) return MergeStats(0L, 0L) // replay
-    val tableSchema = schemaOf.getOrElse(readVersion(spark, v).schema)
+    val next = rewriteMeta(v)
+    val tableSchema = next.schema
     val tCols = tableSchema.fields.map(_.name).toSet
     require(keys.forall(tCols.contains),
       s"merge keys not in table schema: ${keys.filterNot(tCols.contains).mkString(", ")}")
     val sCols = source.columns.toSet
     require(tCols == sCols,
       s"merge source columns must match the table's; missing=${(tCols -- sCols).mkString(",")} extra=${(sCols -- tCols).mkString(",")}")
-    requireBloomColsEarly()
     // align to declared types once; persisted — the source feeds the key
     // sanity aggregate, the prune envelope, the anti-join and the write
     val src0 = source.select(tableSchema.fields.toIndexedSeq
@@ -1396,7 +1363,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       val pruneFilters = DeletePruning.filtersFor(cond)
       val allFiles = snapshotManifests(v).flatMap(m => manifest(m).files)
       val (statCands, untouched0) = allFiles.partition(f => FilePrune.keep(f, pruneFilters))
-      val (cands, untouched) = bloomPruneFiles(spark, statCands, untouched0, pruneFilters)
+      val (cands, untouched) = bloomPruneFiles(spark, statCands, untouched0, pruneFilters, next)
 
       // `updated` counts MATCHED SOURCE KEYS (semi-join from the source
       // side), not matched target rows: an append-only table may hold
@@ -1407,7 +1374,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       val updated =
         if (cands.isEmpty) 0L
         else {
-          candDf = readCandidateFiles(spark, cands, Some(tableSchema)).persist()
+          candDf = readCandidateFiles(spark, cands, tableSchema).persist()
           src0.join(candDf.select(keys.map(col): _*), keys, "left_semi").count()
         }
       val inserted = srcCount - updated
@@ -1420,14 +1387,14 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
           .unionByName(src0)
 
       val dataDir = p("data", s"merge=v$v")
-      writeParquet(outRows, partCols.filter(outRows.columns.contains), dataDir)
-      val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), Some(tableSchema))
+      writeParquet(outRows, next.partitionBy.filter(outRows.columns.contains), next, dataDir)
+      val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), tableSchema)
       val (live, empty) = written.partition(_.rows > 0)
       empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
 
       publishRewrite("merge", v, untouched ++ live, committedBatchIds.toSeq,
         (priorMergeIds + batchId).toSeq,
-        s"""{"rows_updated":$updated,"rows_inserted":$inserted}""")
+        s"""{"rows_updated":$updated,"rows_inserted":$inserted}""", next)
       if (idsCacheVersion == v) idsCacheVersion = v + 1 // streaming ids unchanged
       MergeStats(updated, inserted)
     } finally {
@@ -1442,18 +1409,14 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * predicates/joins may reference them). Shared by the CoW rewrites
     * ([[delete]]/[[update]]) and [[merge]]. */
   private def readCandidateFiles(spark: SparkSession, cands: Seq[FileInfo],
-                                 tableSchema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+                                 tableSchema: org.apache.spark.sql.types.StructType): DataFrame = {
     val groups = cands.groupBy(_.pv).toSeq
     val dfs = groups.map { case (pv, fs) =>
-      val base = tableSchema match {
-        case Some(sc) =>
-          val fileSchema = org.apache.spark.sql.types.StructType(
-            sc.fields.filterNot(f => pv.contains(f.name)))
-          spark.read.schema(fileSchema).parquet(fs.map(_.path): _*)
-        case None => spark.read.parquet(fs.map(_.path): _*)
-      }
+      val fileSchema = org.apache.spark.sql.types.StructType(
+        tableSchema.fields.filterNot(f => pv.contains(f.name)))
+      val base = spark.read.schema(fileSchema).parquet(fs.map(_.path): _*)
       pv.toSeq.sortBy(_._1).foldLeft(base) { case (d, (c, ov)) =>
-        val dt = tableSchema.flatMap(_.fields.find(_.name == c)).map(_.dataType)
+        val dt = tableSchema.fields.find(_.name == c).map(_.dataType)
           .getOrElse(org.apache.spark.sql.types.StringType)
         d.withColumn(c, lit(ov.orNull).cast(dt))
       }
@@ -1478,9 +1441,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * bloom-pruned). */
   private def bloomPruneFiles(spark: SparkSession, statCands: Seq[FileInfo],
                               untouched: Seq[FileInfo],
-                              pruneFilters: Seq[org.apache.spark.sql.sources.Filter])
-      : (Seq[FileInfo], Seq[FileInfo]) = {
-    val bloomSet = bloomLayout._1.toSet
+                              pruneFilters: Seq[org.apache.spark.sql.sources.Filter],
+                              m: TableMeta): (Seq[FileInfo], Seq[FileInfo]) = {
+    val bloomSet = m.bloomFor.toSet
     if (bloomSet.isEmpty || statCands.isEmpty) return (statCands, untouched)
     val hconf = spark.sessionState.newHadoopConf()
     val keepFlags = parallelMetaMap(statCands.toArray)(f =>
@@ -1497,7 +1460,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     synchronized { withProcessLock(tag) {
       val v = version
       require(v > 0, s"nothing to $tag")
-      requireBloomColsEarly()
+      val next = rewriteMeta(v)
       val batchIds = committedBatchIds
       val allFiles = snapshotManifests(v).flatMap(m => manifest(m).files)
 
@@ -1514,7 +1477,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       if (DeletePruning.neverMatches(cond)) return 0L
       val pruneFilters = DeletePruning.filtersFor(cond)
       val (statCands, untouched0) = allFiles.partition(f => FilePrune.keep(f, pruneFilters))
-      val (cands, untouched) = bloomPruneFiles(spark, statCands, untouched0, pruneFilters)
+      val (cands, untouched) = bloomPruneFiles(spark, statCands, untouched0, pruneFilters, next)
       // stats (+ blooms) prove no file can contain a match: nothing to
       // do, commit no version
       if (cands.isEmpty) return 0L
@@ -1527,8 +1490,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       // recomputes the source);
       // delete's single write pass must not pay full candidate-set
       // caching on the 100 TB takedown path. Released after the write.
-      val tableSchema = schemaOf
-      val unioned = readCandidateFiles(spark, cands, tableSchema)
+      val unioned = readCandidateFiles(spark, cands, next.schema)
       val candDf = if (persistCandidates) unioned.persist() else unioned
       val written = try {
         transform(candDf, candRows) match {
@@ -1538,9 +1500,8 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
             return affected
           case Right((outRows, affectedOf0)) =>
             affectedOf = affectedOf0
-            writeParquet(outRows, partCols.filter(outRows.columns.contains), dataDir)
-            writtenFiles(dataDir, spark.sessionState.newHadoopConf(),
-              tableSchema.orElse(Some(outRows.schema)))
+            writeParquet(outRows, next.partitionBy.filter(outRows.columns.contains), next, dataDir)
+            writtenFiles(dataDir, spark.sessionState.newHadoopConf(), next.schema)
         }
       } finally { if (persistCandidates) { candDf.unpersist(); () } }
       // empty outputs carry no rows — drop them from the manifest and
@@ -1557,7 +1518,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       }
 
       publishRewrite(tag, v, untouched ++ live, batchIds.toSeq, mergedBatchIds.toSeq,
-        s"""{"$metricName":$affected}""")
+        s"""{"$metricName":$affected}""", next)
       if (idsCacheVersion == v) idsCacheVersion = v + 1 // same ids, new version
       affected
     } }

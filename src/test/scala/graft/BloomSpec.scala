@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.table.GraftTable
@@ -98,9 +98,9 @@ class BloomSpec extends AnyFunSuite {
     t.commit((0 until 200).map(i => (4L * i, "a")).toDF("id", "v").coalesce(1), 0L)
     t.commit((0 until 200).map(i => (4L * i + 2, "b")).toDF("id", "v").coalesce(1), 1L)
     // a maintenance job opens the table WITHOUT the constructor param —
-    // the persisted BLOOM file must keep rewrites equipped
+    // the table's own bloom layout must keep rewrites equipped
     val t2 = new GraftTable(root)
-    assert(t2.bloomLayout == (Seq("id"), 1000L))
+    assert(t2.meta.map(m => (m.bloomFor, m.bloomNdv)).contains((Seq("id"), 1000L)))
     t2.compact(s, targetFiles = 1)
     val f = t2.dataFiles.head
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -172,15 +172,14 @@ class BloomSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val root = Files.createTempDirectory("graft_bloom_evo").toString
-    // table born bloom-less; SCHEMA records (id, v)
+    // table born bloom-less; its schema is (id, v)
     new GraftTable(root).commit(Seq((1L, "a")).toDF("id", "v").coalesce(1), 0L)
     // ingest restarted with --bloom-for id; the FIRST batch after restart
     // legitimately omits the optional id column — validation must accept
     // it against the table schema (the batch just writes no id bloom)
     val t = new GraftTable(root, bloomFor = Seq("id"), bloomNdv = 100L)
     t.commit(Seq("b").toDF("v").coalesce(1), 1L)
-    assert(Files.exists(Paths.get(root, "BLOOM")))
-    assert(t.bloomLayout == (Seq("id"), 100L))
+    assert(new GraftTable(root).meta.map(m => (m.bloomFor, m.bloomNdv)).contains((Seq("id"), 100L)))
     // a TRULY unknown column is still rejected (case-sensitive)
     val root2 = Files.createTempDirectory("graft_bloom_evo2").toString
     val bad = new GraftTable(root2, bloomFor = Seq("ID"), bloomNdv = 100L)
@@ -188,7 +187,10 @@ class BloomSpec extends AnyFunSuite {
       bad.commit(Seq((1L, "a")).toDF("id", "v").coalesce(1), 0L)
     }
     assert(e.getMessage.contains("ID"))
-    assert(!Files.exists(Paths.get(root2, "BLOOM")), "rejected layout must not persist")
+    assert(new GraftTable(root2).meta.isEmpty, "rejected layout must not persist")
+    val plain = new GraftTable(root2)
+    plain.commit(Seq((1L, "a")).toDF("id", "v").coalesce(1), 0L)
+    assert(plain.meta.exists(_.bloomFor.isEmpty), "rejected layout must not persist")
   }
 
   test("bad --bloom-for fails DML at entry, before any candidate work") {

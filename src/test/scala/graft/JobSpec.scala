@@ -195,7 +195,43 @@ class JobSpec extends AnyFunSuite {
     assert(dst.dataFiles.forall(_.contains("codec=")), "every file under a codec dir")
     assert(dst.read(s).filter(col("codec") === "wav").count() == 20)
     // the partition column survives the round trip with per-batch commits
-    assert(dst.partCols == Seq("codec"))
+    assert(new GraftTable(dstRoot).meta.map(_.partitionBy).contains(Seq("codec")))
+  }
+
+  /** `Main --job describe` on `root`: its one line of stdout, parsed. */
+  private def describe(root: String): com.fasterxml.jackson.databind.JsonNode = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Main.main(Array("--job", "describe", "--output", root)))
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(out.toString("UTF-8").trim)
+  }
+
+  test("Main --job describe reports the current version's metadata") {
+    val s = spark
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("tbl_describe").toString
+    val t = new GraftTable(root, bloomFor = Seq("id"), bloomNdv = 500L)
+    t.commit(Seq((1L, "a", "wav"), (2L, "b", "opus"), (3L, "c", "wav")).toDF("id", "v", "codec")
+      .coalesce(1), 0L, partitionBy = Seq("codec"))
+    val d = describe(root)
+    assert(d.fieldNames().asScala.toSeq == Seq("job", "version", "rows", "files", "bytes",
+      "partition_by", "bloom_for", "bloom_ndv", "schema"))
+    assert(d.get("job").asText() == "describe" && d.get("version").asLong() == 1L)
+    assert(d.get("rows").asLong() == 3L && d.get("files").asLong() == 2L) // one file per codec
+    val files = t.manifestsUpTo(1L).flatMap(t.manifestFiles)
+    assert(d.get("bytes").asLong() == files.map(_.bytes).sum && files.size == 2)
+    assert(d.get("partition_by").toString == """["codec"]""")
+    assert(d.get("bloom_for").toString == """["id"]""")
+    assert(d.get("bloom_ndv").asLong() == 500L)
+    val schema = org.apache.spark.sql.types.DataType.fromJson(d.get("schema").toString)
+    assert(schema == t.meta.get.schema)
+    assert(t.meta.get.schema.fieldNames.toSeq == Seq("id", "v", "codec"))
+
+    val plainRoot = Files.createTempDirectory("tbl_describe_plain").toString
+    new GraftTable(plainRoot).commit(Seq((1L, "a")).toDF("id", "v"), 0L)
+    val p = describe(plainRoot)
+    assert(p.get("bloom_ndv").isNull && p.get("bloom_for").toString == "[]")
+    assert(p.get("partition_by").toString == "[]" && p.get("rows").asLong() == 1L)
   }
 
   test("streaming source is manifest-gated: uncommitted data files invisible") {

@@ -186,7 +186,7 @@ class StreamingSpec extends AnyFunSuite {
     val t = new GraftTable(root)
     val df1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
     val df2 = Seq((3, "c")).toDF("id", "v")
-    assert(t.commit(df1, 0L, Map("outgoing" -> 2L)))
+    assert(t.commit(df1, 0L))
     assert(!t.commit(df2, 0L)) // replay of committed batch → no-op
     assert(t.commit(df2, 1L))
     assert(t.committedRows == 3)
@@ -1694,7 +1694,7 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     val t = new GraftTable(Files.createTempDirectory("graft_pin").toString)
     t.commit(Seq((1L, "a")).toDF("id", "v"), 0L)
-    val schema = t.schemaOf.get
+    val schema = t.meta.get.schema
     val v2 = new graft.table.GraftV2Table(t.root, schema)
     import scala.jdk.CollectionConverters._
     val scan = v2.newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
@@ -1827,7 +1827,7 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     val t = new GraftTable(Files.createTempDirectory("graft_evolve").toString)
     t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
-    // batch 1 adds a column; SCHEMA metadata now carries the widest schema
+    // batch 1 adds a column; the version's metadata now carries the widest schema
     t.commit(Seq((3L, "c", 9L)).toDF("id", "v", "extra"), 1L)
     val read = s.read.format(classOf[graft.table.GraftSourceProvider].getName).load(t.root)
     assert(read.columns.toSeq == Seq("id", "v", "extra"),
@@ -1841,8 +1841,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(t.read(s).filter(col("extra").isNotNull).count() == 1L)
     // a LATER batch missing the column must not shrink the table schema
     t.commit(Seq((4L, "d")).toDF("id", "v"), 2L)
-    assert(t.schemaOf.get.fieldNames.toSeq == Seq("id", "v", "extra"),
-      "SCHEMA is a union of committed columns, not the last batch's")
+    assert(new GraftTable(t.root).meta.get.schema.fieldNames.toSeq == Seq("id", "v", "extra"),
+      "the schema is a union of committed columns, not the last batch's")
     assert(t.read(s).count() == 4L)
     // an implicit type migration fails loudly instead of re-typing history
     val e = intercept[IllegalArgumentException](
