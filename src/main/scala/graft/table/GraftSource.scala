@@ -1,17 +1,17 @@
 package graft.table
 
 import java.util
-import scala.jdk.CollectionConverters._
+
+import scala.collection.concurrent.TrieMap
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, PrimitiveType}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -19,13 +19,22 @@ import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggr
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{And, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-/** DataSourceV2 connector over [[GraftTable]]: the real incremental change
-  * stream the round-1 hardlink `published/` directory stood in for.
+/** DataSourceV2 connector over [[GraftTable]]: batch reads (including
+  * every [[GraftTable.readVersion]]) and the incremental change stream.
+  * The table's log decides WHICH files a read sees; Spark's own parquet
+  * reader decodes them.
   *
   *  - **Offsets are snapshot versions** (the table's own commit counter), so
   *    progress tracking is exact and replay-stable — not filename-based.
@@ -43,6 +52,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *    per-file min/max — a `WHERE event_time > X` over a 100 TB table
   *    plans only the overlapping files. Pruning is conservative
   *    (file-level); every filter is still evaluated on rows by Spark.
+  *  - **Decoding** is Spark's vectorized parquet reader
+  *    ([[GraftReaderFactory]]): each manifest-listed file is one
+  *    `FilePartition`, its directory-encoded partition values ride in the
+  *    `PartitionedFile`, and columns a file lacks read as null.
+  *    `ParquetPartitionReaderFactory`, `FilePartition`, `PartitionedFile`
+  *    and `SerializableConfiguration` are Spark internals, pinned by the
+  *    Spark 4.1.2 jars the build compiles against (as `Pcm`'s Catalyst
+  *    codegen is).
   *
   * Reference analog: the change-stream source the reference consumes
   * (henrikrexed/securitylogeventprocessor ocb/config.yaml:10-22, the
@@ -51,12 +68,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Usage: `spark.readStream.format(classOf[GraftSourceProvider].getName)
   *   .option("maxFilesPerTrigger", 32).load(tableRoot)` — or simply
-  * [[GraftTable.readStream]].
+  * [[GraftTable.readStream]] / [[GraftTable.read]].
   */
 class GraftSourceProvider extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
 
-  private def rootOf(options: CaseInsensitiveStringMap): String = {
+  private def rootOf(options: util.Map[String, String]): String = {
     val r = options.get("path")
     require(r != null && r.nonEmpty, "graft-table source requires a table root path")
     r
@@ -70,9 +87,10 @@ class GraftSourceProvider extends TableProvider {
       throw new IllegalArgumentException(
         s"cannot infer schema: no committed version in ${rootOf(options)}"))
 
+  /** The table's one [[GraftTable]]: its scans and streams share it. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new GraftV2Table(properties.get("path"), schema)
+    new GraftV2Table(new GraftTable(rootOf(properties)), schema)
 }
 
 /** Stats-vs-filter overlap test: can a file whose column ranges are `stats`
@@ -181,11 +199,21 @@ object FilePrune {
 
   def keep(fi: FileInfo, filters: Seq[Filter]): Boolean =
     filters.forall(f => mightMatch(fi.stats, f))
+
+  /** Integer-family column types whose "long"-domain stats convert
+    * exactly to Catalyst values (timestamps are epoch micros, dates epoch
+    * days), with that conversion. */
+  private[table] val longStat: PartialFunction[DataType, String => Any] = {
+    case LongType | TimestampType | TimestampNTZType => v => java.lang.Long.valueOf(v.toLong)
+    case IntegerType | DateType => v => java.lang.Integer.valueOf(v.toInt)
+    case ShortType => v => java.lang.Short.valueOf(v.toShort)
+    case ByteType => v => java.lang.Byte.valueOf(v.toByte)
+  }
 }
 
-final class GraftV2Table(root: String, tableSchema: StructType)
+final class GraftV2Table(table: GraftTable, tableSchema: StructType)
     extends Table with SupportsRead {
-  override def name(): String = s"graft-table($root)"
+  override def name(): String = s"graft-table(${table.root})"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
@@ -221,7 +249,6 @@ final class GraftV2Table(root: String, tableSchema: StructType)
       // largest in Spark's min/max semantics).
       private def metadataAgg(agg: Aggregation): Option[(StructType, Array[Any])] = {
         if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty) return None
-        val table = new GraftTable(root)
         // honor time travel: an as-of read's aggregate must fold the
         // manifests of THAT snapshot, not the latest
         val asOf = Option(options.get("version")).map(_.toLong).getOrElse(table.version)
@@ -235,22 +262,9 @@ final class GraftV2Table(root: String, tableSchema: StructType)
             tableSchema.fields.find(_.name == r.fieldNames.head)
           case _ => None
         }
-        def exactLongFamily(dt: DataType): Boolean = dt match {
-          case LongType | IntegerType | ShortType | ByteType |
-               DateType | TimestampType | TimestampNTZType => true
-          case _ => false
-        }
-        // stat string → Catalyst value of the column's type
-        def lift(dt: DataType, v: String): Any = dt match {
-          case LongType | TimestampType | TimestampNTZType => java.lang.Long.valueOf(v.toLong)
-          case IntegerType | DateType => java.lang.Integer.valueOf(v.toInt)
-          case ShortType => java.lang.Short.valueOf(v.toShort)
-          case ByteType => java.lang.Byte.valueOf(v.toByte)
-          case _ => throw new IllegalStateException(s"unexpected $dt")
-        }
         def minMax(f: AggregateFunc, refs: Array[NamedReference], wantMax: Boolean):
             Option[(StructField, Any)] =
-          colOf(refs).filter(c => exactLongFamily(c.dataType)).flatMap { c =>
+          colOf(refs).filter(c => FilePrune.longStat.isDefinedAt(c.dataType)).flatMap { c =>
             val sts = fs.map(_.stats.get(c.name))
             if (fs.isEmpty) Some((StructField(f.toString, c.dataType), null))
             else if (sts.exists(s => s.isEmpty || s.get.typ != "long")) None
@@ -261,7 +275,7 @@ final class GraftV2Table(root: String, tableSchema: StructType)
               // inside its file's bounds — the fold is the exact answer
               val vals = sts.map(s => if (wantMax) s.get.max.toLong else s.get.min.toLong)
               val v = if (wantMax) vals.max else vals.min
-              Some((StructField(f.toString, c.dataType), lift(c.dataType, v.toString)))
+              Some((StructField(f.toString, c.dataType), FilePrune.longStat(c.dataType)(v.toString)))
             }
           }
         val resolved: Seq[Option[(StructField, Any)]] = agg.aggregateExpressions.toSeq.map {
@@ -291,11 +305,11 @@ final class GraftV2Table(root: String, tableSchema: StructType)
         aggPushed.isDefined
       }
       override def build(): Scan = aggPushed match {
-        case Some((aggSchema, row)) => new GraftAggScan(root, aggSchema, row)
+        case Some((aggSchema, row)) => new GraftAggScan(table.root, aggSchema, row)
         case None => buildScan()
       }
 
-      private def buildScan(): Scan = new GraftScan(root, required,
+      private def buildScan(): Scan = new GraftScan(table, required,
         Option(options.get("maxFilesPerTrigger")).map(_.toInt),
         Option(options.get("maxBytesPerTrigger")).map(_.toLong),
         Option(options.get("maxRowsPerTrigger")).map(_.toLong),
@@ -314,21 +328,13 @@ final class GraftAggScan(root: String, aggSchema: StructType, row: Array[Any])
     s"graft-table METADATA aggregate of $root: ${aggSchema.map(_.name).mkString(", ")}"
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      Array(GraftAggPartition(row))
+      Array(ConstantRows(row, 1L))
     override def createReaderFactory(): PartitionReaderFactory =
-      (partition: InputPartition) => new PartitionReader[InternalRow] {
-        private var done = false
-        override def next(): Boolean = if (done) false else { done = true; true }
-        override def get(): InternalRow =
-          new GenericInternalRow(partition.asInstanceOf[GraftAggPartition].values)
-        override def close(): Unit = ()
-      }
+      (partition: InputPartition) => partition.asInstanceOf[ConstantRows].rowReader
   }
 }
 
-case class GraftAggPartition(values: Array[Any]) extends InputPartition
-
-final class GraftScan(root: String, schema: StructType,
+final class GraftScan(table: GraftTable, schema: StructType,
                       maxFilesPerTrigger: Option[Int],
                       maxBytesPerTrigger: Option[Long],
                       maxRowsPerTrigger: Option[Long],
@@ -338,7 +344,7 @@ final class GraftScan(root: String, schema: StructType,
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = schema
   override def description(): String =
-    s"graft-table scan of $root, PushedFilters: [${filters.mkString(", ")}], " +
+    s"graft-table scan of ${table.root}, PushedFilters: [${filters.mkString(", ")}], " +
       s"ReadSchema: ${schema.map(_.name).mkString(",")}"
 
   // ---- runtime filtering (the V2 analog of dynamic partition pruning):
@@ -357,20 +363,25 @@ final class GraftScan(root: String, schema: StructType,
   // logical planning and execution would otherwise let execution-time
   // partitions contradict the KeyGroupedPartitioning claimed at plan time
   // (plain partitions under a plan that expects HasPartitionKey).
-  private val snapshotVersion: Long =
-    asOfVersion.getOrElse(new GraftTable(root).version)
+  private val snapshotVersion: Long = asOfVersion.getOrElse(table.version)
 
   /** Storage-partitioning keys: the pinned snapshot's partition columns. */
   private lazy val keyCols: Seq[String] =
-    new GraftTable(root).metaAt(snapshotVersion).map(_.partitionBy).getOrElse(Nil)
+    table.metaAt(snapshotVersion).map(_.partitionBy).getOrElse(Nil)
 
-  // rows > 0: an empty batch writes a row-less file whose footer
-  // has no stats — planning it adds a no-op task and (worse) withdraws the
-  // storage-partitioned single-value claim for the whole scan
-  private def liveFiles(table: GraftTable): Seq[FileInfo] =
+  /** The pinned snapshot's files after pushed-filter pruning, resolved
+    * once per scan. rows > 0: an empty batch writes a row-less file whose
+    * footer has no stats — planning it adds a no-op task and (worse)
+    * withdraws the storage-partitioned single-value claim for the whole
+    * scan. */
+  private lazy val pinnedFiles: Seq[FileInfo] =
     table.manifestsUpTo(snapshotVersion)
       .flatMap(table.manifestFiles)
-      .filter(fi => fi.rows > 0 && FilePrune.keep(fi, filters ++ runtimeFilters))
+      .filter(fi => fi.rows > 0 && FilePrune.keep(fi, filters))
+
+  /** [[pinnedFiles]] minus what the runtime filters prune. */
+  private def liveFiles: Seq[FileInfo] =
+    pinnedFiles.filter(FilePrune.keep(_, runtimeFilters))
 
   /** Post-pruning size/row estimate from manifest metadata — zero data
     * I/O. Catalyst's join planning sees it through the V2 relation, so a
@@ -379,8 +390,7 @@ final class GraftScan(root: String, schema: StructType,
     * (on-disk bytes × spark.sql.sources.fileCompressionFactor, applied by
     * the caller). */
   override def estimateStatistics(): Statistics = {
-    val table = new GraftTable(root)
-    val fs = liveFiles(table)
+    val fs = liveFiles
     val bytes = fs.map(_.bytes).sum
     val rows = fs.map(_.rows).sum
     new Statistics {
@@ -404,65 +414,47 @@ final class GraftScan(root: String, schema: StructType,
     * this file cannot prove single-valuedness for it. */
   private def keyValue(fi: FileInfo, colName: String, dt: DataType): Option[Any] =
     fi.stats.get(colName).filter(s => s.nulls == 0L && s.min == s.max).flatMap { s =>
-      try {
-        (s.typ, dt) match {
-          case ("string", StringType) => Some(UTF8String.fromString(s.min))
-          case ("long", LongType) => Some(java.lang.Long.valueOf(s.min.toLong))
-          case ("long", IntegerType) => Some(java.lang.Integer.valueOf(s.min.toInt))
-          case ("long", ShortType) => Some(java.lang.Short.valueOf(s.min.toShort))
-          case ("long", ByteType) => Some(java.lang.Byte.valueOf(s.min.toByte))
-          case ("long", TimestampType | TimestampNTZType) =>
-            Some(java.lang.Long.valueOf(s.min.toLong))
-          case ("long", DateType) => Some(java.lang.Integer.valueOf(s.min.toInt))
-          // doubles excluded: NaN/-0.0 equality diverges between stats
-          // order and Spark key grouping — never worth the risk
-          case _ => None
-        }
+      try (s.typ, dt) match {
+        case ("string", StringType) => Some(UTF8String.fromString(s.min))
+        case ("long", _) => FilePrune.longStat.lift(dt).map(_(s.min))
+        // doubles excluded: NaN/-0.0 equality diverges between stats
+        // order and Spark key grouping — never worth the risk
+        case _ => None
       } catch { case _: NumberFormatException => None }
     }
 
-  private def keyTypes: Option[Seq[DataType]] =
-    if (keyCols.isEmpty) None
+  /** Each file's key (Catalyst values in key-column order) when every
+    * file of `fs` proves one, else None. */
+  private def fileKeys(fs: Seq[FileInfo]): Option[Seq[Array[Any]]] = {
+    val types = keyCols.flatMap(c => schema.fields.find(_.name == c).map(_.dataType))
+    if (fs.isEmpty || keyCols.isEmpty || types.size < keyCols.size) None
     else {
-      val byName = schema.fields.map(f => f.name -> f.dataType).toMap
-      val ts = keyCols.map(byName.get)
-      if (ts.forall(_.isDefined)) Some(ts.map(_.get)) else None
+      val keys = fs.map(fi => keyCols.zip(types).map { case (c, t) => keyValue(fi, c, t) })
+      if (keys.forall(_.forall(_.isDefined))) Some(keys.map(_.map(_.get).toArray)) else None
     }
-
-  private def fileKey(fi: FileInfo, types: Seq[DataType]): Option[Array[Any]] = {
-    val vs = keyCols.zip(types).map { case (c, t) => keyValue(fi, c, t) }
-    if (vs.forall(_.isDefined)) Some(vs.map(_.get).toArray) else None
   }
 
   override def outputPartitioning(): Partitioning = {
-    val fs = liveFiles(new GraftTable(root))
-    keyTypes.filter(ts => fs.nonEmpty && fs.forall(fileKey(_, ts).isDefined)) match {
-      case Some(_) =>
-        new KeyGroupedPartitioning(
-          keyCols.map(c => Expressions.identity(c): org.apache.spark.sql.connector.expressions.Expression).toArray,
-          fs.size)
-      case None => new UnknownPartitioning(fs.size)
-    }
+    val fs = liveFiles
+    if (fileKeys(fs).isEmpty) new UnknownPartitioning(fs.size)
+    else new KeyGroupedPartitioning(
+      keyCols.map(c => Expressions.identity(c): org.apache.spark.sql.connector.expressions.Expression).toArray,
+      fs.size)
   }
 
   override def toBatch: Batch = new Batch {
-    private val table = new GraftTable(root)
     override def planInputPartitions(): Array[InputPartition] = {
-      val fs = liveFiles(table)
-      keyTypes.filter(ts => fs.nonEmpty && fs.forall(fileKey(_, ts).isDefined)) match {
-        case Some(ts) =>
-          fs.map(fi => GraftKeyedInputPartition(fi.path, fi.rows, fileKey(fi, ts).get, fi.pv)
-            : InputPartition).toArray
-        case None =>
-          fs.map(fi => GraftInputPartition(fi.path, fi.rows, fi.pv): InputPartition).toArray
-      }
+      val fs = liveFiles
+      val parts = fs.zipWithIndex.map { case (fi, i) => GraftReaderFactory.partition(i, fi, schema) }
+      fileKeys(fs).fold(parts)(_.zip(parts).map { case (k, p) => GraftKeyedInputPartition(p, k) })
+        .toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      new GraftReaderFactory(schema)
+      GraftReaderFactory(schema, filters ++ runtimeFilters)
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GraftMicroBatchStream(root, schema, maxFilesPerTrigger, maxBytesPerTrigger,
+    new GraftMicroBatchStream(table, schema, maxFilesPerTrigger, maxBytesPerTrigger,
       maxRowsPerTrigger, filters)
 }
 
@@ -471,14 +463,12 @@ case class GraftOffset(version: Long) extends Offset {
   override def json(): String = version.toString
 }
 
-final class GraftMicroBatchStream(root: String, schema: StructType,
+final class GraftMicroBatchStream(table: GraftTable, schema: StructType,
                                   maxFilesPerTrigger: Option[Int],
                                   maxBytesPerTrigger: Option[Long] = None,
                                   maxRowsPerTrigger: Option[Long] = None,
                                   filters: Seq[Filter] = Nil)
     extends MicroBatchStream with SupportsAdmissionControl {
-
-  private val table = new GraftTable(root)
 
   override def initialOffset(): Offset = GraftOffset(0L)
   override def deserializeOffset(json: String): Offset = GraftOffset(json.trim.toLong)
@@ -496,6 +486,14 @@ final class GraftMicroBatchStream(root: String, schema: StructType,
     }
   }
 
+  /** First version in (from, to] whose snapshot metadata still exists —
+    * earlier versions were expired by vacuum. For a fresh reader that
+    * version serves the full chain prefix (retention may have erased the
+    * per-version attribution of older manifests, but the manifests
+    * themselves are still in the live chain). */
+  private def firstLiveVersion(from: Long, to: Long): Long =
+    (from + 1 to to).find(k => table.manifestsAddedAt(k).isDefined).getOrElse(to + 1)
+
   /** Manifests that version k contributes to a reader whose stream started
     * at `from`, under compaction (REWRITE manifests, GraftTable.compact):
     *
@@ -506,26 +504,18 @@ final class GraftMicroBatchStream(root: String, schema: StructType,
     *    (data files are never deleted by compact), with every rewrite
     *    manifest skipped — its rows were already delivered at their
     *    original versions. Either way: no duplicates, no gaps. */
-  /** First version in (from, to] whose snapshot metadata still exists —
-    * earlier versions were expired by vacuum. For a fresh reader that
-    * version serves the full chain prefix (retention may have erased the
-    * per-version attribution of older manifests, but the manifests
-    * themselves are still in the live chain). */
-  private def firstLiveVersion(from: Long, to: Long): Long =
-    (from + 1 to to).find(k => table.manifestsAddedAt(k).isDefined).getOrElse(to + 1)
-
   private def readableManifests(k: Long, from: Long, chain: => Set[String],
                                 firstLive: => Long): Seq[String] =
     table.manifestsAddedAt(k) match {
       case None if from == 0L => Nil // expired by retention; backfilled at firstLive
       case None => throw new IllegalStateException(
-        s"stream resume offset $from predates retention at version $k of $root: " +
+        s"stream resume offset $from predates retention at version $k of ${table.root}: " +
           "restart from a fresh checkpoint (full backfill of the live chain)")
       case Some(added) =>
         if (from == 0L) {
           val ms = if (k == firstLive) table.manifestsUpTo(k) else added
           ms.filter(chain.contains)
-        } else added.filterNot(m => table.manifestRewriteInfo(m)._1)
+        } else added.filterNot(table.isRewrite)
     }
 
   /** Per-version file lists for the STEADY-STATE (from > 0) path, where
@@ -600,12 +590,12 @@ final class GraftMicroBatchStream(root: String, schema: StructType,
     lazy val firstLive = firstLiveVersion(from, to)
     (from + 1 to to)
       .flatMap(versionFiles(_, from, chain, firstLive))
-      .map(fi => GraftInputPartition(fi.path, fi.rows, fi.pv))
+      .zipWithIndex.map { case (fi, i) => GraftReaderFactory.partition(i, fi, schema) }
       .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(schema)
+    GraftReaderFactory(schema, filters)
 
   /** Offsets only advance: once the engine commits past a version its
     * cached file list can never be requested again — prune it. */
@@ -616,47 +606,168 @@ final class GraftMicroBatchStream(root: String, schema: StructType,
   override def stop(): Unit = ()
 }
 
-/** `pv` = directory-encoded partition values (absent from the data file;
-  * the reader re-injects them as constants). */
-case class GraftInputPartition(path: String, rows: Long,
-                               pv: Map[String, Option[String]] = Map.empty)
-    extends InputPartition
-
-/** A file provably single-valued on the scan's key columns; `key`
-  * holds the Catalyst-internal values in key-column order. */
-case class GraftKeyedInputPartition(path: String, rows: Long, key: Array[Any],
-                                    pv: Map[String, Option[String]] = Map.empty)
+/** A file provably single-valued on the scan's key columns: `part` is its
+  * scan unit, `key` the Catalyst-internal values in key-column order. */
+case class GraftKeyedInputPartition(part: InputPartition, key: Array[Any])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = new GenericInternalRow(key)
 }
 
-final class GraftReaderFactory(schema: StructType) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition match {
-      case g: GraftInputPartition => g
-      case k: GraftKeyedInputPartition => GraftInputPartition(k.path, k.rows, k.pv)
-    }
-    if (schema.isEmpty || schema.fields.forall(f => p.pv.contains(f.name)))
-      // zero-column projection (COUNT(*)) or every required column is a
-      // directory-encoded constant (e.g. groupBy on the partition column):
-      // the manifest row count is authoritative (the commit counted the
-      // rows) — emit constant rows without touching the data file at all
-      new PartitionReader[InternalRow] {
-        private var emitted = 0L
-        private val row = new GenericInternalRow(
-          schema.fields.map(f => PvInject.constant(f.dataType, p.pv(f.name))))
-        override def next(): Boolean = { emitted += 1; emitted <= p.rows }
-        override def get(): InternalRow = row
-        override def close(): Unit = ()
-      }
-    else new GraftPartitionReader(p.path, schema, p.pv)
+/** `rows` copies of one constant row, emitted without opening a data
+  * file: a metadata aggregate's one-row answer, or a manifest-listed file
+  * whose every read column is a directory-encoded constant (a zero-column
+  * read included) — the manifest row count is authoritative, the commit
+  * counted the rows. */
+case class ConstantRows(values: Array[Any], rows: Long) extends InputPartition {
+  def rowReader: PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private val row = new GenericInternalRow(values)
+    private var left = rows
+    override def next(): Boolean = { left -= 1; left >= 0 }
+    override def get(): InternalRow = row
+    override def close(): Unit = ()
   }
+
+  def batchReader(schema: StructType, capacity: Int): PartitionReader[ColumnarBatch] =
+    new PartitionReader[ColumnarBatch] {
+      private val row = new GenericInternalRow(values)
+      private val batch = new ColumnarBatch(schema.fields.indices.map { i =>
+        val v = new ConstantColumnVector(capacity, schema(i).dataType)
+        ColumnVectorUtils.populate(v, row, i)
+        v: ColumnVector
+      }.toArray)
+      private var left = rows
+      override def next(): Boolean = left > 0 && {
+        batch.setNumRows(math.min(left, capacity.toLong).toInt)
+        left -= batch.numRows
+        true
+      }
+      override def get(): ColumnarBatch = batch
+      override def close(): Unit = batch.close()
+    }
 }
 
-/** Typed Catalyst constants for directory-encoded partition values
-  * (commit validates partition columns against exactly this type set). */
-private[table] object PvInject {
-  def constant(dt: DataType, ov: Option[String]): Any = ov match {
+/** The V2 source's one decoder: Spark's `ParquetPartitionReaderFactory`
+  * (vectorized, column-pruned; columns a file lacks read as null; nested,
+  * INT96 and MILLIS columns natively). [[ConstantRows]] partitions are
+  * served without a file read.
+  *
+  * A file's directory-encoded partition columns are not stored in it, so
+  * the parquet factory is picked per file by which read columns it holds
+  * as partition values (a partitioned table may also list plain files
+  * that store those columns physically). Spark's factory emits the
+  * decoded columns, then the partition columns; this one permutes them
+  * back into `readSchema` order. Each factory's requested schema travels
+  * in its hadoop conf, so the factories are derived inside the task from
+  * the scan's one broadcast conf; there `SQLConf.get` is the session's
+  * conf, which Spark propagates to every task of a query. */
+final class GraftReaderFactory private (readSchema: StructType, filters: Seq[Filter],
+                                        hadoopConf: Broadcast[SerializableConfiguration])
+    extends PartitionReaderFactory {
+
+  /** Per partition-column set: Spark's factory, and for each `readSchema`
+    * column its position in that factory's output. */
+  @transient private lazy val factories =
+    TrieMap.empty[Seq[String], (ParquetPartitionReaderFactory, Array[Int])]
+
+  private def factory(partCols: Seq[String]): (ParquetPartitionReaderFactory, Array[Int]) =
+    factories.getOrElseUpdate(partCols, {
+      val (part, data) = readSchema.fields.partition(f => partCols.contains(f.name))
+      val dataSchema = StructType(data)
+      val conf = new Configuration(hadoopConf.value.value)
+      conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, dataSchema.json)
+      val order = (data ++ part).map(_.name)
+      val sqlConf = SQLConf.get
+      (ParquetPartitionReaderFactory(sqlConf, new LocalBroadcast(new SerializableConfiguration(conf)),
+        dataSchema, dataSchema, StructType(part),
+        // row-group pruning sees decoded columns only
+        filters.filter(_.references.forall(c => !partCols.contains(c))).toArray,
+        None, new ParquetOptions(Map.empty[String, String], sqlConf)),
+        readSchema.fieldNames.map(n => order.indexOf(n)))
+    })
+
+  private def factoryFor(f: FilePartition): (ParquetPartitionReaderFactory, Array[Int]) =
+    factory(readSchema.fieldNames.toSeq
+      .filter(f.files.head.otherConstantMetadataColumnValues.contains))
+
+  /** Spark's answer depends on the read types alone, so every partition of
+    * a scan (and its [[ConstantRows]]) agrees. */
+  override def supportColumnarReads(partition: InputPartition): Boolean =
+    factory(Nil)._1.supportColumnarReads(partition)
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case k: GraftKeyedInputPartition => createReader(k.part)
+      case c: ConstantRows => c.rowReader
+      case f: FilePartition =>
+        val (parquet, perm) = factoryFor(f)
+        val in = parquet.createReader(f)
+        new PartitionReader[InternalRow] {
+          private val out = ProjectingInternalRow(readSchema, perm.toIndexedSeq)
+          override def next(): Boolean = in.next()
+          override def get(): InternalRow = { out.project(in.get()); out }
+          override def close(): Unit = in.close()
+        }
+    }
+
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    partition match {
+      case k: GraftKeyedInputPartition => createColumnarReader(k.part)
+      case c: ConstantRows => c.batchReader(readSchema, SQLConf.get.parquetVectorizedReaderBatchSize)
+      case f: FilePartition =>
+        val (parquet, perm) = factoryFor(f)
+        val in = parquet.createColumnarReader(f)
+        new PartitionReader[ColumnarBatch] {
+          override def next(): Boolean = in.next()
+          override def get(): ColumnarBatch = {
+            val b = in.get()
+            new ColumnarBatch(perm.map(b.column), b.numRows)
+          }
+          override def close(): Unit = in.close()
+        }
+    }
+}
+
+object GraftReaderFactory {
+  /** Built on the driver: broadcasts a hadoop conf carrying the read flags
+    * Spark's own parquet scan sets. */
+  def apply(readSchema: StructType, filters: Seq[Filter]): GraftReaderFactory = {
+    val spark = SparkSession.active
+    val conf = spark.sessionState.conf
+    val hconf = spark.sessionState.newHadoopConf()
+    hconf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    hconf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, conf.sessionLocalTimeZone)
+    Seq(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> conf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> conf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> conf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> conf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> conf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> conf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+      .foreach { case (k, v) => hconf.setBoolean(k.key, v) }
+    new GraftReaderFactory(readSchema, filters,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hconf)))
+  }
+
+  /** One manifest-listed file as one scan unit (one file per partition,
+    * so task counts follow file counts). Read columns the file holds as
+    * directory-encoded partition values become its typed
+    * `partitionValues`, in `readSchema` order; the whole `pv` map rides as
+    * the file's constant metadata, which Spark's parquet factory ignores
+    * and [[GraftReaderFactory]] picks the decoder by. A file with nothing
+    * left to decode is [[ConstantRows]]. */
+  def partition(index: Int, fi: FileInfo, readSchema: StructType): InputPartition = {
+    val pvCols = readSchema.fields.filter(f => fi.pv.contains(f.name))
+    val values: Array[Any] = pvCols.map(f => pvConstant(f.dataType, fi.pv(f.name)))
+    if (pvCols.length == readSchema.length) ConstantRows(values, fi.rows)
+    else FilePartition(index, Array(PartitionedFile(new GenericInternalRow(values),
+      SparkPath.fromPathString(fi.path), 0L, fi.bytes, fileSize = fi.bytes,
+      otherConstantMetadataColumnValues = fi.pv.map { case (k, v) => k -> v.orNull })))
+  }
+
+  /** Typed Catalyst constant for a directory-encoded partition value
+    * (commit validates partition columns against exactly this type set). */
+  private def pvConstant(dt: DataType, ov: Option[String]): Any = ov match {
     case None => null
     case Some(v) => dt match {
       case StringType => UTF8String.fromString(v)
@@ -672,200 +783,11 @@ private[table] object PvInject {
   }
 }
 
-/** GroupReadSupport that projects down to the required column names at
-  * init time — a SINGLE footer read decides the projection (no separate
-  * pre-open of the file: per-file open latency is a dominant cost for
-  * many-small-file tables on remote storage). When none of the required
-  * names exist physically (possible only via schema evolution — the
-  * all-constants case never reaches the parquet reader), the narrowest
-  * single column is kept so row iteration still advances at minimal
-  * decode cost. */
-final class ProjectingGroupReadSupport(names: Set[String]) extends GroupReadSupport {
-  private def width(t: org.apache.parquet.schema.Type): Int =
-    if (!t.isPrimitive) Int.MaxValue
-    else t.asPrimitiveType().getPrimitiveTypeName match {
-      case PrimitiveType.PrimitiveTypeName.BOOLEAN => 1
-      case PrimitiveType.PrimitiveTypeName.INT32 |
-           PrimitiveType.PrimitiveTypeName.FLOAT => 4
-      case PrimitiveType.PrimitiveTypeName.INT64 |
-           PrimitiveType.PrimitiveTypeName.DOUBLE => 8
-      case PrimitiveType.PrimitiveTypeName.INT96 => 12
-      case _ => 1000 // binary / fixed-len: assume wide
-    }
-
-  override def init(configuration: Configuration,
-                    keyValueMetaData: util.Map[String, String],
-                    fileSchema: org.apache.parquet.schema.MessageType):
-      org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
-    val kept = fileSchema.getFields.asScala.filter(f => names.contains(f.getName))
-    val proj =
-      if (kept.size == fileSchema.getFieldCount) fileSchema
-      else if (kept.nonEmpty)
-        new org.apache.parquet.schema.MessageType(fileSchema.getName, kept.asJava)
-      else
-        new org.apache.parquet.schema.MessageType(fileSchema.getName,
-          util.Arrays.asList(fileSchema.getFields.asScala.minBy(width)))
-    new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(proj)
-  }
+/** A [[Broadcast]] over a value already in this JVM: how a parquet factory
+  * derived inside a task receives its own read conf. */
+private final class LocalBroadcast[T: ClassTag](v: T) extends Broadcast[T](-1L) {
+  override protected def getValue(): T = v
+  override protected def doUnpersist(blocking: Boolean): Unit = ()
+  override protected def doDestroy(blocking: Boolean): Unit = ()
 }
 
-/** Reads one manifest-listed parquet file into InternalRows via the public
-  * parquet-mr Group API. Supports primitive columns (string/long/int/
-  * double/float/boolean/binary/date/timestamp) plus Spark-written nested
-  * columns: array<...>, map<...,...>, struct<...> — recursively (the E3
-  * typed-attr bag is array<struct<...>>), so any event schema the sink can
-  * write round-trips through the table's own change stream. */
-final class GraftPartitionReader(path: String, schema: StructType,
-                                 pv: Map[String, Option[String]] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  // physical column projection decided inside the reader's own footer
-  // read (ProjectingGroupReadSupport): unprojected columns' pages are
-  // never read or decoded — a 2-column SELECT over a wide 100 TB table
-  // does 2 columns of I/O, and each file is opened exactly once.
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(
-        new ProjectingGroupReadSupport(schema.fields.map(_.name).toSet),
-        new org.apache.hadoop.fs.Path(path))
-      .withConf(new Configuration())
-      .build()
-
-  private var current: Group = _
-  // per-field converters, resolved lazily against the file schema of the
-  // first record (handles files whose column order differs from the table)
-  private var converters: Array[Group => Any] = _
-
-  private val JULIAN_EPOCH_DAY = 2440588L
-
-  private def int96ToMicros(b: Array[Byte]): Long = {
-    val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = bb.getLong(0)
-    val julianDay = bb.getInt(8).toLong
-    (julianDay - JULIAN_EPOCH_DAY) * 86400L * 1000000L + nanosOfDay / 1000L
-  }
-
-  /** (group, fieldIdx, repetitionIdx) → Catalyst value, for one PRIMITIVE
-    * parquet field. */
-  private def primGetter(prim: PrimitiveType, dt: DataType, name: String): (Group, Int, Int) => Any =
-    dt match {
-      case StringType => (g, i, r) => UTF8String.fromBytes(g.getBinary(i, r).getBytes)
-      case LongType => (g, i, r) => g.getLong(i, r)
-      case IntegerType => (g, i, r) => g.getInteger(i, r)
-      case DoubleType => (g, i, r) => g.getDouble(i, r)
-      case FloatType => (g, i, r) => g.getFloat(i, r)
-      case BooleanType => (g, i, r) => g.getBoolean(i, r)
-      case BinaryType => (g, i, r) => g.getBinary(i, r).getBytes
-      case DateType => (g, i, r) => g.getInteger(i, r)
-      case TimestampType | TimestampNTZType =>
-        if (prim.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT96)
-          (g, i, r) => int96ToMicros(g.getInt96(i, r).getBytes)
-        else {
-          val unit = prim.getLogicalTypeAnnotation match {
-            case t: TimestampLogicalTypeAnnotation => t.getUnit
-            case _ => LogicalTypeAnnotation.TimeUnit.MICROS
-          }
-          unit match {
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => (g, i, r) => g.getLong(i, r) * 1000L
-            case LogicalTypeAnnotation.TimeUnit.NANOS => (g, i, r) => g.getLong(i, r) / 1000L
-            case _ => (g, i, r) => g.getLong(i, r)
-          }
-        }
-      case other =>
-        throw new UnsupportedOperationException(
-          s"graft-table source: field $name has unsupported type $other")
-    }
-
-  /** Recursive converter for any supported Spark type against the matching
-    * parquet file type. Spark writes LIST as
-    * `group (LIST) { repeated group list { <element> } }` and MAP as
-    * `group (MAP) { repeated group key_value { key; value } }`. */
-  private def valueGetter(pt: org.apache.parquet.schema.Type, dt: DataType,
-                          name: String): (Group, Int, Int) => Any = dt match {
-    case ArrayType(et, _) =>
-      val repeated = pt.asGroupType().getType(0).asGroupType()
-      val elemGet = valueGetter(repeated.getType(0), et, s"$name.element")
-      (g, i, r) => {
-        val lg = g.getGroup(i, r)
-        val n = lg.getFieldRepetitionCount(0)
-        val arr = new Array[Any](n)
-        var j = 0
-        while (j < n) {
-          val holder = lg.getGroup(0, j)
-          arr(j) = if (holder.getFieldRepetitionCount(0) == 0) null else elemGet(holder, 0, 0)
-          j += 1
-        }
-        new GenericArrayData(arr)
-      }
-    case MapType(kt, vt, _) =>
-      val kv = pt.asGroupType().getType(0).asGroupType()
-      val kGet = valueGetter(kv.getType(0), kt, s"$name.key")
-      val vGet = valueGetter(kv.getType(1), vt, s"$name.value")
-      (g, i, r) => {
-        val mg = g.getGroup(i, r)
-        val n = mg.getFieldRepetitionCount(0)
-        val ks = new Array[Any](n)
-        val vs = new Array[Any](n)
-        var j = 0
-        while (j < n) {
-          val kvg = mg.getGroup(0, j)
-          ks(j) = kGet(kvg, 0, 0)
-          vs(j) = if (kvg.getFieldRepetitionCount(1) == 0) null else vGet(kvg, 1, 0)
-          j += 1
-        }
-        new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
-      }
-    case st: StructType =>
-      val gt = pt.asGroupType()
-      val fieldGets: Array[Option[(Int, (Group, Int, Int) => Any)]] = st.fields.map { f =>
-        if (!gt.containsField(f.name)) None
-        else {
-          val fi = gt.getFieldIndex(f.name)
-          Some((fi, valueGetter(gt.getType(fi), f.dataType, s"$name.${f.name}")))
-        }
-      }
-      (g, i, r) => {
-        val sg = g.getGroup(i, r)
-        val vals = new Array[Any](fieldGets.length)
-        var j = 0
-        while (j < fieldGets.length) {
-          vals(j) = fieldGets(j) match {
-            case Some((fi, get)) if sg.getFieldRepetitionCount(fi) > 0 => get(sg, fi, 0)
-            case _ => null
-          }
-          j += 1
-        }
-        new GenericInternalRow(vals)
-      }
-    case _ => primGetter(pt.asPrimitiveType(), dt, name)
-  }
-
-  private def buildConverters(fileType: GroupType): Array[Group => Any] =
-    schema.fields.map { f =>
-      if (!fileType.containsField(f.name)) {
-        // directory-encoded partition column → per-file constant;
-        // genuinely absent column (schema evolution) → null
-        val const = pv.get(f.name).map(PvInject.constant(f.dataType, _)).orNull
-        (_: Group) => const
-      }
-      else {
-        val idx = fileType.getFieldIndex(f.name)
-        val get = valueGetter(fileType.getType(idx), f.dataType, f.name)
-        (g: Group) => if (g.getFieldRepetitionCount(idx) == 0) null else get(g, idx, 0)
-      }
-    }
-
-  override def next(): Boolean = {
-    current = reader.read()
-    current != null
-  }
-
-  override def get(): InternalRow = {
-    if (converters == null) converters = buildConverters(current.getType)
-    val values = new Array[Any](converters.length)
-    var i = 0
-    while (i < converters.length) { values(i) = converters(i)(current); i += 1 }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = reader.close()
-}

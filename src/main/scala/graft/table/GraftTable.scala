@@ -3,7 +3,7 @@ package graft.table
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -11,11 +11,11 @@ import scala.jdk.CollectionConverters._
   * time. `typ` selects the comparison domain: "long" (int32/int64,
   * timestamps as epoch micros), "double" (float/double), "string" (UTF8
   * binary). min/max are canonical strings so manifest JSON stays
-  * precision-exact. */
-/** `nulls` = exact null count for the column in the file, or -1 when any
-  * chunk's footer left it unset (unknown). min/max never cover nulls, so
-  * consumers that need "every row is inside [min,max]" (e.g. the
-  * storage-partitioned single-value claim) must require nulls == 0. */
+  * precision-exact. `nulls` = exact null count for the column in the file,
+  * or -1 when any chunk's footer left it unset (unknown). min/max never
+  * cover nulls, so consumers that need "every row is inside [min,max]"
+  * (e.g. the storage-partitioned single-value claim) must require
+  * nulls == 0. */
 final case class ColStats(typ: String, min: String, max: String, nulls: Long = -1L)
 
 /** One manifest-listed data file: path, exact row count, on-disk bytes
@@ -482,10 +482,10 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     snapshotManifests(version).flatMap(m => manifest(m).mergeIds).toSet
   }
 
-  /** (isRewrite, replacesUpTo) for one manifest: a compaction manifest
-    * replaces every version ≤ replacesUpTo. */
-  def manifestRewriteInfo(name: String): (Boolean, Long) = synchronized {
-    manifest(name).replacesUpTo.map((true, _)).getOrElse((false, 0L))
+  /** Is this a rewrite (compaction/DML) manifest — one that replaces
+    * every version ≤ its `replacesUpTo`? */
+  def isRewrite(name: String): Boolean = synchronized {
+    manifest(name).replacesUpTo.isDefined
   }
 
   /** Ordered manifest names of snapshot `v` (manifest k-1 is the one added
@@ -501,24 +501,16 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     if (k <= 0) Some(Nil)
     else if (addedCache.contains(k)) addedCache(k)
     else {
-      val r = manifestsAddedAtUncached(k)
+      GraftTable.metaReads.incrementAndGet()
+      val r =
+        if (!Files.exists(p("snapshots", s"v$k.json"))) None
+        else Some(texts(readSnapshotNode(k), "added"))
       // cache Some (immutable while live) and None only for k inside the
       // committed range (= expired forever); a not-yet-committed k must
       // stay uncached or a later commit would be invisible
       if (r.isDefined || k <= version) addedCache.put(k, r)
       r
     }
-  }
-
-  private def manifestsAddedAtUncached(k: Long): Option[Seq[String]] = {
-    GraftTable.metaReads.incrementAndGet()
-    if (!Files.exists(p("snapshots", s"v$k.json"))) None
-    else Some(texts(readSnapshotNode(k), "added"))
-  }
-
-  /** (path, rows) for every data file of one manifest. */
-  def manifestFileRows(name: String): Seq[(String, Long)] = synchronized {
-    manifest(name).files.map(f => (f.path, f.rows))
   }
 
   /** Full [[FileInfo]] (rows + bytes + column stats) of one manifest. */
@@ -535,32 +527,20 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
 
   /** Time travel: read the table's DATA exactly as of snapshot `v`
     * (snapshots are immutable manifest lists, so any historical version
-    * stays readable). Columns follow the schema in the CURRENT version's
-    * [[TableMeta]] — a column added after `v` appears as all-null (reading
-    * `v` under its own schema is intentionally out of scope; rows are
-    * exact). Partition-layout snapshots route through the V2 source,
-    * which re-injects the directory-encoded partition columns. */
+    * stays readable) through the V2 source for every layout. Columns
+    * follow the schema in the CURRENT version's [[TableMeta]], also for a
+    * zero-file version — a column added after `v` appears as all-null
+    * (reading `v` under its own schema is intentionally out of scope; rows
+    * are exact). Only an empty table reads as a column-less frame. */
   def readVersion(spark: SparkSession, v: Long): DataFrame = {
-    val (files, partitioned, schema) = synchronized {
+    val schema = synchronized {
       val latest = version
       require(v >= 0 && v <= latest, s"snapshot v$v does not exist (latest: v$latest)")
-      val ms = snapshotManifests(v)
-      (ms.flatMap(m => manifest(m).files.map(_.path)),
-        ms.exists(m => manifest(m).files.exists(_.pv.nonEmpty)), metaOf(latest).map(_.schema))
+      metaOf(latest).map(_.schema)
     }
-    // zero-file versions (reachable: a delete that matched every row
-    // publishes an empty file list) must still carry the table SCHEMA —
-    // merge/delete/update resolve key/predicate columns against this
-    // frame, and a column-less emptyDataFrame turns an insert-only MERGE
-    // into an AnalysisException. Only an empty table (v0) has none.
-    if (files.isEmpty) schema.fold(spark.emptyDataFrame)(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
-    else if (partitioned)
+    schema.fold(spark.emptyDataFrame)(s =>
       spark.read.format(classOf[GraftSourceProvider].getName)
-        .option("version", v).load(root)
-    // explicit table schema keeps the fast vectorized reader AND schema
-    // evolution: files missing a later-added column read it as null
-    else spark.read.schema(schema.get).parquet(files: _*)
+        .schema(s).option("version", v).load(root))
   }
 
   /** Incremental streaming read over the table (S1 analog: the unbounded
@@ -980,6 +960,12 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     cacheChain(v + 1, Vector(manifestName), next)
   }
 
+  /** Data-file paths are compared in ABSOLUTE-NORMALIZED space on both
+    * sides: resolved manifest paths and walked paths may otherwise differ
+    * in prefix form (relative table root, ../ segments), and a spurious
+    * mismatch in [[vacuum]] or [[gcOrphans]] DELETES live data. */
+  private def canon(s: String): String = Paths.get(s).toAbsolutePath.normalize.toString
+
   /** Retention: expire snapshots older than `keepFromVersion` and delete
     * every data file and manifest no snapshot ≥ keepFromVersion references.
     * The retention CONTRACT (same as any snapshot table): time travel to
@@ -1006,12 +992,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // per kept version
     val keptManifests = (snapshotManifests(keepFromVersion) ++
       (keepFromVersion + 1 to cur).flatMap(k => manifestsAddedAt(k).getOrElse(Nil))).toSet
-    // compare in ABSOLUTE-NORMALIZED space on BOTH sides: resolved
-    // manifest paths and walked paths may otherwise differ in prefix form
-    // (relative table root, ../ segments)
-    // and a spurious mismatch here DELETES live data
-    def canon(s: String): String = Paths.get(s).toAbsolutePath.normalize.toString
-    val keptFiles = keptManifests.flatMap(m => manifestFileRows(m).map(r => canon(r._1)))
+    val keptFiles = keptManifests.flatMap(m => manifestFiles(m).map(f => canon(f.path)))
 
     var deleted = 0
     val dataRoot = p("data")
@@ -1087,12 +1068,12 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * version, and resumed readers are unaffected: only unreachable
     * objects go. Returns the number of objects removed. */
   def gcOrphans(olderThanMs: Long = 0L): Int =
-    synchronized { withProcessLock("vacuum") { gcOrphansLocked(olderThanMs)._1 } }
+    synchronized { withProcessLock("vacuum") { gcOrphansLocked(olderThanMs) } }
 
-  /** Returns (objects removed, of which .parquet data files). `walkData`
-    * false skips the data/ traversal — vacuum's retention pass has
-    * already swept unreferenced data files when it calls this. */
-  private def gcOrphansLocked(olderThanMs: Long, walkData: Boolean = true): (Int, Int) = {
+  /** Returns the number of objects removed. `walkData` false skips the
+    * data/ traversal — vacuum's retention pass has already swept
+    * unreferenced data files when it calls this. */
+  private def gcOrphansLocked(olderThanMs: Long, walkData: Boolean = true): Int = {
     val cur = version
     val snapName = "^v(\\d+)\\.json$".r // shared by the guard + removal passes
     // A MISSING pointer with snapshot nodes on disk means the VERSION
@@ -1121,12 +1102,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       try now - Files.getLastModifiedTime(f).toMillis >= olderThanMs
       catch { case _: java.io.IOException => false }
     var removed = 0
-    var removedData = 0
-    def rm(f: Path): Unit =
-      if (oldEnough(f) && Files.deleteIfExists(f)) {
-        removed += 1
-        if (f.getFileName.toString.endsWith(".parquet")) removedData += 1
-      }
+    def rm(f: Path): Unit = if (oldEnough(f) && Files.deleteIfExists(f)) removed += 1
     val snapDir = p("snapshots")
     if (Files.exists(snapDir)) {
       val ls = Files.list(snapDir)
@@ -1163,10 +1139,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // data files no surviving manifest lists (same absolute-normalized
     // comparison as vacuum — a prefix-form mismatch here deletes live data)
     if (walkData) {
-      def canon(s: String): String = Paths.get(s).toAbsolutePath.normalize.toString
       val keptFiles = referenced.toSet
         .filter(m => Files.exists(p("manifests", m)))
-        .flatMap((m: String) => manifestFileRows(m).map(r => canon(r._1)))
+        .flatMap((m: String) => manifestFiles(m).map(f => canon(f.path)))
       val dataRoot = p("data")
       if (Files.exists(dataRoot)) {
         val walk = Files.walk(dataRoot)
@@ -1177,7 +1152,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       }
     }
     if (removed > 0) invalidateMetaCaches()
-    (removed, removedData)
+    removed
   }
 
   /** Total committed row count straight from manifests (no data scan). */
@@ -1424,14 +1399,6 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     dfs.reduce(_ unionByName _)
   }
 
-  /** Shared copy-on-write machinery for predicate-scoped rewrites
-    * ([[delete]], [[update]]): stats-prune to candidate files, read them
-    * with partition values re-injected, hand the unioned candidates to
-    * `transform` (which returns the replacement rows and an
-    * affected-count function of the written row total), and publish one
-    * rewrite manifest referencing untouched files by path. Returns the
-    * affected-row count; provably-no-match predicates and fully-pruned
-    * tables return 0 without committing a version. */
   /** Second DML pruning stage behind min/max stats: per-file parquet
     * bloom filters (the takedown-by-id path — stats on a non-clustered
     * id admit nearly every file; the bloom proves non-membership).
@@ -1452,6 +1419,14 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     (k.map(_._1), untouched ++ d.map(_._1))
   }
 
+  /** Shared copy-on-write machinery for predicate-scoped rewrites
+    * ([[delete]], [[update]]): stats-prune to candidate files, read them
+    * with partition values re-injected, hand the unioned candidates to
+    * `transform` (which returns the replacement rows and an
+    * affected-count function of the written row total), and publish one
+    * rewrite manifest referencing untouched files by path. Returns the
+    * affected-row count; provably-no-match predicates and fully-pruned
+    * tables return 0 without committing a version. */
   private def cowByPredicate(spark: SparkSession,
                              predicate: org.apache.spark.sql.Column,
                              tag: String, metricName: String,

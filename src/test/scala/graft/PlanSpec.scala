@@ -473,6 +473,30 @@ class PlanSpec extends AnyFunSuite {
       s"broadcast join should plant a runtime filter on the graft scan:\n$plan")
   }
 
+  test("graft table reads plan one vectorized V2 scan for every layout") {
+    val s = spark
+    import s.implicits._
+    val df = (0 until 10).map(i => (i.toLong, s"n$i", if (i % 2 == 0) "wav" else "opus"))
+      .toDF("id", "name", "codec")
+    val plain = new graft.table.GraftTable(
+      java.nio.file.Files.createTempDirectory("graft_path_plain").toString)
+    plain.commit(df, 0L)
+    val part = new graft.table.GraftTable(
+      java.nio.file.Files.createTempDirectory("graft_path_part").toString)
+    part.commit(df, 0L, partitionBy = Seq("codec"))
+    for (t <- Seq(plain, part)) {
+      val read = t.read(s)
+      val plan = planOf(read)
+      assert("BatchScan".r.findAllIn(plan).size == 1 && !plan.contains("FileScan"),
+        s"expected exactly one V2 scan:\n$plan")
+      assert(plan.contains("graft-table scan"), s"not the graft-table scan:\n$plan")
+      val c2r = plan.indexOf("ColumnarToRow")
+      assert(c2r >= 0 && c2r < plan.indexOf("BatchScan"), s"scan is not vectorized:\n$plan")
+      assert(read.select("id", "name", "codec").as[(Long, String, String)].collect().sorted
+        .toSeq == df.as[(Long, String, String)].collect().sorted.toSeq)
+    }
+  }
+
   test("storage-partitioned read: groupBy on the partition layout has no shuffle") {
     val s = spark
     import s.implicits._

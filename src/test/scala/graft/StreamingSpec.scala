@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Cep, Pipeline}
 import graft.streaming.StreamingJobs
-import graft.table.{ExactlyOnceSink, GraftInputPartition, GraftMicroBatchStream, GraftOffset, GraftTable}
+import graft.table.{ExactlyOnceSink, GraftMicroBatchStream, GraftOffset, GraftTable}
+import org.apache.spark.sql.execution.datasources.FilePartition
 
 /** Top-level so Spark can derive an Encoder (inner classes capture $outer). */
 case class Clip(clip_id: String, sr_hz: Int, dur_ms: Int, codec: String,
@@ -347,10 +348,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(t.read(s).count() == 10)
 
     val schema = t.read(s).schema
-    val stream = new GraftMicroBatchStream(t.root, schema, None)
+    val stream = new GraftMicroBatchStream(new GraftTable(t.root), schema, None)
     def dirs(from: Long, to: Long) = stream
       .planInputPartitions(GraftOffset(from), GraftOffset(to))
-      .map(_.asInstanceOf[GraftInputPartition].path).toSeq
+      .map(_.asInstanceOf[FilePartition].files.head.filePath.toString).toSeq
     // fresh reader: the rewrite backfill + the post-compact commit, nothing else
     val fresh = dirs(0, t.version)
     assert(fresh.exists(_.contains("rewrite=v4")) && fresh.exists(_.contains("batch=10")))
@@ -416,10 +417,10 @@ class StreamingSpec extends AnyFunSuite {
       t.commit(Seq((i, s"v$i")).toDF("id", "v").coalesce(1), i.toLong))
     // floor = the v3 periodic checkpoint → snapshots v1..v2 expire
     t.vacuum(keepFromVersion = 4)
-    val stream = new GraftMicroBatchStream(t.root, t.read(s).schema, None)
+    val stream = new GraftMicroBatchStream(new GraftTable(t.root), t.read(s).schema, None)
     def dirs(from: Long) = stream
       .planInputPartitions(GraftOffset(from), GraftOffset(t.version))
-      .map(_.asInstanceOf[GraftInputPartition].path).toSeq
+      .map(_.asInstanceOf[FilePartition].files.head.filePath.toString).toSeq
     // reader that consumed v1..v2 resumes at the checkpoint version: must
     // get ONLY batches 2,3,4 — the pre-fix checkpoint diff against the
     // expired predecessor re-delivered the whole chain as one "delta"
@@ -469,7 +470,7 @@ class StreamingSpec extends AnyFunSuite {
     q.processAllAvailable(); q.stop()
     assert(dst.read(s).select("id").as[Int].collect().sorted.toSeq == Seq(1, 2, 10, 20, 21))
     // a reader already past the delete version gets nothing from it
-    val stream = new GraftMicroBatchStream(t.root, t.read(s).schema, None)
+    val stream = new GraftMicroBatchStream(new GraftTable(t.root), t.read(s).schema, None)
     assert(stream.planInputPartitions(GraftOffset(vPre + 1), GraftOffset(t.version)).isEmpty)
     // vacuum makes the erasure real on disk: exactly the one replaced
     // original file dies; untouched originals stay (referenced by path)
@@ -936,10 +937,10 @@ class StreamingSpec extends AnyFunSuite {
       t.commit(Seq((i * 10, s"b$i"), (i * 10 + 1, s"b$i")).toDF("id", "v").coalesce(1), i.toLong))
     assert(t.delete(s, col("id") === 11L) == 1L) // v4, rewrites batch=1
     t.commit(Seq((100, "post")).toDF("id", "v").coalesce(1), 9L) // v5
-    val stream = new GraftMicroBatchStream(t.root, t.read(s).schema, None)
+    val stream = new GraftMicroBatchStream(new GraftTable(t.root), t.read(s).schema, None)
     def dirs(from: Long) = stream
       .planInputPartitions(GraftOffset(from), GraftOffset(t.version))
-      .map(_.asInstanceOf[GraftInputPartition].path).toSeq
+      .map(_.asInstanceOf[FilePartition].files.head.filePath.toString).toSeq
     // reader mid-backlog (consumed v1 only): serves the remaining ORIGINAL
     // manifests — including batch=1's PRE-delete rows — plus the post
     // commit; the delete rewrite is skipped. This is the same retention
@@ -1132,7 +1133,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val t = new GraftTable(Files.createTempDirectory("graft_meta_io").toString)
     (0 until 100).foreach(i => t.commit(Seq((i, s"v$i")).toDF("id", "v").coalesce(1), i.toLong))
-    val stream = new GraftMicroBatchStream(t.root, t.read(s).schema, Some(1))
+    val stream = new GraftMicroBatchStream(new GraftTable(t.root), t.read(s).schema, Some(1))
     // a resumed reader fully caught up at v100; one commit arrives per trigger
     var off: Long = t.version
     def trigger(): Long = {
@@ -1159,6 +1160,54 @@ class StreamingSpec extends AnyFunSuite {
     // scale caveat: O(versions) driver I/O per trigger at one commit/min)
     assert(maxPerTrigger <= 8,
       s"a steady-state trigger did $maxPerTrigger metadata reads on a 100-commit table")
+  }
+
+  test("a V2 batch query does at most one cold metadata resolution") {
+    val s = spark
+    import s.implicits._
+    val t = new GraftTable(Files.createTempDirectory("graft_meta_once").toString)
+    (0 until 100).foreach(i => t.commit(Seq((i, s"v$i")).toDF("id", "v").coalesce(1), i.toLong))
+    val before = GraftTable.metaReads.get
+    val n = s.read.format(classOf[graft.table.GraftSourceProvider].getName).load(t.root)
+      .filter($"id" > 50).count()
+    val reads = GraftTable.metaReads.get - before
+    assert(n == 49L)
+    // one cold resolution of v100 is ~137 reads: the parent walk down to
+    // the v64 checkpoint plus the 100 manifests. Every scan-side object
+    // (schema inference, statistics, partitioning, planning) shares it.
+    assert(reads <= 150, s"one filtered count did $reads metadata reads on a 100-commit table")
+  }
+
+  test("change stream and partitioned reads decode short, byte and decimal columns") {
+    val s = spark
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // the partition column sits mid-schema: reads must permute it back
+    val schema = StructType(Seq(StructField("id", LongType), StructField("codec", StringType),
+      StructField("s", ShortType), StructField("b", ByteType),
+      StructField("d", DecimalType(10, 2))))
+    val df = s.createDataFrame(java.util.Arrays.asList(
+      Row(1L, "wav", 1.toShort, 2.toByte, new java.math.BigDecimal("12.34")),
+      Row(2L, "opus", (-3).toShort, (-4).toByte, new java.math.BigDecimal("-0.50")),
+      Row(3L, "wav", null, null, null)), schema)
+    def rows(d: DataFrame) = d.select(schema.fieldNames.toSeq.map(col): _*)
+      .orderBy("id").collect().toSeq
+    val expected = rows(df)
+    val part = new GraftTable(Files.createTempDirectory("graft_types_p").toString)
+    part.commit(df, 0L, partitionBy = Seq("codec"))
+    assert(rows(part.read(s)) == expected)
+    assert(part.read(s).columns.toSeq == schema.fieldNames.toSeq)
+    // row-at-a-time decode (no vectorized reader) permutes the same way
+    s.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    try assert(rows(part.read(s)) == expected)
+    finally s.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    val q = part.readStream(s).writeStream.format("memory").queryName("graft_types_stream")
+      .option("checkpointLocation", Files.createTempDirectory("ckpt_types").toString).start()
+    q.processAllAvailable(); q.stop()
+    assert(rows(s.table("graft_types_stream")) == expected)
+    val plain = new GraftTable(Files.createTempDirectory("graft_types").toString)
+    plain.commit(df, 0L)
+    assert(rows(plain.read(s)) == expected)
   }
 
   test("GraftTable time travel: historical snapshots stay readable") {
@@ -1695,7 +1744,7 @@ class StreamingSpec extends AnyFunSuite {
     val t = new GraftTable(Files.createTempDirectory("graft_pin").toString)
     t.commit(Seq((1L, "a")).toDF("id", "v"), 0L)
     val schema = t.meta.get.schema
-    val v2 = new graft.table.GraftV2Table(t.root, schema)
+    val v2 = new graft.table.GraftV2Table(new GraftTable(t.root), schema)
     import scala.jdk.CollectionConverters._
     val scan = v2.newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       Map("path" -> t.root).asJava)).build().asInstanceOf[graft.table.GraftScan]
@@ -1703,8 +1752,10 @@ class StreamingSpec extends AnyFunSuite {
     // a concurrent commit lands between logical planning and execution…
     t.commit(Seq((2L, "b"), (3L, "c")).toDF("id", "v"), 1L)
     // …but THIS scan's partitions and stats stay on the planned snapshot
+    val manifestRows = t.manifestsUpTo(t.version).flatMap(t.manifestFiles)
+      .map(f => org.apache.spark.paths.SparkPath.fromPathString(f.path) -> f.rows).toMap
     val rows = scan.toBatch.planInputPartitions()
-      .map(_.asInstanceOf[graft.table.GraftInputPartition].rows).sum
+      .map(p => manifestRows(p.asInstanceOf[FilePartition].files.head.filePath)).sum
     assert(statsBefore == 1L && rows == 1L,
       s"scan must stay pinned to its construction-time snapshot (stats=$statsBefore rows=$rows)")
     // a NEW scan sees the new version
