@@ -16,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   *   (a non-numeric first argument is a query name; repeats is then 1)
   *   SPARK_GRAFT_SF_DIR      data dir (default /root/testdata/sf0.1)
   *   SPARK_GRAFT_CPUS        local[N] width (default 32)
-  *   SPARK_GRAFT_EXPLAIN_DIR if set, write <dir>/<name>.txt formatted plans
+  *   SPARK_GRAFT_EXPLAIN_DIR if set, run each query once untimed and write
+  *                           <dir>/<name>.txt, its formatted final plan
   * With no names, runs every SparkEntry query (sorted, like Bench).
   * Prints one JSON line {"queries_extra":{name:[s,...]}} — a failed
   * iteration is `null`, never its truncated time — and never writes
@@ -65,7 +66,10 @@ object BenchExtra {
     val out = names.map { name =>
       val fn = SparkEntry.queries(name)
       explainDir.foreach { d =>
+        // an adaptive plan shows its final stages (WholeStageCodegen ids
+        // included) only once it has run
         val df = fn(spark, sfDir)
+        df.queryExecution.toRdd.count()
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.write(Paths.get(d, s"$name.txt"), plan.getBytes("UTF-8"))

@@ -1,12 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 
 /** Pure-JVM PCM synthesis/decoding for the audio graft. Codecs supported:
@@ -353,9 +349,12 @@ object PcmCodec {
     * its cost was that copy: a full write+rewalk of every clip's bytes
     * whose only consumer was this counter. Same null semantics as the
     * two-step form (undecodable input, negative gain, non-positive
-    * threshold → null; empty clip → 0.0). */
+    * threshold → null; empty clip → 0.0). gainX1000 = 1000 is a bit-exact
+    * identity (round(v·1.0) = v, the clamp never fires) and takes the
+    * gain-free [[clipRatio]] scan. */
   def clipRatioGained(bytes: Array[Byte], codec: String, threshX1000: Int,
                       gainX1000: Int): java.lang.Double = {
+    if (gainX1000 == 1000) return clipRatio(bytes, codec, threshX1000)
     if (threshX1000 <= 0 || gainX1000 < 0) return null
     val range = sampleRange(bytes, codec)
     if (range < 0) return null
@@ -498,368 +497,84 @@ object PcmCodec {
   }
 }
 
-/** Catalyst expression: pcm_synth(freq_hz, sr_hz, dur_ms, codec) → binary.
-  * Deterministic (replay-stable), null-on-unsupported-codec. Implements
-  * `doGenCode` (a static call into [[PcmCodec]]) so the synth stays inside
-  * WholeStageCodegen; `ImplicitCastInputTypes` lets the analyzer coerce
-  * integer frequencies instead of runtime type-matching. */
-case class PcmSynth(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(DoubleType, IntegerType, IntegerType, StringType)
-  // ExpectsInputTypes zips children with inputTypes, silently truncating on
-  // arity mismatch — a 3-arg pcm_synth(...) would pass analysis and die at
-  // runtime with IndexOutOfBounds. Fail analysis instead.
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.size != 4)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pcm_synth requires 4 arguments (freq_hz, sr_hz, dur_ms, codec), got ${children.size}")
-    else super.checkInputDataTypes()
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    PcmCodec.synth(vs(0).asInstanceOf[Double], vs(1).asInstanceOf[Int],
-      vs(2).asInstanceOf[Int], vs(3).toString)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.map(g => g.isNull.toString).filter(_ != "false")
-    val nullGuard = if (anyNull.isEmpty) "false" else anyNull.mkString(" || ")
-    val childCode = gens.map(_.code).reduce(_ + _)
-    ev.copy(code =
-      childCode +
-        code"""
-           |boolean ${ev.isNull} = true;
-           |byte[] ${ev.value} = null;
-           |if (!($nullGuard)) {
-           |  ${ev.value} = graft.functions.PcmCodec.synth(
-           |    ${gens(0).value}, ${gens(1).value}, ${gens(2).value}, ${gens(3).value}.toString());
-           |  ${ev.isNull} = (${ev.value} == null);
-           |}
-         """.stripMargin)
-  }
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+/** pcm_synth(freq_hz, sr_hz, dur_ms, codec) → binary: deterministic
+  * (replay-stable) clip bytes per FIXTURES §1. Like every audio function
+  * below, bound to its [[SqlKernels]] method by [[KernelCall]], and null
+  * on any null argument, an unsupported codec or a malformed container —
+  * the gate filter's pass-through path. */
+case class PcmSynth(children: Seq[Expression]) extends KernelCall("pcm_synth", "synth",
+    BinaryType, Seq("freq_hz" -> DoubleType, "sr_hz" -> IntegerType,
+      "dur_ms" -> IntegerType, "codec" -> StringType)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_decode(bytes, codec) → array<float>.
-  * The north rule's registered decode expression (SURVEY §2.2 UDF surface).
-  * Codegen'd: the decode loop runs behind one static call and the result is
-  * wrapped zero-copy-ish via UnsafeArrayData.fromPrimitiveArray. */
-case class PcmDecode(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(b: Any, c: Any): Any = {
-    val decoded = PcmCodec.decode(b.asInstanceOf[Array[Byte]], c.toString)
-    if (decoded == null) null else ArrayData.toArrayData(decoded)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, c) => {
-      val arr = ctx.freshName("pcm")
-      s"""
-         |final float[] $arr = graft.functions.PcmCodec.decode($b, $c.toString());
-         |if ($arr == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($arr);
-         |}
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+/** pcm_decode(bytes, codec) → array<float>: the north rule's registered
+  * decode expression (SURVEY §2.2 UDF surface). */
+case class PcmDecode(children: Seq[Expression]) extends KernelCall("pcm_decode", "decode",
+    ArrayType(FloatType, containsNull = false), KernelCall.Clip) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_energy(bytes, codec) → double — the FUSED
-  * decode→Σx² feature (see [[PcmCodec.energy]]): bit-identical to
-  * `norm2_f(pcm_decode(bytes, codec))` with zero per-row array
-  * materialization, so the decode+feature path stays allocation-free
-  * inside WholeStageCodegen. */
-case class PcmEnergy(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(b: Any, c: Any): Any =
-    PcmCodec.energy(b.asInstanceOf[Array[Byte]], c.toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, c) => {
-      val e = ctx.freshName("energy")
-      s"""
-         |final java.lang.Double $e = graft.functions.PcmCodec.energy($b, $c.toString());
-         |if ($e == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $e.doubleValue();
-         |}
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+/** pcm_energy(bytes, codec) → double: fused decode→Σx², bit-identical to
+  * `norm2_f(pcm_decode(bytes, codec))` with no per-row float[]. */
+case class PcmEnergy(children: Seq[Expression]) extends KernelCall("pcm_energy", "energy",
+    DoubleType, KernelCall.Clip) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_features(bytes, codec) → array<double>
-  * `[n_samples, energy, peak, zero_crossings, dc_mean]` — the fused
-  * decode→multi-feature pass ([[PcmCodec.features]]). One expression, one
-  * pass over the bytes, codegen'd: the production clip-quality job
-  * (silence/clipping/noisiness filtering) reads each encoded payload
-  * exactly once and materializes five doubles, not a float[]. */
-case class PcmFeatures(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(b: Any, c: Any): Any = {
-    val arr = PcmCodec.features(b.asInstanceOf[Array[Byte]], c.toString)
-    if (arr == null) null else ArrayData.toArrayData(arr)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, c) => {
-      val arr = ctx.freshName("feats")
-      s"""
-         |final double[] $arr = graft.functions.PcmCodec.features($b, $c.toString());
-         |if ($arr == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($arr);
-         |}
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+/** pcm_features(bytes, codec) → array<double> `[n_samples, energy, peak,
+  * zero_crossings, dc_mean]` in one pass over the encoded bytes. */
+case class PcmFeatures(children: Seq[Expression]) extends KernelCall("pcm_features", "features",
+    ArrayType(DoubleType, containsNull = false), KernelCall.Clip) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_segments(bytes, codec, sr_hz, frame_ms,
-  * thresh_x1000) → array<bigint> packed `[start_ms, end_ms, …]` — the
-  * fused VAD-lite segmentation ([[PcmCodec.segments]]): silence-trim /
-  * split-at-pause for a 10^12-clip corpus in one codegen'd pass over the
-  * encoded bytes. Empty array = all-silence clip; null = undecodable. */
-case class PcmSegments(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(BinaryType, StringType, IntegerType, IntegerType, IntegerType)
-  // same arity guard rationale as PcmSynth: ExpectsInputTypes zips and
-  // silently truncates on arity mismatch — fail analysis instead
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.size != 5)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pcm_segments requires 5 arguments (bytes, codec, sr_hz, frame_ms, thresh_x1000), got ${children.size}")
-    else super.checkInputDataTypes()
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    val arr = PcmCodec.segments(vs(0).asInstanceOf[Array[Byte]], vs(1).toString,
-      vs(2).asInstanceOf[Int], vs(3).asInstanceOf[Int], vs(4).asInstanceOf[Int])
-    if (arr == null) null else ArrayData.toArrayData(arr)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.map(g => g.isNull.toString).filter(_ != "false")
-    val nullGuard = if (anyNull.isEmpty) "false" else anyNull.mkString(" || ")
-    val childCode = gens.map(_.code).reduce(_ + _)
-    val arr = ctx.freshName("segs")
-    ev.copy(code =
-      childCode +
-        code"""
-           |boolean ${ev.isNull} = true;
-           |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-           |if (!($nullGuard)) {
-           |  final long[] $arr = graft.functions.PcmCodec.segments(
-           |    ${gens(0).value}, ${gens(1).value}.toString(),
-           |    ${gens(2).value}, ${gens(3).value}, ${gens(4).value});
-           |  if ($arr != null) {
-           |    ${ev.value} =
-           |      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($arr);
-           |    ${ev.isNull} = false;
-           |  }
-           |}
-         """.stripMargin)
-  }
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+/** pcm_segments(bytes, codec, sr_hz, frame_ms, thresh_x1000) →
+  * array<bigint> packed `[start_ms, end_ms, …]`: VAD-lite segmentation.
+  * Empty array = all-silence clip. */
+case class PcmSegments(children: Seq[Expression]) extends KernelCall("pcm_segments", "segments",
+    ArrayType(LongType, containsNull = false), KernelCall.Clip ++ Seq("sr_hz" -> IntegerType,
+      "frame_ms" -> IntegerType, "thresh_x1000" -> IntegerType)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_gain(bytes, codec, gain_x1000) → binary —
-  * fused decode→scale with s16 saturation ([[PcmCodec.gain]]); output is
-  * raw `pcm_s16le`. The loudness-normalization primitive, codegen'd. */
-case class PcmGain(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType, IntegerType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(b: Any, c: Any, g: Any): Any =
-    PcmCodec.gain(b.asInstanceOf[Array[Byte]], c.toString, g.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, c, g) => {
-      s"""
-         |${ev.value} = graft.functions.PcmCodec.gain($b, $c.toString(), $g);
-         |${ev.isNull} = (${ev.value} == null);
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
+/** pcm_gain(bytes, codec, gain_x1000) → binary raw `pcm_s16le`: fused
+  * decode→scale with s16 saturation, the loudness-normalization primitive. */
+case class PcmGain(children: Seq[Expression]) extends KernelCall("pcm_gain", "gain",
+    BinaryType, KernelCall.Clip :+ ("gain_x1000" -> IntegerType)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_clip_ratio(bytes, codec, thresh_x1000
-  * [, gain_x1000]) → double — fused decode→distortion screen
-  * ([[PcmCodec.clipRatio]]): fraction of samples at/above the normalized
-  * magnitude threshold. The optional 4th operand applies a gain (same
-  * scale-saturate math as pcm_gain) INSIDE the one pass
-  * ([[PcmCodec.clipRatioGained]]), so an overdrive screen needs no
-  * intermediate gained byte[] materialization — bit-identical to
-  * `pcm_clip_ratio(pcm_gain(bytes, codec, g), 'pcm_s16le', t)`. */
-case class PcmClipRatio(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(BinaryType, StringType, IntegerType) ++
-      (if (children.size >= 4) Seq(IntegerType) else Nil)
-  // same arity guard rationale as PcmSynth: ExpectsInputTypes zips and
-  // silently truncates on arity mismatch — fail analysis instead
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.size != 3 && children.size != 4)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pcm_clip_ratio requires 3 or 4 arguments (bytes, codec, thresh_x1000[, gain_x1000]), got ${children.size}")
-    else super.checkInputDataTypes()
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    if (children.size == 3)
-      PcmCodec.clipRatio(vs(0).asInstanceOf[Array[Byte]], vs(1).toString,
-        vs(2).asInstanceOf[Int])
-    else
-      PcmCodec.clipRatioGained(vs(0).asInstanceOf[Array[Byte]], vs(1).toString,
-        vs(2).asInstanceOf[Int], vs(3).asInstanceOf[Int])
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.map(g => g.isNull.toString).filter(_ != "false")
-    val nullGuard = if (anyNull.isEmpty) "false" else anyNull.mkString(" || ")
-    val childCode = gens.map(_.code).reduce(_ + _)
-    val r = ctx.freshName("clipRatio")
-    val call =
-      if (children.size == 3)
-        s"graft.functions.PcmCodec.clipRatio(${gens(0).value}, ${gens(1).value}.toString(), ${gens(2).value})"
-      else
-        s"graft.functions.PcmCodec.clipRatioGained(${gens(0).value}, ${gens(1).value}.toString(), ${gens(2).value}, ${gens(3).value})"
-    ev.copy(code =
-      childCode +
-        code"""
-           |boolean ${ev.isNull} = true;
-           |double ${ev.value} = 0.0;
-           |if (!($nullGuard)) {
-           |  final java.lang.Double $r = $call;
-           |  if ($r != null) {
-           |    ${ev.value} = $r.doubleValue();
-           |    ${ev.isNull} = false;
-           |  }
-           |}
-         """.stripMargin)
-  }
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+/** pcm_clip_ratio(bytes, codec, thresh_x1000[, gain_x1000]) → double: the
+  * fraction of samples at/above the normalized magnitude threshold after
+  * an optional gain (default 1000, the identity) applied inside the one
+  * pass — bit-identical to `pcm_clip_ratio(pcm_gain(bytes, codec, g),
+  * 'pcm_s16le', t)` without the gained byte[] copy. */
+case class PcmClipRatio(children: Seq[Expression]) extends KernelCall("pcm_clip_ratio", "clipRatio",
+    DoubleType, KernelCall.Clip ++ Seq("thresh_x1000" -> IntegerType, "gain_x1000" -> IntegerType),
+    defaults = Seq(1000)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_dominant_freq(bytes, codec, sr_hz, f0, df,
-  * n_cands [, max_samples [, gain_x1000]]) → double — fused
-  * decode→Goertzel candidate scan ([[PcmCodec.dominantFreq]] /
-  * [[PcmCodec.dominantFreqWindowed]]): the winning candidate frequency.
-  * The optional 7th/8th operands fuse the analysis window and the
-  * re-levelling gain into the same single pass — bit-identical to the
-  * slice/gain builder chain (PcmSpec-pinned) without its per-row byte[]
-  * materializations. */
-case class PcmDominantFreq(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(BinaryType, StringType, IntegerType, DoubleType, DoubleType, IntegerType) ++
-      Seq(IntegerType, IntegerType).take(children.size - 6)
-  // same arity guard rationale as PcmSynth: ExpectsInputTypes zips and
-  // silently truncates on arity mismatch — fail analysis instead
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (children.size < 6 || children.size > 8)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"pcm_dominant_freq requires 6-8 arguments (bytes, codec, sr_hz, f0, df, n_cands[, max_samples[, gain_x1000]]), got ${children.size}")
-    else super.checkInputDataTypes()
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    PcmCodec.dominantFreqWindowed(vs(0).asInstanceOf[Array[Byte]], vs(1).toString,
-      vs(2).asInstanceOf[Int], vs(3).asInstanceOf[Double],
-      vs(4).asInstanceOf[Double], vs(5).asInstanceOf[Int],
-      if (vs.size >= 7) vs(6).asInstanceOf[Int] else Int.MaxValue,
-      if (vs.size >= 8) vs(7).asInstanceOf[Int] else 1000)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val anyNull = gens.map(g => g.isNull.toString).filter(_ != "false")
-    val nullGuard = if (anyNull.isEmpty) "false" else anyNull.mkString(" || ")
-    val childCode = gens.map(_.code).reduce(_ + _)
-    val f = ctx.freshName("domFreq")
-    val winArg = if (gens.size >= 7) gens(6).value.toString else "java.lang.Integer.MAX_VALUE"
-    val gainArg = if (gens.size >= 8) gens(7).value.toString else "1000"
-    ev.copy(code =
-      childCode +
-        code"""
-           |boolean ${ev.isNull} = true;
-           |double ${ev.value} = 0.0;
-           |if (!($nullGuard)) {
-           |  final java.lang.Double $f = graft.functions.PcmCodec.dominantFreqWindowed(
-           |    ${gens(0).value}, ${gens(1).value}.toString(), ${gens(2).value},
-           |    ${gens(3).value}, ${gens(4).value}, ${gens(5).value},
-           |    $winArg, $gainArg);
-           |  if ($f != null) {
-           |    ${ev.value} = $f.doubleValue();
-           |    ${ev.isNull} = false;
-           |  }
-           |}
-         """.stripMargin)
-  }
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(children = newChildren)
+/** pcm_dominant_freq(bytes, codec, sr_hz, f0, df, n_cands[, max_samples[,
+  * gain_x1000]]) → double: the winning Goertzel candidate `f0 + k·df`, with
+  * the analysis window (default: the whole clip) and re-levelling gain
+  * (default 1000, the identity) fused into the same single pass. */
+case class PcmDominantFreq(children: Seq[Expression]) extends KernelCall("pcm_dominant_freq",
+    "dominantFreq", DoubleType, KernelCall.Clip ++ Seq("sr_hz" -> IntegerType,
+      "f0" -> DoubleType, "df" -> DoubleType, "n_cands" -> IntegerType,
+      "max_samples" -> IntegerType, "gain_x1000" -> IntegerType),
+    defaults = Seq(Int.MaxValue, 1000)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Catalyst expression: pcm_resample(pcm, src_hz, dst_hz) → array<float>.
-  * Linear-interpolation resampling — the audio analog of the multimodal
-  * "resize" op. Output sample i sits at source position i·src/dst;
-  * n_out = floor(n_in · dst / src). Codegen'd tight loop. */
-case class PcmResample(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(FloatType, containsNull = false), IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(pcmAny: Any, srcAny: Any, dstAny: Any): Any = {
-    val pcm = pcmAny.asInstanceOf[ArrayData]
-    val arr = PcmCodec.resample(pcm.toFloatArray(),
-      srcAny.asInstanceOf[Int], dstAny.asInstanceOf[Int])
-    if (arr == null) null else ArrayData.toArrayData(arr)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (pcm, src, dst) => {
-      val arr = ctx.freshName("resampled")
-      s"""
-         |final float[] $arr =
-         |  graft.functions.PcmCodec.resample($pcm.toFloatArray(), $src, $dst);
-         |if ($arr == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} =
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($arr);
-         |}
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
+/** pcm_resample(pcm, src_hz, dst_hz) → array<float>: linear-interpolation
+  * resampling, the audio analog of the multimodal "resize" op;
+  * n_out = floor(n_in · dst / src). */
+case class PcmResample(children: Seq[Expression]) extends KernelCall("pcm_resample", "resample",
+    ArrayType(FloatType, containsNull = false), Seq("pcm" -> ArrayType(FloatType, containsNull = false),
+      "src_hz" -> IntegerType, "dst_hz" -> IntegerType)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
 object AudioFunctions {
@@ -869,60 +584,46 @@ object AudioFunctions {
     * does. Spark 4's Column is API-agnostic and no longer exposes a public
     * Expression constructor; registry resolution is the supported path. */
   def pcm_synth(freqHz: Column, srHz: Column, durMs: Column, codec: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_synth", freqHz, srHz, durMs, codec)
+    call_function("pcm_synth", freqHz, srHz, durMs, codec)
 
   def pcm_decode(bytes: Column, codec: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_decode", bytes, codec)
+    call_function("pcm_decode", bytes, codec)
 
   def pcm_resample(pcm: Column, srcHz: Column, dstHz: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_resample", pcm, srcHz, dstHz)
+    call_function("pcm_resample", pcm, srcHz, dstHz)
 
   def pcm_energy(bytes: Column, codec: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_energy", bytes, codec)
+    call_function("pcm_energy", bytes, codec)
 
   def pcm_features(bytes: Column, codec: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_features", bytes, codec)
+    call_function("pcm_features", bytes, codec)
 
   def pcm_segments(bytes: Column, codec: Column, srHz: Column,
                    frameMs: Column, threshX1000: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "pcm_segments", bytes, codec, srHz, frameMs, threshX1000)
+    call_function("pcm_segments", bytes, codec, srHz, frameMs, threshX1000)
 
   def pcm_gain(bytes: Column, codec: Column, gainX1000: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_gain", bytes, codec, gainX1000)
+    call_function("pcm_gain", bytes, codec, gainX1000)
 
-  def pcm_clip_ratio(bytes: Column, codec: Column, threshX1000: Column): Column =
-    org.apache.spark.sql.functions.call_function("pcm_clip_ratio", bytes, codec, threshX1000)
-
-  /** 4-arg fused overdrive screen: gain applied inside the single pass —
+  /** Fraction of samples at/above `threshX1000`/1000 after `gainX1000`
+    * (default 1000, the identity) — the gain applied inside the one pass,
     * bit-identical to `pcm_clip_ratio(pcm_gain(b, c, g), 'pcm_s16le', t)`
     * without the gained byte[] copy (PcmSpec-pinned parity). */
   def pcm_clip_ratio(bytes: Column, codec: Column, threshX1000: Column,
-                     gainX1000: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "pcm_clip_ratio", bytes, codec, threshX1000, gainX1000)
+                     gainX1000: Column = lit(1000)): Column =
+    call_function("pcm_clip_ratio", bytes, codec, threshX1000, gainX1000)
 
-  def pcm_dominant_freq(bytes: Column, codec: Column, srHz: Column,
-                        f0: Column, df: Column, nCands: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "pcm_dominant_freq", bytes, codec, srHz, f0, df, nCands)
-
-  /** Windowed (7-arg) / windowed+re-levelled (8-arg) Goertzel scan: the
-    * analysis window — and optionally pcm_gain's exact scale-saturate
-    * math — fused into the one pass ([[PcmCodec.dominantFreqWindowed]]).
-    * Bit-identical to `pcm_dominant_freq(analysisWindow(…), 'pcm_s16le',
-    * …)` (PcmSpec-pinned) with zero intermediate byte[] copies. */
+  /** Goertzel dominant-tone scan over the first `maxSamples` samples
+    * (default: the whole clip), re-levelled by `gainX1000` (default 1000,
+    * the identity) — window and gain fused into the one pass
+    * ([[PcmCodec.dominantFreqWindowed]]), bit-identical to
+    * `pcm_dominant_freq(analysisWindow(…), 'pcm_s16le', …)` (PcmSpec-pinned)
+    * with zero intermediate byte[] copies. */
   def pcm_dominant_freq(bytes: Column, codec: Column, srHz: Column,
                         f0: Column, df: Column, nCands: Column,
-                        maxSamples: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "pcm_dominant_freq", bytes, codec, srHz, f0, df, nCands, maxSamples)
-
-  def pcm_dominant_freq(bytes: Column, codec: Column, srHz: Column,
-                        f0: Column, df: Column, nCands: Column,
-                        maxSamples: Column, gainX1000: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "pcm_dominant_freq", bytes, codec, srHz, f0, df, nCands, maxSamples, gainX1000)
+                        maxSamples: Column = lit(Int.MaxValue),
+                        gainX1000: Column = lit(1000)): Column =
+    call_function("pcm_dominant_freq", bytes, codec, srHz, f0, df, nCands, maxSamples, gainX1000)
 
   /** round(1000·rms(pcm)) as bigint via the INTERPRETED SQL-lambda fold —
     * retained purely as the reference definition for the PcmSpec parity
@@ -998,28 +699,12 @@ object AudioFunctions {
 
   /** SQL registration so `spark.sql("... pcm_decode(bytes, codec) ...")`
     * works (SparkSessionExtensions-style function injection). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_synth", exprs => PcmSynth(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_decode", exprs => PcmDecode(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_resample", exprs => PcmResample(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_energy", exprs => PcmEnergy(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_features", exprs => PcmFeatures(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_segments", exprs => PcmSegments(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_gain", exprs => PcmGain(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_clip_ratio", exprs => PcmClipRatio(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pcm_dominant_freq", exprs => PcmDominantFreq(exprs), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit = KernelCall.register(spark,
+    "pcm_synth" -> PcmSynth, "pcm_decode" -> PcmDecode, "pcm_resample" -> PcmResample,
+    "pcm_energy" -> PcmEnergy, "pcm_features" -> PcmFeatures, "pcm_segments" -> PcmSegments,
+    "pcm_gain" -> PcmGain, "pcm_clip_ratio" -> PcmClipRatio, "pcm_dominant_freq" -> PcmDominantFreq)
 
   /** The FIXTURES §1 frequency rule: 220 + (i % 16)·55 Hz. */
   def clipFreq(eventId: Column): Column =
-    org.apache.spark.sql.functions.lit(220.0) + (eventId % 16).cast("double") * 55.0
+    lit(220.0) + (eventId % 16).cast("double") * 55.0
 }

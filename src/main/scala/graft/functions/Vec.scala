@@ -1,144 +1,39 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Vector kernels for the similarity operators. The generic HOF route
-  * (`aggregate(zip_with(...))`) interprets a lambda per element — measured
-  * ~25s for 2M×64-dim pairs at sf0.1. These expressions run a tight
-  * primitive loop over the ArrayData instead, while computing EXACTLY the
-  * same left-fold double arithmetic as the DuckDB oracle's `list_reduce`
-  * (bit-identical results, so the ×10000 rounding stays flake-free).
-  *
-  * Both implement `doGenCode`, so they stay inside WholeStageCodegen: the
-  * loop is spliced into the generated Java with no per-row boxing or
-  * interpreted-eval boundary (round-1 left them as CodegenFallback).
-  */
-case class DotF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    acc
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ((double) $x.getFloat($i)) * ((double) $y.getFloat($i));
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
+/** Vector SQL functions for the similarity operators, each bound to its
+  * [[SqlKernels]] fold by [[KernelCall]]: a tight primitive loop over the
+  * ArrayData inside WholeStageCodegen, no per-element lambda. */
+case class DotF(children: Seq[Expression]) extends KernelCall("dot_f", "dot", DoubleType,
+    Seq("a" -> ArrayType(FloatType), "b" -> ArrayType(FloatType))) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
 /** Sum of squares (squared L2 norm) of a float vector. */
-case class Norm2F(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var i = 0
-    while (i < x.numElements()) {
-      val v = x.getFloat(i).toDouble; acc += v * v; i += 1
-    }
-    acc
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val v = ctx.freshName("v")
-      s"""
-         |final int $n = $x.numElements();
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $v = (double) $x.getFloat($i);
-         |  $acc += $v * $v;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+case class Norm2F(children: Seq[Expression]) extends KernelCall("norm2_f", "norm2", DoubleType,
+    Seq("a" -> ArrayType(FloatType))) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Peak magnitude max|x| of a float vector — the codegen'd replacement
-  * for `array_max(transform(pcm, x -> abs(x)))`, whose interpreted
-  * per-element lambda measured ~100× slower over the decoded-audio
-  * arrays (same order-insensitive double max, so values are identical). */
-case class PeakF(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  // NULL on an empty array — matching array_max(transform(pcm, abs)),
-  // whose array_max returns NULL for zero elements (a zero-sample clip
-  // must not report a fake 0.0 peak); hence nullable regardless of child
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    if (x.numElements() == 0) return null
-    var acc = 0.0
-    var i = 0
-    while (i < x.numElements()) {
-      val v = x.getFloat(i).toDouble
-      val m = if (v < 0) -v else v
-      if (m > acc) acc = m
-      i += 1
-    }
-    acc
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val v = ctx.freshName("v")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    final double $v = java.lang.Math.abs((double) $x.getFloat($i));
-         |    if ($v > $acc) $acc = $v;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+/** Peak magnitude max|x| of a float vector, NULL for an empty one — the
+  * compiled form of `array_max(transform(pcm, x -> abs(x)))`, whose
+  * per-element lambda measured ~100× slower over decoded audio. */
+case class PeakF(children: Seq[Expression]) extends KernelCall("peak_f", "peak", DoubleType,
+    Seq("a" -> ArrayType(FloatType))) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
 object VecFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => DotF(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "norm2_f", exprs => Norm2F(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "peak_f", exprs => PeakF(exprs.head), "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    KernelCall.register(spark, "dot_f" -> DotF, "norm2_f" -> Norm2F, "peak_f" -> PeakF)
 
-  def dot_f(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("dot_f", a, b)
+  def dot_f(a: Column, b: Column): Column = call_function("dot_f", a, b)
 
-  def norm2_f(a: Column): Column =
-    org.apache.spark.sql.functions.call_function("norm2_f", a)
+  def norm2_f(a: Column): Column = call_function("norm2_f", a)
 
-  def peak_f(a: Column): Column =
-    org.apache.spark.sql.functions.call_function("peak_f", a)
+  def peak_f(a: Column): Column = call_function("peak_f", a)
 }

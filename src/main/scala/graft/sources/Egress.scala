@@ -167,6 +167,9 @@ final class ChunkSender(host: String, port: Int, maxRetries: Int,
   private var sock: Socket = _
   private var out: BufferedOutputStream = _
   private var in: BufferedInputStream = _
+  // how much of the last ack's line terminator may still arrive
+  private val Done = 0; private val AfterAck = 1; private val CrPending = 2
+  private var eol = Done
 
   private def connect(): Unit = {
     close()
@@ -193,25 +196,14 @@ final class ChunkSender(host: String, port: Int, maxRetries: Int,
     Egress.retrying(maxRetries, baseBackoffMs, s"egress to $host:$port",
       onFailure = () => close()) { () =>
       if (out == null) connect()
-      // stale bytes already buffered BEFORE this chunk is sent: a
-      // line-oriented receiver's reply terminator ("\n" / "\r\n") can land
-      // in a LATER TCP segment than its ack byte, so the post-ack drain
-      // below may legitimately miss it — consume up to one such
-      // terminator here (a '\n'/'\r' can never masquerade as the ack
-      // byte '1', so this cannot reopen the false-ack hole; without it a
-      // segmented spec-compliant receiver would fail EVERY chunk's first
-      // attempt into a teardown + full duplicate resend). Anything else
-      // is a previous reply's overflow — tear down now, before it can
-      // masquerade as this chunk's ack.
-      if (in != null) {
-        var stale = 0
-        while (in.available() > 0 && stale <= 2) {
-          val b = in.read()
-          if ((b != '\n'.toInt && b != '\r'.toInt) || stale == 2)
-            throw new IOException("protocol error: unsolicited bytes from receiver before send")
-          stale += 1
-        }
-      }
+      // bytes already buffered BEFORE this chunk is sent can only be the
+      // rest of the previous reply's terminator, which may land in a later
+      // TCP segment than its ack byte; anything else is that reply's
+      // overflow — tear down now, before it can masquerade as this
+      // chunk's ack
+      while (in.available() > 0)
+        if (!terminator(in.read()))
+          throw new IOException("protocol error: unsolicited bytes from receiver before send")
       lines.foreach { l =>
         out.write(l.getBytes(StandardCharsets.UTF_8)); out.write('\n')
       }
@@ -229,44 +221,45 @@ final class ChunkSender(host: String, port: Int, maxRetries: Int,
       // fully police. Worst case for a violating receiver is a duplicate
       // resend (at-least-once holds); a receiver replying with extra
       // acks voids its own delivery guarantee.
-      // leading '\r'/'\n' can ONLY be the previous reply's terminator
-      // arriving later than the pre-send drain saw (e.g. "\r" and "\n" in
-      // separate segments straddling it) — skip up to one terminator pair
-      // before the ack byte. Unambiguous: a terminator byte is never the
-      // ack byte, so this cannot convert a wrong reply into a false ack.
+      // leading terminator bytes are the rest of the previous reply's,
+      // arriving later than the pre-send drain saw them; a terminator byte
+      // is never the ack byte, so this cannot turn a wrong reply into a
+      // false ack
       var r = in.read()
-      var skippedEol = 0
-      while ((r == '\n'.toInt || r == '\r'.toInt) && skippedEol < 2) {
-        r = in.read()
-        skippedEol += 1
-      }
+      while (r >= 0 && terminator(r)) r = in.read()
       if (r < 0) throw new IOException("receiver closed before ack")
+      if (eol == CrPending)
+        throw new IOException("protocol error: a '\\r' from the receiver not followed by '\\n'")
       if (r != ChunkSender.AckByte)
         throw new IOException(
           s"protocol error: expected ack byte '${ChunkSender.AckByte.toChar}', got $r")
-      // a line-oriented receiver's "\n" / "\r\n" terminator is PART of
-      // this reply — consume it NOW so it can never masquerade as a later
-      // chunk's ack; anything else beyond the ack is still a protocol
-      // error (the receiver-compat relief must not reopen the false-ack
-      // hole this check exists to close)
-      val extra = new StringBuilder
-      while (in.available() > 0 && extra.length <= 2) {
+      // this reply's own terminator ("\n" / "\r\n", or a "\r" whose '\n'
+      // is still in flight) is consumed NOW so it can never masquerade as
+      // a later chunk's ack; anything else beyond the ack is still a
+      // protocol error — the receiver-compat relief must not reopen the
+      // false-ack hole this check exists to close
+      eol = AfterAck
+      while (in.available() > 0) {
         val b = in.read()
         if (b < 0) throw new IOException("receiver closed after ack")
-        extra.append(b.toChar)
+        if (!terminator(b))
+          throw new IOException("protocol error: receiver sent bytes beyond the single ack")
       }
-      // a lone '\r' is the first half of a "\r\n" terminator whose '\n'
-      // is still in flight in a later segment (the pre-send drain of the
-      // NEXT chunk consumes it); like '\n'/'\r\n' it can never be an ack
-      if (extra.nonEmpty && extra.toString != "\n" && extra.toString != "\r\n" &&
-          extra.toString != "\r")
-        throw new IOException("protocol error: receiver sent bytes beyond the single ack")
     }
+
+  /** Consumes `b` as the next byte of the last ack's optional line
+    * terminator: after the ack a '\n' ends it and a '\r' must be followed
+    * by exactly one '\n' — so a stray bare '\r' is a protocol error, not
+    * silently absorbed. False when `b` cannot continue the terminator. */
+  private def terminator(b: Int): Boolean =
+    if (b == '\n' && eol != Done) { eol = Done; true }
+    else if (b == '\r' && eol == AfterAck) { eol = CrPending; true }
+    else false
 
   def close(): Unit = {
     if (sock != null) {
       try sock.close() catch { case _: IOException => () }
-      sock = null; out = null; in = null
+      sock = null; out = null; in = null; eol = Done
     }
   }
 }

@@ -3,7 +3,9 @@ package graft.table
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import org.apache.parquet.schema.LogicalTypeAnnotation
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -527,7 +529,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
 
   /** Time travel: read the table's DATA exactly as of snapshot `v`
     * (snapshots are immutable manifest lists, so any historical version
-    * stays readable) through the V2 source for every layout. Columns
+    * stays readable) through the V2 source for every layout, over THIS
+    * instance: a warm table resolves the snapshot from its caches instead
+    * of re-walking the chain cold. Columns
     * follow the schema in the CURRENT version's [[TableMeta]], also for a
     * zero-file version — a column added after `v` appears as all-null
     * (reading `v` under its own schema is intentionally out of scope; rows
@@ -538,9 +542,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       require(v >= 0 && v <= latest, s"snapshot v$v does not exist (latest: v$latest)")
       metaOf(latest).map(_.schema)
     }
-    schema.fold(spark.emptyDataFrame)(s =>
-      spark.read.format(classOf[GraftSourceProvider].getName)
-        .schema(s).option("version", v).load(root))
+    schema.fold(spark.emptyDataFrame)(s => GraftPlans.dataFrame(spark,
+      DataSourceV2Relation.create(new GraftV2Table(this, s), None, None,
+        new CaseInsensitiveStringMap(java.util.Map.of("version", v.toString)))))
   }
 
   /** Incremental streaming read over the table (S1 analog: the unbounded

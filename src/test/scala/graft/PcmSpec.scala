@@ -259,6 +259,8 @@ class PcmSpec extends AnyFunSuite {
         assert(java.lang.Double.doubleToLongBits(twoStep.doubleValue) ==
           java.lang.Double.doubleToLongBits(fused.doubleValue),
           s"eid=$eid codec=$codec g=$g: two-step=$twoStep fused=$fused")
+        // gain 1000 (the builders' default) takes the gain-free scan
+        if (g == 1000) assert(fused == PcmCodec.clipRatio(bytes, codec, 999))
       }
     }
     // null/edge contracts mirror the two-step chain

@@ -590,63 +590,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(ids.toSet == Set(0, 1, 2), s"lost rows: got $ids")
   }
 
-  test("egress ack protocol: '1\\r\\n' accepted, junk beyond the ack rejected") {
-    // one server, scripted replies per #ack: the CRLF-terminated ack must
-    // deliver; a reply with trailing junk ("1x") must be torn down and
-    // retried until retries exhaust (false-ack hole stays closed)
-    def serve(reply: Array[Byte]): java.net.ServerSocket = {
-      val srv = new java.net.ServerSocket(0)
-      val t = new Thread(() => {
-        try while (!srv.isClosed) {
-          val sock = srv.accept()
-          val h = new Thread(() => {
-            try {
-              val rd = new java.io.BufferedReader(
-                new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
-              val os = sock.getOutputStream
-              var line = rd.readLine()
-              while (line != null) {
-                if (line == "#ack") { os.write(reply); os.flush() }
-                line = rd.readLine()
-              }
-            } catch { case _: java.io.IOException => () }
-            finally { try sock.close() catch { case _: java.io.IOException => () } }
-          })
-          h.setDaemon(true); h.start()
-        } catch { case _: java.io.IOException => () }
-      })
-      t.setDaemon(true); t.start()
-      srv
-    }
-    val good = serve("1\r\n".getBytes("UTF-8"))
-    try {
-      // retries > 0 only to absorb a (vanishingly rare) segment split that
-      // lands the "\r\n" after the best-effort available() check — the
-      // happy path must not throw at all
-      val sender = new graft.sources.ChunkSender("127.0.0.1", good.getLocalPort,
-        maxRetries = 2, baseBackoffMs = 1L, timeoutMs = 5000)
-      sender.send(Seq("""{"id":1}""")) // must not throw
-      sender.send(Seq("""{"id":2}""")) // terminator consumed: next ack clean
-      sender.close()
-    } finally good.close()
-    val bad = serve("1x".getBytes("UTF-8"))
-    try {
-      val sender = new graft.sources.ChunkSender("127.0.0.1", bad.getLocalPort,
-        maxRetries = 1, baseBackoffMs = 1L, timeoutMs = 5000)
-      val e = intercept[java.io.IOException](sender.send(Seq("""{"id":3}""")))
-      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
-        .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-      assert(msgs.contains("protocol error"), msgs)
-      sender.close()
-    } finally bad.close()
-  }
-
-  test("egress ack protocol: '1', '\\r', '\\n' in separate segments never fail a send") {
-    // a line-oriented receiver may flush the ack byte and each terminator
-    // byte separately; late terminator bytes land AFTER the post-ack
-    // drain (and possibly straddle the pre-send drain). The ack read must
-    // skip leading terminator leftovers — with maxRetries = 0 any
-    // teardown/resend would surface as a throw.
+  /** A line-oriented egress receiver that runs `onAck` on its socket's
+    * output stream at every "#ack" line. */
+  private def ackServer(onAck: java.io.OutputStream => Unit): java.net.ServerSocket = {
     val srv = new java.net.ServerSocket(0)
     val t = new Thread(() => {
       try while (!srv.isClosed) {
@@ -658,13 +604,7 @@ class StreamingSpec extends AnyFunSuite {
             val os = sock.getOutputStream
             var line = rd.readLine()
             while (line != null) {
-              if (line == "#ack") {
-                os.write('1'); os.flush()
-                Thread.sleep(25) // each terminator byte in its own segment
-                os.write('\r'); os.flush()
-                Thread.sleep(25)
-                os.write('\n'); os.flush()
-              }
+              if (line == "#ack") onAck(os)
               line = rd.readLine()
             }
           } catch { case _: java.io.IOException | _: InterruptedException => () }
@@ -674,6 +614,52 @@ class StreamingSpec extends AnyFunSuite {
       } catch { case _: java.io.IOException => () }
     })
     t.setDaemon(true); t.start()
+    srv
+  }
+
+  /** Every message in `e`'s cause chain. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("egress ack protocol: '1\\r\\n' accepted, junk beyond the ack rejected") {
+    // scripted replies per #ack: the CRLF-terminated ack must deliver; a
+    // reply with trailing junk ("1x") must be torn down and retried until
+    // retries exhaust (false-ack hole stays closed)
+    def serve(reply: String) = ackServer { os => os.write(reply.getBytes("UTF-8")); os.flush() }
+    val good = serve("1\r\n")
+    try {
+      // retries > 0 only to absorb a (vanishingly rare) segment split that
+      // lands the "\r\n" after the best-effort available() check — the
+      // happy path must not throw at all
+      val sender = new graft.sources.ChunkSender("127.0.0.1", good.getLocalPort,
+        maxRetries = 2, baseBackoffMs = 1L, timeoutMs = 5000)
+      sender.send(Seq("""{"id":1}""")) // must not throw
+      sender.send(Seq("""{"id":2}""")) // terminator consumed: next ack clean
+      sender.close()
+    } finally good.close()
+    val bad = serve("1x")
+    try {
+      val sender = new graft.sources.ChunkSender("127.0.0.1", bad.getLocalPort,
+        maxRetries = 1, baseBackoffMs = 1L, timeoutMs = 5000)
+      val e = intercept[java.io.IOException](sender.send(Seq("""{"id":3}""")))
+      assert(causes(e).contains("protocol error"), causes(e))
+      sender.close()
+    } finally bad.close()
+  }
+
+  test("egress ack protocol: '1', '\\r', '\\n' in separate segments never fail a send") {
+    // a line-oriented receiver may flush the ack byte and each terminator
+    // byte separately; late terminator bytes land AFTER the post-ack
+    // drain (and possibly straddle the pre-send drain). The ack read must
+    // skip leading terminator leftovers — with maxRetries = 0 any
+    // teardown/resend would surface as a throw.
+    val srv = ackServer { os =>
+      os.write('1'); os.flush()
+      Thread.sleep(25) // each terminator byte in its own segment
+      os.write('\r'); os.flush()
+      Thread.sleep(25)
+      os.write('\n'); os.flush()
+    }
     try {
       val sender = new graft.sources.ChunkSender("127.0.0.1", srv.getLocalPort,
         maxRetries = 0, baseBackoffMs = 1L, timeoutMs = 5000)
@@ -683,6 +669,32 @@ class StreamingSpec extends AnyFunSuite {
       }
       sender.close()
     } finally srv.close()
+  }
+
+  test("egress ack protocol: a '\\r' must be followed by exactly one '\\n'") {
+    // "1\r" then "\n" in a later segment is one CRLF-terminated ack
+    val split = ackServer { os =>
+      os.write("1\r".getBytes("UTF-8")); os.flush()
+      Thread.sleep(25)
+      os.write('\n'); os.flush()
+    }
+    try {
+      val sender = new graft.sources.ChunkSender("127.0.0.1", split.getLocalPort,
+        maxRetries = 0, baseBackoffMs = 1L, timeoutMs = 5000)
+      (1 to 3).foreach(i => sender.send(Seq(s"""{"id":$i}""")))
+      sender.close()
+    } finally split.close()
+    // a stray bare '\r' (never followed by '\n') is a protocol error on
+    // the next chunk, whichever drain sees it
+    val stray = ackServer { os => os.write("1\r".getBytes("UTF-8")); os.flush() }
+    try {
+      val sender = new graft.sources.ChunkSender("127.0.0.1", stray.getLocalPort,
+        maxRetries = 0, baseBackoffMs = 1L, timeoutMs = 5000)
+      sender.send(Seq("""{"id":1}"""))
+      val e = intercept[java.io.IOException](sender.send(Seq("""{"id":2}""")))
+      assert(causes(e).contains("protocol error"), causes(e))
+      sender.close()
+    } finally stray.close()
   }
 
   test("egress HTTP: POST-per-chunk with 2xx acks, redelivery on 5xx, no loss") {
@@ -1176,6 +1188,22 @@ class StreamingSpec extends AnyFunSuite {
     // the v64 checkpoint plus the 100 manifests. Every scan-side object
     // (schema inference, statistics, partitioning, planning) shares it.
     assert(reads <= 150, s"one filtered count did $reads metadata reads on a 100-commit table")
+  }
+
+  test("a warm GraftTable reads through its own caches, not a cold chain walk") {
+    val s = spark
+    import s.implicits._
+    val t = new GraftTable(Files.createTempDirectory("graft_meta_warm").toString)
+    (0 until 100).foreach(i => t.commit(Seq((i, s"v$i")).toDF("id", "v").coalesce(1), i.toLong))
+    def reads(): Long = {
+      val before = GraftTable.metaReads.get
+      assert(t.read(s).filter($"id" > 50).collect().length == 49)
+      GraftTable.metaReads.get - before
+    }
+    reads() // the first read may resolve what the commits left uncached
+    // a cold resolution of v100 is ~137 reads; a warm one re-reads VERSION
+    val warm = Seq(reads(), reads())
+    assert(warm.forall(_ < 10), s"warm reads did $warm metadata reads on a 100-commit table")
   }
 
   test("change stream and partitioned reads decode short, byte and decimal columns") {
