@@ -218,26 +218,12 @@ object Main {
     }
   }
 
-  /** A graft-table root, not just any dir with a VERSION file: the
-    * pointer must parse as a version AND the table's metadata dirs must
-    * exist — a plain parquet directory with a stray VERSION artifact must
-    * keep streaming through the file source. */
-  private def isGraftTableRoot(dir: String): Boolean = {
-    val root = java.nio.file.Paths.get(dir)
-    val vf = root.resolve("VERSION")
-    java.nio.file.Files.exists(vf) &&
-      java.nio.file.Files.isDirectory(root.resolve("snapshots")) &&
-      java.nio.file.Files.isDirectory(root.resolve("manifests")) &&
-      scala.util.Try(new String(java.nio.file.Files.readAllBytes(vf),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong).isSuccess
-  }
-
   def main(args: Array[String]): Unit = {
     val conf = parseArgs(args).fold(e => { System.err.println(s"[graft] $e"); sys.exit(2) }, identity)
     // upfront (C1): needs only the parsed config + a filesystem probe —
     // reject BEFORE the session starts or the sink touches the output
     if (conf.maxRowsPerTrigger.isDefined && !MaintenanceJobs.contains(conf.job) &&
-        !isGraftTableRoot(conf.input)) {
+        !GraftTable.isTableRoot(conf.input)) {
       System.err.println("[graft] --max-rows-per-trigger requires a graft-table " +
         "input (Spark's file source admits by files/bytes only)")
       sys.exit(2)
@@ -391,7 +377,7 @@ object Main {
     // admission triple; a plain directory uses Spark's file source
     // (files/bytes budgets only)
     val clips =
-      if (isGraftTableRoot(conf.input))
+      if (GraftTable.isTableRoot(conf.input))
         new GraftTable(conf.input).readStream(spark, conf.maxFilesPerTrigger,
           conf.maxBytesPerTrigger, conf.maxRowsPerTrigger)
       else {

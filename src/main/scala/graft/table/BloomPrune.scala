@@ -43,11 +43,13 @@ import scala.util.control.NonFatal
   *  - a column chunk without a bloom, an unreadable footer, or any IO
   *    error keeps the file.
   *
-  * Used on the batch DML path (delete/update candidate selection), NOT
-  * the streaming read planner: consulting footers is per-file metadata
-  * I/O, which the V2 source's bounded-metadata-I/O budget deliberately
-  * avoids per trigger. A DML pays it once, in parallel, on the already
-  * stats-admitted candidate set. */
+  * Used by the copy-on-write rewrite's candidate selection (delete,
+  * update and merge; compaction takes every file, and every rewrite's
+  * write carries the blooms forward), NOT the streaming read planner:
+  * consulting footers is per-file metadata I/O, which the V2 source's
+  * bounded-metadata-I/O budget deliberately avoids per trigger. A rewrite
+  * pays it once, in parallel, on the already stats-admitted candidate
+  * set. */
 object BloomPrune {
 
   /** true ⇒ the file may contain a row matching the CONJUNCTION of

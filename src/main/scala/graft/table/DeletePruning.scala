@@ -3,16 +3,17 @@ package graft.table
 import org.apache.spark.sql.catalyst.{expressions => ce}
 import org.apache.spark.sql.{sources => sf}
 
-/** Predicate → source-filter translation for [[GraftTable.delete]]'s
-  * stats-based candidate pruning. Separated from the delete machinery so
-  * its SOUNDNESS contract can be property-tested in isolation: for every
+/** Predicate → source-filter translation for the stats-based candidate
+  * pruning of [[GraftTable]]'s copy-on-write rewrite (delete, update,
+  * merge). Separated from the rewrite machinery so its SOUNDNESS
+  * contract can be property-tested in isolation: for every
   * translated filter set, any file containing a row where the predicate
   * is TRUE must survive [[FilePrune.keep]] — pruning may only ever drop
   * files that provably contain no match. Untranslatable conjuncts simply
   * translate to nothing (conservative: more candidates, never fewer).
   *
   * Three review-pass lessons are encoded here and guarded by the property
-  * test in PropertySpec:
+  * test in DeletePruningSpec:
   *  - the analyzer wraps the NARROWER side of a comparison in a Cast —
   *    sometimes the attribute, sometimes the literal, and each IN-list
   *    element individually;
@@ -21,7 +22,7 @@ import org.apache.spark.sql.{sources => sf}
   *    targets are NOT: equality evaluates in rounded float while stats
   *    compare in exact double);
   *  - provably-unsatisfiable predicates (empty IN, literal false/null)
-  *    must short-circuit the whole delete, because FilePrune treats an
+  *    must short-circuit to no candidates, because FilePrune treats an
   *    empty IN as "keep everything".
   */
 private[table] object DeletePruning {
@@ -128,9 +129,9 @@ private[table] object DeletePruning {
   }
 
   /** The predicate provably matches no row (empty IN list, literal
-    * false/null conjunct): the caller must treat the delete as a full
-    * no-op — FilePrune would otherwise KEEP everything for an empty IN
-    * and a no-arg isin() would rewrite the whole table as a copy. */
+    * false/null conjunct): the caller must admit no candidate —
+    * FilePrune would otherwise KEEP everything for an empty IN and a
+    * no-arg isin() would rewrite the whole table as a copy. */
   def neverMatches(cond: Option[ce.Expression]): Boolean =
     cond.exists(c => conjuncts(c).exists {
       case ce.In(_, Seq()) => true

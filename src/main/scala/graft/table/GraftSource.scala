@@ -211,7 +211,11 @@ object FilePrune {
   }
 }
 
-final class GraftV2Table(table: GraftTable, tableSchema: StructType)
+/** @param files the files to read instead of the pinned version's
+  *   manifests — a copy-on-write rewrite's candidates ([[GraftTable]]
+  *   builds it; the provider never does). */
+final class GraftV2Table(table: GraftTable, tableSchema: StructType,
+                         files: Option[Seq[FileInfo]] = None)
     extends Table with SupportsRead {
   override def name(): String = s"graft-table(${table.root})"
   override def schema(): StructType = tableSchema
@@ -255,7 +259,7 @@ final class GraftV2Table(table: GraftTable, tableSchema: StructType)
         // rows > 0: a row-less file (an empty batch's schema-only file) has
         // no footer stats and contributes nothing to any aggregate — it
         // must not disqualify the metadata answer
-        val fs = table.manifestsUpTo(asOf).flatMap(table.manifestFiles)
+        val fs = files.getOrElse(table.manifestsUpTo(asOf).flatMap(table.manifestFiles))
           .filter(_.rows > 0)
         def colOf(refs: Array[NamedReference]): Option[StructField] = refs match {
           case Array(r) if r.fieldNames.length == 1 =>
@@ -314,7 +318,7 @@ final class GraftV2Table(table: GraftTable, tableSchema: StructType)
         Option(options.get("maxBytesPerTrigger")).map(_.toLong),
         Option(options.get("maxRowsPerTrigger")).map(_.toLong),
         pushed.toSeq,
-        Option(options.get("version")).map(_.toLong))
+        Option(options.get("version")).map(_.toLong), files)
     }
 }
 
@@ -339,7 +343,8 @@ final class GraftScan(table: GraftTable, schema: StructType,
                       maxBytesPerTrigger: Option[Long],
                       maxRowsPerTrigger: Option[Long],
                       filters: Seq[Filter],
-                      asOfVersion: Option[Long] = None)
+                      asOfVersion: Option[Long] = None,
+                      files: Option[Seq[FileInfo]] = None)
     extends Scan with SupportsReportStatistics with SupportsReportPartitioning
     with SupportsRuntimeFiltering {
   override def readSchema(): StructType = schema
@@ -365,18 +370,21 @@ final class GraftScan(table: GraftTable, schema: StructType,
   // (plain partitions under a plan that expects HasPartitionKey).
   private val snapshotVersion: Long = asOfVersion.getOrElse(table.version)
 
-  /** Storage-partitioning keys: the pinned snapshot's partition columns. */
+  /** Storage-partitioning keys: the pinned snapshot's partition columns.
+    * A read of given `files` claims none: each file stays its own task, so
+    * a rewrite's survivors of one candidate file land in one output file
+    * whatever `spark.sql.sources.v2.bucketing.enabled` says. */
   private lazy val keyCols: Seq[String] =
-    table.metaAt(snapshotVersion).map(_.partitionBy).getOrElse(Nil)
+    if (files.isDefined) Nil
+    else table.metaAt(snapshotVersion).map(_.partitionBy).getOrElse(Nil)
 
-  /** The pinned snapshot's files after pushed-filter pruning, resolved
-    * once per scan. rows > 0: an empty batch writes a row-less file whose
-    * footer has no stats — planning it adds a no-op task and (worse)
-    * withdraws the storage-partitioned single-value claim for the whole
-    * scan. */
+  /** The pinned snapshot's files (or the given `files`) after
+    * pushed-filter pruning, resolved once per scan. rows > 0: an empty
+    * batch writes a row-less file whose footer has no stats — planning it
+    * adds a no-op task and (worse) withdraws the storage-partitioned
+    * single-value claim for the whole scan. */
   private lazy val pinnedFiles: Seq[FileInfo] =
-    table.manifestsUpTo(snapshotVersion)
-      .flatMap(table.manifestFiles)
+    files.getOrElse(table.manifestsUpTo(snapshotVersion).flatMap(table.manifestFiles))
       .filter(fi => fi.rows > 0 && FilePrune.keep(fi, filters))
 
   /** [[pinnedFiles]] minus what the runtime filters prune. */

@@ -117,6 +117,17 @@ object GraftTable {
     * low-cardinality columns stay under it and keep their dictionaries.
     * Only encodings change, never content — so a constant, not a setting. */
   private[table] val DictionaryBudget = 16 * 1024
+
+  /** A table root, not just any dir with a VERSION file: the pointer must
+    * parse as a version AND the metadata dirs must exist — a plain parquet
+    * directory with a stray VERSION artifact is not a table. */
+  def isTableRoot(dir: String): Boolean = {
+    val root = Paths.get(dir)
+    val vf = root.resolve("VERSION")
+    Files.exists(vf) && Files.isDirectory(root.resolve("snapshots")) &&
+      Files.isDirectory(root.resolve("manifests")) &&
+      scala.util.Try(new String(Files.readAllBytes(vf), StandardCharsets.UTF_8).trim.toLong).isSuccess
+  }
 }
 
 /** @param bloomFor columns to equip with per-file parquet bloom filters
@@ -542,10 +553,14 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       require(v >= 0 && v <= latest, s"snapshot v$v does not exist (latest: v$latest)")
       metaOf(latest).map(_.schema)
     }
-    schema.fold(spark.emptyDataFrame)(s => GraftPlans.dataFrame(spark,
-      DataSourceV2Relation.create(new GraftV2Table(this, s), None, None,
-        new CaseInsensitiveStringMap(java.util.Map.of("version", v.toString)))))
+    schema.fold(spark.emptyDataFrame)(scan(spark, v, _, None))
   }
+
+  /** The V2 relation over version `v`'s files, or over exactly `files`. */
+  private def scan(spark: SparkSession, v: Long, schema: org.apache.spark.sql.types.StructType,
+                   files: Option[Seq[FileInfo]]): DataFrame =
+    GraftPlans.dataFrame(spark, DataSourceV2Relation.create(new GraftV2Table(this, schema, files),
+      None, None, new CaseInsensitiveStringMap(java.util.Map.of("version", v.toString))))
 
   /** Incremental streaming read over the table (S1 analog: the unbounded
     * change stream), served by the DataSourceV2 [[GraftMicroBatchStream]]:
@@ -924,44 +939,38 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
   def compact(spark: SparkSession, targetFiles: Int = 32): Long = synchronized { withProcessLock("compact") {
     val v = version
     require(v > 0, "nothing to compact")
-    val next = rewriteMeta(v)
-    val batchIds = committedBatchIds
-    val dataDir = p("data", s"rewrite=v$v")
-    val src = readVersion(spark, v)
-    // preserve a declared directory-partition layout through compaction:
-    // rewrite dirs stay value-pure, so pruning / key-grouping survive.
-    // `targetFiles` then applies per partition value (repartition by the
-    // partition cols first would put each value in one writer task).
-    writeParquet(src.repartition(targetFiles), next.partitionBy.filter(src.columns.contains),
-      next, dataDir)
-
-    val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), next.schema)
-    publishRewrite("rewrite", v, written.toSeq, batchIds.toSeq, mergedBatchIds.toSeq, "{}", next)
-    if (idsCacheVersion == v) idsCacheVersion = v + 1 // same ids, new version
+    // a declared directory-partition layout survives compaction (the
+    // rewrite writes under it): rewrite dirs stay value-pure, so pruning /
+    // key-grouping survive, and `targetFiles` applies per partition value
+    rewrite(spark, "rewrite", v, rewriteMeta(v), None) { (src, _) =>
+      Some((src.repartition(targetFiles), _ => Some(Nil)))
+    }
     v + 1
   } }
 
   /** Publish one rewrite manifest (compaction/delete/update/merge) that
     * replaces the whole chain at version `v`: the surviving file set, the
-    * covered streaming batch ids, the CARRIED-FORWARD merge-id namespace
-    * (replay protection must survive later rewrites), and per-op metrics;
-    * then the v+1 checkpoint snapshot carrying `next` and the pointer. The
-    * shared tail of every copy-on-write mutation, so protocol fixes land
-    * once. */
+    * covered streaming batch ids, the merge-id namespace CARRIED FORWARD
+    * (plus `mergeId` — replay protection must survive later rewrites), and
+    * the op's metrics; then the v+1 checkpoint snapshot carrying `next`
+    * and the pointer. */
   private def publishRewrite(tag: String, v: Long, files: Seq[FileInfo],
-                             coveredIds: Seq[Long], mergeIds: Seq[Long],
-                             metricsJson: String, next: TableMeta): Unit = {
+                             metrics: Seq[(String, Long)], mergeId: Option[Long],
+                             next: TableMeta): Unit = {
     val all = files.toArray.sortBy((x: FileInfo) => x.path)
     val manifestName = s"manifest-$tag-v$v.json"
+    val mergeIds = (mergedBatchIds ++ mergeId).toSeq
     val mergeIdsJson =
       if (mergeIds.isEmpty) ""
       else s""","mergeIds":${mergeIds.sorted.mkString("[", ",", "]")}"""
+    val metricsJson = metrics.map { case (k, n) => s"${jsonStr(k)}:$n" }.mkString("{", ",", "}")
     publishVersioned(p("manifests", manifestName),
-      s"""{"replacesUpTo":$v,"batchIds":${coveredIds.sorted.mkString("[", ",", "]")},"rows":${all.map(_.rows).sum},"files":${filesJsonOf(all)},"metrics":$metricsJson$mergeIdsJson}""")
+      s"""{"replacesUpTo":$v,"batchIds":${committedBatchIds.toSeq.sorted.mkString("[", ",", "]")},"rows":${all.map(_.rows).sum},"files":${filesJsonOf(all)},"metrics":$metricsJson$mergeIdsJson}""")
     publishVersioned(p("snapshots", s"v${v + 1}.json"),
       s"""{"version":${v + 1},"added":[${jsonStr(manifestName)}],"manifests":[${jsonStr(manifestName)}],"meta":${next.json}}""")
     advancePointer(v)
     cacheChain(v + 1, Vector(manifestName), next)
+    if (idsCacheVersion == v) idsCacheVersion = v + 1 // same streaming ids, new version
   }
 
   /** Data-file paths are compared in ABSOLUTE-NORMALIZED space on both
@@ -976,15 +985,9 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * expired versions stops working, and a streaming reader must be past
     * the expired range — vacuum after `compact()` only once readers have
     * caught up (their offsets are snapshot versions, so "caught up" is
-    * checkable). Returns the number of deleted data files.
-    *
-    * @param orphanTtlMs forwarded to the [[gcOrphans]] pass that runs
-    *   with retention: 0 (default) is sound wherever the advisory
-    *   process lock is meaningful; deployments where it is not (CAS
-    *   object stores, NFS without flock propagation) must pass a TTL
-    *   larger than any commit duration so an in-flight writer's fresh
-    *   objects survive. */
-  def vacuum(keepFromVersion: Long, orphanTtlMs: Long = 0L): Int =
+    * checkable). Returns the number of deleted data files. Runs the
+    * [[gcOrphans]] pass too. */
+  def vacuum(keepFromVersion: Long): Int =
     synchronized { withProcessLock("vacuum") {
     val cur = version
     require(keepFromVersion >= 1 && keepFromVersion <= cur,
@@ -1041,15 +1044,14 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // kept path (walkData = false): at millions of files that second
     // traversal would roughly double vacuum's metadata I/O for zero
     // additional safety.
-    gcOrphansLocked(orphanTtlMs, walkData = false)
+    gcOrphansLocked(walkData = false)
     invalidateMetaCaches() // snapshot/manifest files were deleted
     deleted
   } }
 
   /** Crash/CAS-race orphan GC that expires NO history — the maintenance
     * pass for writer-race leftovers ([[PointerCommitter.putVersioned]]
-    * losers and crashed writers). Removes, oldest-guarded by
-    * `olderThanMs` (object mtime):
+    * losers and crashed writers). Removes:
     *
     *  1. snapshot nodes ABOVE the live pointer — a writer that published
     *     its node but died before the swap. In a CAS store that orphan
@@ -1063,21 +1065,18 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     *  4. data files listed in no surviving manifest (the loser's batch
     *     directory).
     *
-    * `olderThanMs = 0` is sound under the advisory process lock — no
-    * writer can be mid-commit while gc holds it. CAS deployments without
-    * a meaningful cross-client lock should pass a TTL comfortably larger
-    * than any commit duration so an IN-FLIGHT writer's fresh objects
-    * survive (the lease/timestamp expiry [[PointerCommitter.putVersioned]]
-    * documents). The live chain, time travel to any still-present
-    * version, and resumed readers are unaffected: only unreachable
-    * objects go. Returns the number of objects removed. */
-  def gcOrphans(olderThanMs: Long = 0L): Int =
-    synchronized { withProcessLock("vacuum") { gcOrphansLocked(olderThanMs) } }
+    * Sound because it runs under the advisory process lock: no writer can
+    * be mid-commit while gc holds it, so nothing unreachable is in
+    * flight. The live chain, time travel to any still-present version,
+    * and resumed readers are unaffected: only unreachable objects go.
+    * Returns the number of objects removed. */
+  def gcOrphans(): Int =
+    synchronized { withProcessLock("vacuum") { gcOrphansLocked() } }
 
   /** Returns the number of objects removed. `walkData` false skips the
     * data/ traversal — vacuum's retention pass has already swept
     * unreferenced data files when it calls this. */
-  private def gcOrphansLocked(olderThanMs: Long, walkData: Boolean = true): Int = {
+  private def gcOrphansLocked(walkData: Boolean = true): Int = {
     val cur = version
     val snapName = "^v(\\d+)\\.json$".r // shared by the guard + removal passes
     // A MISSING pointer with snapshot nodes on disk means the VERSION
@@ -1101,12 +1100,8 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         "running maintenance (a wipe of 'everything above version 0' would delete " +
         "the whole table).")
     }
-    val now = System.currentTimeMillis()
-    def oldEnough(f: Path): Boolean =
-      try now - Files.getLastModifiedTime(f).toMillis >= olderThanMs
-      catch { case _: java.io.IOException => false }
     var removed = 0
-    def rm(f: Path): Unit = if (oldEnough(f) && Files.deleteIfExists(f)) removed += 1
+    def rm(f: Path): Unit = if (Files.deleteIfExists(f)) removed += 1
     val snapDir = p("snapshots")
     if (Files.exists(snapDir)) {
       val ls = Files.list(snapDir)
@@ -1166,101 +1161,98 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
 
   /** Row-level DELETE by predicate — the training-data takedown/opt-out
     * path (GDPR erasure, licensing retractions) that an append-only table
-    * otherwise cannot express. Copy-on-write at FILE granularity:
+    * otherwise cannot express. A file-granular copy-on-write [[rewrite]]:
+    * only files whose stats and blooms admit a row where the predicate is
+    * TRUE are read (at 100 TB a takedown keyed on a clustered/partitioned
+    * column rewrites a few files, not the table); those rows are dropped
+    * (NULL keeps the row — SQL DELETE semantics) and the survivors
+    * rewritten under data/delete=v&lt;N&gt;/. Same chain semantics as
+    * [[compact]]: replays of any batch stay no-ops, time travel below the
+    * delete still serves the PRE-delete rows until [[vacuum]] expires them
+    * (which is what makes the erasure real on disk), fresh streams
+    * backfill post-delete contents exactly once, and readers resumed past
+    * the delete version skip the rewrite. A reader resumed strictly inside
+    * the replaced range re-reads original manifests (pre-delete rows) —
+    * the same retention contract as compaction: vacuum only once readers
+    * are past it.
     *
-    *  1. the predicate's conjuncts are translated to source filters and
-    *     checked against each file's manifest stats. [[FilePrune.keep]]
-    *     proves "no row in this file can match" — exactly the safety
-    *     direction a delete needs, so a file is left untouched (and
-    *     NEVER rewritten or even read) only under that proof. At 100 TB a
-    *     takedown keyed on a clustered/partitioned column rewrites a few
-    *     files, not the table.
-    *  2. candidate files are read (directory-encoded partition values
-    *     re-injected), rows where the predicate is TRUE are dropped
-    *     (NULL keeps the row — SQL DELETE semantics), survivors are
-    *     rewritten under data/delete=v&lt;N&gt;/ preserving the partition
-    *     layout.
-    *  3. one REWRITE manifest (untouched files by reference + rewritten
-    *     files) becomes the new snapshot — same chain semantics as
-    *     [[compact]]: replays of any batch stay no-ops, time travel below
-    *     the delete still serves the PRE-delete rows until [[vacuum]]
-    *     expires them (which is what makes the erasure real on disk),
-    *     fresh streams backfill post-delete contents exactly once, and
-    *     readers resumed past the delete version skip the rewrite.
-    *     A reader resumed strictly inside the replaced range re-reads
-    *     original manifests (pre-delete rows) — the same retention
-    *     contract as compaction: vacuum only once readers are past it.
-    *
-    * Returns the number of rows deleted. */
+    * Returns the number of rows deleted; deleting nothing commits no
+    * version. */
   def delete(spark: SparkSession, predicate: org.apache.spark.sql.Column): Long =
-    cowByPredicate(spark, predicate, "delete", "rows_deleted") { (candDf, candRows) =>
-      // keep rows where the predicate is FALSE or NULL (SQL DELETE
-      // removes only TRUE matches); affected = rows that vanished —
-      // knowable only after the write, so no pre-write short-circuit
-      val keep = candDf.filter(!coalesce(predicate, lit(false)))
-      Right((keep, written => candRows - written))
-    }
+    synchronized { withProcessLock("delete") {
+      val v = version
+      require(v > 0, "nothing to delete")
+      rewrite(spark, "delete", v, rewriteMeta(v), Some(predicate)) { (cands, candRows) =>
+        // affected = rows that vanished — knowable only after the write
+        if (candRows == 0L) None
+        else Some((cands.filter(!coalesce(predicate, lit(false))),
+          written => Some(candRows - written).filter(_ > 0L).map(n => Seq("rows_deleted" -> n))))
+      }.fold(0L)(_("rows_deleted"))
+    } }
 
   /** Row-level UPDATE by predicate — the REDACTION path (PII scrubbing,
-    * transcript rewriting) that complements [[delete]]: same file-granular
-    * copy-on-write (only files whose stats admit a match are read and
-    * rewritten), but matching rows are TRANSFORMED instead of dropped.
-    * `set` maps existing column names to replacement expressions; values
-    * are cast to the column's declared type so rewritten files never
-    * drift from the table schema, and updating a directory-PARTITION
-    * column moves rows to their new `col=value` dirs on rewrite (the
-    * partitionBy write re-derives the layout). NULL-predicate rows are
-    * untouched (SQL UPDATE semantics). Returns the number of rows whose
-    * predicate evaluated TRUE. */
+    * transcript rewriting) that complements [[delete]]: the same
+    * file-granular copy-on-write [[rewrite]], but matching rows are
+    * TRANSFORMED instead of dropped. `set` maps existing column names to
+    * replacement expressions; values are cast to the column's declared
+    * type so rewritten files never drift from the table schema, and
+    * updating a directory-PARTITION column moves rows to their new
+    * `col=value` dirs on rewrite (the partitionBy write re-derives the
+    * layout). NULL-predicate rows are untouched (SQL UPDATE semantics).
+    * Returns the number of rows whose predicate evaluated TRUE; zero
+    * commits no version. */
   def update(spark: SparkSession, predicate: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column]): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    cowByPredicate(spark, predicate, "update", "rows_updated",
-        persistCandidates = true) { (candDf, _) =>
-      val unknown = set.keySet -- candDf.columns.toSet
-      require(unknown.isEmpty,
-        s"SET columns not in the table schema: ${unknown.mkString(", ")} " +
-          "(update never adds columns — commit a batch with the new schema instead)")
-      val hit = coalesce(predicate, lit(false))
-      // count the TRUE matches in one pass (the candidate relation is
-      // persisted by cowByPredicate across this and the write); zero
-      // matches short-circuits BEFORE paying the rewrite
-      val matched = candDf.filter(hit).count()
-      if (matched == 0L) Left(0L)
-      else {
-        // ONE projection over the original relation: every SET right-hand
-        // side and the predicate see the ORIGINAL row values (SQL UPDATE
-        // semantics — a sequential withColumn fold would re-resolve them
-        // against already-updated columns, so swap-style updates and
-        // predicates on SET columns would silently misbehave). Values are
-        // cast to the column's declared type; under ANSI an uncastable
-        // value errors the job, same as SQL UPDATE.
-        val outCols = candDf.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
+    synchronized { withProcessLock("update") {
+      val v = version
+      require(v > 0, "nothing to update")
+      // persisted: the match count and the write both read the candidates
+      rewrite(spark, "update", v, rewriteMeta(v), Some(predicate), persist = true) { (cands, candRows) =>
+        val hit = coalesce(predicate, lit(false))
+        // zero matches short-circuits BEFORE paying the rewrite
+        val matched = if (candRows == 0L) 0L else {
+          val unknown = set.keySet -- cands.columns.toSet
+          require(unknown.isEmpty,
+            s"SET columns not in the table schema: ${unknown.mkString(", ")} " +
+              "(update never adds columns — commit a batch with the new schema instead)")
+          cands.filter(hit).count()
         }
-        Right((candDf.select(outCols.toIndexedSeq: _*), _ => matched))
-      }
-    }
+        if (matched == 0L) None
+        else {
+          // ONE projection over the original relation: every SET right-hand
+          // side and the predicate see the ORIGINAL row values (SQL UPDATE
+          // semantics — a sequential withColumn fold would re-resolve them
+          // against already-updated columns, so swap-style updates and
+          // predicates on SET columns would silently misbehave). Values are
+          // cast to the column's declared type; under ANSI an uncastable
+          // value errors the job, same as SQL UPDATE.
+          val outCols = cands.schema.fields.toIndexedSeq.map { f =>
+            set.get(f.name) match {
+              case Some(e) => when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+              case None => col(f.name)
+            }
+          }
+          Some((cands.select(outCols: _*), _ => Some(Seq("rows_updated" -> matched))))
+        }
+      }.fold(0L)(_("rows_updated"))
+    } }
   }
 
   /** Row-level MERGE (upsert) — the CDC-ingest shape that completes the
     * DML triple next to [[delete]] and [[update]]: each source row either
     * REPLACES the target row with the same key or is INSERTED, in ONE
-    * commit. File-granular copy-on-write like its siblings:
+    * commit. The same file-granular copy-on-write [[rewrite]]:
     *
-    *  1. the source's per-key min/max envelope becomes a range predicate;
-    *     manifest stats prove which files cannot hold a matching key
-    *     (same sound translator as delete — [[DeletePruning]]), so a
-    *     CDC batch keyed on a clustered/partitioned column rewrites a
-    *     few files, not the table.
-    *  2. candidate files are read, rows whose key appears in the source
-    *     are dropped (their replacement is the source row), and the
-    *     survivors + ALL source rows are rewritten together — matched
-    *     keys updated, new keys inserted, untouched files referenced by
-    *     path in the same rewrite manifest.
+    *  1. the source's keys become the candidate predicate (exact per-key
+    *     IN lists for a small source, the per-key min/max envelope
+    *     otherwise), so a CDC batch keyed on a clustered/partitioned
+    *     column rewrites a few files, not the table.
+    *  2. candidate rows whose key appears in the source are dropped (their
+    *     replacement is the source row), and the survivors + ALL source
+    *     rows are rewritten together — matched keys updated, new keys
+    *     inserted, untouched files referenced by path in the same rewrite
+    *     manifest.
     *  3. `batchId` rides in the manifest's `mergeIds` list — a namespace
     *     DISJOINT from streaming batchIds (a collision would make the
     *     exactly-once sink silently drop a future micro-batch) and
@@ -1280,10 +1272,8 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // merge ids live in their OWN namespace (manifest mergeIds), never the
     // streaming batchId space: a user-chosen merge id equal to a future
     // checkpoint batchId would otherwise make the exactly-once sink treat
-    // that micro-batch as already committed and silently drop it.
-    // Resolved once — reused for the replay check and the publish below.
-    val priorMergeIds = mergedBatchIds
-    if (priorMergeIds.contains(batchId)) return MergeStats(0L, 0L) // replay
+    // that micro-batch as already committed and silently drop it
+    if (mergedBatchIds.contains(batchId)) return MergeStats(0L, 0L) // replay
     val next = rewriteMeta(v)
     val tableSchema = next.schema
     val tCols = tableSchema.fields.map(_.name).toSet
@@ -1296,7 +1286,6 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     // sanity aggregate, the prune envelope, the anti-join and the write
     val src0 = source.select(tableSchema.fields.toIndexedSeq
       .map(f => col(f.name).cast(f.dataType).as(f.name)): _*).persist()
-    var candDf: DataFrame = null
     try {
       // ONE aggregate for the whole key contract + prune envelope: row
       // count, distinct keys, null keys, per-key min/max
@@ -1338,77 +1327,36 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
         } else keys.zipWithIndex.map { case (k, i) =>
           col(k) >= lit(a.get(3 + 2 * i)) && col(k) <= lit(a.get(4 + 2 * i))
         }.reduce(_ && _)
-      val cond = DeletePruning.analyzedCondition(readVersion(spark, v), keyPred)
-      val pruneFilters = DeletePruning.filtersFor(cond)
-      val allFiles = snapshotManifests(v).flatMap(m => manifest(m).files)
-      val (statCands, untouched0) = allFiles.partition(f => FilePrune.keep(f, pruneFilters))
-      val (cands, untouched) = bloomPruneFiles(spark, statCands, untouched0, pruneFilters, next)
-
-      // `updated` counts MATCHED SOURCE KEYS (semi-join from the source
-      // side), not matched target rows: an append-only table may hold
-      // duplicate keys, and counting target rows would both corrupt the
-      // stats (inserted = srcCount - updated could go negative) and hide
-      // the real semantics — ALL target rows of a matched key are
-      // replaced by the one source row (the upsert normalizes duplicates).
-      val updated =
-        if (cands.isEmpty) 0L
-        else {
-          candDf = readCandidateFiles(spark, cands, tableSchema).persist()
-          src0.join(candDf.select(keys.map(col): _*), keys, "left_semi").count()
-        }
-      val inserted = srcCount - updated
-      // survivors of the candidate files (keys absent from the source)
-      // plus ALL source rows — new keys insert, matched keys carry the
-      // source's values
-      val outRows =
-        if (candDf == null) src0
-        else candDf.join(src0.select(keys.map(col): _*), keys, "left_anti")
-          .unionByName(src0)
-
-      val dataDir = p("data", s"merge=v$v")
-      writeParquet(outRows, next.partitionBy.filter(outRows.columns.contains), next, dataDir)
-      val written = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), tableSchema)
-      val (live, empty) = written.partition(_.rows > 0)
-      empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
-
-      publishRewrite("merge", v, untouched ++ live, committedBatchIds.toSeq,
-        (priorMergeIds + batchId).toSeq,
-        s"""{"rows_updated":$updated,"rows_inserted":$inserted}""", next)
-      if (idsCacheVersion == v) idsCacheVersion = v + 1 // streaming ids unchanged
-      MergeStats(updated, inserted)
-    } finally {
-      src0.unpersist()
-      if (candDf != null) { candDf.unpersist(); () }
-    }
+      // persisted: the match count and the anti-join both read the candidates
+      val m = rewrite(spark, "merge", v, next, Some(keyPred), persist = true,
+          Some(batchId)) { (cands, candRows) =>
+        // `updated` counts MATCHED SOURCE KEYS (semi-join from the source
+        // side), not matched target rows: an append-only table may hold
+        // duplicate keys, and counting target rows would both corrupt the
+        // stats (inserted = srcCount - updated could go negative) and hide
+        // the real semantics — ALL target rows of a matched key are
+        // replaced by the one source row (the upsert normalizes duplicates).
+        val updated =
+          if (candRows == 0L) 0L
+          else src0.join(cands.select(keys.map(col): _*), keys, "left_semi").count()
+        // survivors of the candidate files (keys absent from the source)
+        // plus ALL source rows — new keys insert, matched keys carry the
+        // source's values
+        val out =
+          if (candRows == 0L) src0
+          else cands.join(src0.select(keys.map(col): _*), keys, "left_anti").unionByName(src0)
+        Some((out, _ => Some(Seq("rows_updated" -> updated, "rows_inserted" -> (srcCount - updated)))))
+      }.get
+      MergeStats(m("rows_updated"), m("rows_inserted"))
+    } finally { src0.unpersist(); () }
   } }
 
-  /** Read a set of manifest-listed files as one DataFrame, grouping by
-    * directory-encoded partition values and re-injecting them as typed
-    * constants (they live in the path, not the files, and downstream
-    * predicates/joins may reference them). Shared by the CoW rewrites
-    * ([[delete]]/[[update]]) and [[merge]]. */
-  private def readCandidateFiles(spark: SparkSession, cands: Seq[FileInfo],
-                                 tableSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val groups = cands.groupBy(_.pv).toSeq
-    val dfs = groups.map { case (pv, fs) =>
-      val fileSchema = org.apache.spark.sql.types.StructType(
-        tableSchema.fields.filterNot(f => pv.contains(f.name)))
-      val base = spark.read.schema(fileSchema).parquet(fs.map(_.path): _*)
-      pv.toSeq.sortBy(_._1).foldLeft(base) { case (d, (c, ov)) =>
-        val dt = tableSchema.fields.find(_.name == c).map(_.dataType)
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        d.withColumn(c, lit(ov.orNull).cast(dt))
-      }
-    }
-    dfs.reduce(_ unionByName _)
-  }
-
-  /** Second DML pruning stage behind min/max stats: per-file parquet
-    * bloom filters (the takedown-by-id path — stats on a non-clustered
-    * id admit nearly every file; the bloom proves non-membership).
-    * Footer reads are parallel and bounded, and only happen when the
-    * table declares bloom columns. Soundness lives in [[BloomPrune.keep]]:
-    * any doubt keeps the file. Returns (still-candidates, untouched +
+  /** Second pruning stage behind min/max stats: per-file parquet bloom
+    * filters (the takedown-by-id path — stats on a non-clustered id admit
+    * nearly every file; the bloom proves non-membership). Footer reads
+    * are parallel and bounded, and only happen when the table declares
+    * bloom columns. Soundness lives in [[BloomPrune.keep]]: any doubt
+    * keeps the file. Returns (still-candidates, untouched +
     * bloom-pruned). */
   private def bloomPruneFiles(spark: SparkSession, statCands: Seq[FileInfo],
                               untouched: Seq[FileInfo],
@@ -1423,84 +1371,65 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     (k.map(_._1), untouched ++ d.map(_._1))
   }
 
-  /** Shared copy-on-write machinery for predicate-scoped rewrites
-    * ([[delete]], [[update]]): stats-prune to candidate files, read them
-    * with partition values re-injected, hand the unioned candidates to
-    * `transform` (which returns the replacement rows and an
-    * affected-count function of the written row total), and publish one
-    * rewrite manifest referencing untouched files by path. Returns the
-    * affected-row count; provably-no-match predicates and fully-pruned
-    * tables return 0 without committing a version. */
-  private def cowByPredicate(spark: SparkSession,
-                             predicate: org.apache.spark.sql.Column,
-                             tag: String, metricName: String,
-                             persistCandidates: Boolean = false)
-      (transform: (DataFrame, Long) => Either[Long, (DataFrame, Long => Long)]): Long =
-    synchronized { withProcessLock(tag) {
-      val v = version
-      require(v > 0, s"nothing to $tag")
-      val next = rewriteMeta(v)
-      val batchIds = committedBatchIds
-      val allFiles = snapshotManifests(v).flatMap(m => manifest(m).files)
+  /** The rows a [[rewrite]] writes, and the op's manifest metrics as a
+    * function of the rows written (None: the rewrite changed nothing). */
+  private type Rewritten = (DataFrame, Long => Option[Seq[(String, Long)]])
 
-      // resolve the predicate against the table (loud failure on unknown
-      // columns), then translate its conjuncts for stats-based pruning —
-      // the translation soundness contract lives in [[DeletePruning]]
-      // (property-tested: a file containing a matching row is NEVER
-      // pruned)
-      val cond = DeletePruning.analyzedCondition(readVersion(spark, v), predicate)
-      // a provably-unsatisfiable predicate (empty IN list, literal false)
-      // matches nothing: return without rewriting a byte or burning a
-      // version — without this, isin() with no args rewrote every file as
-      // a no-op copy
-      if (DeletePruning.neverMatches(cond)) return 0L
-      val pruneFilters = DeletePruning.filtersFor(cond)
-      val (statCands, untouched0) = allFiles.partition(f => FilePrune.keep(f, pruneFilters))
-      val (cands, untouched) = bloomPruneFiles(spark, statCands, untouched0, pruneFilters, next)
-      // stats (+ blooms) prove no file can contain a match: nothing to
-      // do, commit no version
-      if (cands.isEmpty) return 0L
-
-      val dataDir = p("data", s"$tag=v$v")
-      val candRows = cands.map(_.rows).sum
-      var affectedOf: Long => Long = identity
-      // persisted only when the transform needs TWO passes (update counts
-      // matches, then writes — in foreachBatch-style plans every action
-      // recomputes the source);
-      // delete's single write pass must not pay full candidate-set
-      // caching on the 100 TB takedown path. Released after the write.
-      val unioned = readCandidateFiles(spark, cands, next.schema)
-      val candDf = if (persistCandidates) unioned.persist() else unioned
-      val written = try {
-        transform(candDf, candRows) match {
-          case Left(affected) =>
-            // the transform proved the result before writing a byte
-            // (update with zero matches): full no-op
-            return affected
-          case Right((outRows, affectedOf0)) =>
-            affectedOf = affectedOf0
-            writeParquet(outRows, next.partitionBy.filter(outRows.columns.contains), next, dataDir)
-            writtenFiles(dataDir, spark.sessionState.newHadoopConf(), next.schema)
-        }
-      } finally { if (persistCandidates) { candDf.unpersist(); () } }
-      // empty outputs carry no rows — drop them from the manifest and
-      // the disk rather than shipping 0-row scan units forever
-      val (live, empty) = written.partition(_.rows > 0)
-      empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
-      val affected = affectedOf(live.map(_.rows).sum)
-      // the rewrite changed nothing (predicate matched no candidate row):
-      // discard the identical copies and keep the current version — a
-      // no-op must not bump the snapshot chain or orphan dead originals
-      if (affected == 0L) {
-        deleteTree(dataDir) // whole tree: stray _SUCCESS/empty value dirs too
-        return 0L
+  /** The one copy-on-write rewrite behind [[compact]], [[delete]],
+    * [[update]] and [[merge]], run under the caller's locks on version
+    * `v` (`next` = its [[rewriteMeta]]):
+    *
+    *  1. candidates: every file of `v`, or only the files whose manifest
+    *     stats ([[DeletePruning]] → [[FilePrune.keep]]) and blooms
+    *     ([[bloomPruneFiles]]) admit a row where `candidates` is TRUE; a
+    *     provably unsatisfiable predicate admits none. A file with a
+    *     matching row is never left out (property-tested).
+    *  2. the candidates are read through the V2 source — pinned to
+    *     exactly those files, one task each, when a predicate chose them —
+    *     with partition values re-injected as typed constants, persisted
+    *     when the transform reads them twice;
+    *  3. `transform` gets that read and its row count and returns the
+    *     [[Rewritten]] rows, or None when it proves a no-op before writing;
+    *  4. the rows are written under `data/<tag>=v<v>/` in the table's
+    *     partition layout, empty outputs dropped, and one rewrite manifest
+    *     (untouched files by reference + the written ones) published as
+    *     v+1 by [[publishRewrite]].
+    *
+    * Returns the published metrics; a no-op commits no version and leaves
+    * no data directory behind. */
+  private def rewrite(spark: SparkSession, tag: String, v: Long, next: TableMeta,
+                      candidates: Option[org.apache.spark.sql.Column],
+                      persist: Boolean = false, mergeId: Option[Long] = None)
+                     (transform: (DataFrame, Long) => Option[Rewritten]): Option[Map[String, Long]] = {
+    val all = snapshotManifests(v).flatMap(m => manifest(m).files)
+    val (cands, untouched) = candidates.fold((all, Seq.empty[FileInfo])) { pred =>
+      // resolved against the table: unknown columns fail loudly here
+      val cond = DeletePruning.analyzedCondition(readVersion(spark, v), pred)
+      if (DeletePruning.neverMatches(cond)) (Nil, all)
+      else {
+        val filters = DeletePruning.filtersFor(cond)
+        val (statCands, statPruned) = all.partition(FilePrune.keep(_, filters))
+        bloomPruneFiles(spark, statCands, statPruned, filters, next)
       }
-
-      publishRewrite(tag, v, untouched ++ live, batchIds.toSeq, mergedBatchIds.toSeq,
-        s"""{"$metricName":$affected}""", next)
-      if (idsCacheVersion == v) idsCacheVersion = v + 1 // same ids, new version
-      affected
-    } }
+    }
+    // compaction reads the whole version; a predicate's candidates are pinned
+    val read = scan(spark, v, next.schema, candidates.map(_ => cands))
+    val in = if (persist) read.persist() else read
+    val dataDir = p("data", s"$tag=v$v")
+    try transform(in, cands.map(_.rows).sum).flatMap { case (out, metricsOf) =>
+      writeParquet(out, next.partitionBy.filter(out.columns.contains), next, dataDir)
+      // empty outputs carry no rows: off the manifest and the disk
+      val (live, empty) = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), next.schema)
+        .partition(_.rows > 0)
+      empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
+      val metrics = metricsOf(live.map(_.rows).sum)
+      if (metrics.isEmpty) deleteTree(dataDir) // whole tree: stray _SUCCESS/empty value dirs too
+      metrics.map { m =>
+        publishRewrite(tag, v, untouched ++ live, m, mergeId, next)
+        m.toMap
+      }
+    } finally if (persist) { in.unpersist(); () }
+  }
 }
 
 /** Exactly-once streaming sink over [[GraftTable]]: plug into

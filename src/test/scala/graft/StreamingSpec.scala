@@ -533,6 +533,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(t.read(s).select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
     assert(t.dataFiles.toSet == beforeIn.filterNot(_.contains("batch=1")),
       s"$beforeIn -> ${t.dataFiles.toSet}")
+    // a rewrite writes one file per candidate file: two t0 files stay two
+    // files, though a plain read groups a partition value into one task
+    sink.write(Seq((6L, "t0")).toDF("id", "tenant").coalesce(1), 2L)
+    assert(t.update(s, col("tenant") === "t0", Map("id" -> (col("id") + 10))) == 2L)
+    assert(t.read(s).select("id").as[Long].collect().sorted.toSeq == Seq(3L, 11L, 16L))
+    assert(t.dataFiles.count(_.contains("update=")) == 2, t.dataFiles)
   }
 
   test("egress sink: at-least-once forward survives a flaky receiver, no loss") {
@@ -1236,6 +1242,23 @@ class StreamingSpec extends AnyFunSuite {
     val plain = new GraftTable(Files.createTempDirectory("graft_types").toString)
     plain.commit(df, 0L)
     assert(rows(plain.read(s)) == expected)
+    // the DML rewrites read their candidates the same way: typed partition
+    // constants, permuted column order; each result equals a DataFrame replay
+    assert(part.delete(s, col("b") === 2) == 1L)
+    val afterDelete = df.filter(!coalesce(col("b") === 2, lit(false)))
+    assert(rows(part.read(s)) == rows(afterDelete))
+    val hit = col("codec") === "wav"
+    assert(part.update(s, hit, Map("s" -> lit(7), "d" -> lit("1.25"))) == 1L)
+    val afterUpdate = afterDelete
+      .withColumn("s", when(hit, lit(7).cast(ShortType)).otherwise(col("s")))
+      .withColumn("d", when(hit, lit("1.25").cast(DecimalType(10, 2))).otherwise(col("d")))
+    assert(rows(part.read(s)) == rows(afterUpdate))
+    val src = s.createDataFrame(java.util.Arrays.asList(
+      Row(2L, "flac", 5.toShort, 6.toByte, new java.math.BigDecimal("9.99")),
+      Row(4L, "opus", null, 1.toByte, new java.math.BigDecimal("0.01"))), schema)
+    assert(part.merge(s, src, Seq("id"), 0L) == graft.table.MergeStats(1L, 1L))
+    val afterMerge = afterUpdate.join(src.select("id"), Seq("id"), "left_anti").unionByName(src)
+    assert(rows(part.read(s)) == rows(afterMerge))
   }
 
   test("GraftTable time travel: historical snapshots stay readable") {

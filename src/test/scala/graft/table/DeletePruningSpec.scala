@@ -1,6 +1,9 @@
 package graft.table
 
 import java.nio.file.Files
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * nulls, float-rounding canaries, >2^53 longs, and non-BMP strings.
   * Expected matches come from Catalyst itself (one job evaluates every
   * predicate as a boolean column next to input_file_name), so the test
-  * can never drift from Spark's own cast/comparison semantics. */
+  * can never drift from Spark's own cast/comparison semantics. The same
+  * predicates also run as filtered reads: Spark's own pushdown into
+  * [[GraftScan]] must plan every file with a matching row and return
+  * exactly the matching rows. */
 class DeletePruningSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
@@ -88,7 +94,11 @@ class DeletePruningSpec extends AnyFunSuite {
     def genPredicate(): Column =
       (1 to 1 + rnd.nextInt(2)).map(_ => genTerm()).reduce(_ && _)
 
-    val preds = Seq.fill(300)(genPredicate())
+    // shapes that provably match nothing: the translator short-circuits
+    // them, and Spark plans no scan at all for them
+    val neverShapes = Seq(col("i").isin(), lit(false), col("l") > 0 && lit(false),
+      typedLit[java.lang.Boolean](null))
+    val preds = Seq.fill(300)(genPredicate()) ++ neverShapes
     // Catalyst evaluates every predicate in ONE pass; TRUE per file is the
     // ground truth the pruning must respect
     val cols = col("_file") +: preds.zipWithIndex.map { case (p, i) =>
@@ -98,10 +108,21 @@ class DeletePruningSpec extends AnyFunSuite {
       .select(cols: _*).collect()
     def canon(path: String): String =
       java.nio.file.Paths.get(path.stripPrefix("file:")).toAbsolutePath.normalize.toString
+    def paths(ip: InputPartition): Seq[String] = ip match {
+      case f: FilePartition => f.files.toSeq.map(pf => canon(pf.toPath.toUri.getPath))
+      case k: GraftKeyedInputPartition => paths(k.part)
+    }
+    // the files a filtered read plans; None = no scan planned at all
+    def planned(p: Column): Option[Set[String]] = {
+      val scans = df.filter(p).queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+      if (scans.isEmpty) None else Some(scans.flatMap(_.inputPartitions).flatMap(paths).toSet)
+    }
 
     var translated = 0
+    var never = 0
     preds.zipWithIndex.foreach { case (p, i) =>
-      val matchingFiles = evaluated.filter(_.getBoolean(i + 1)).map(r => canon(r.getString(0))).toSet
+      val matching = evaluated.filter(_.getBoolean(i + 1))
+      val matchingFiles = matching.map(r => canon(r.getString(0))).toSet
       val cond = DeletePruning.analyzedCondition(df, p)
       val filters = DeletePruning.filtersFor(cond)
       if (filters.nonEmpty) translated += 1
@@ -110,9 +131,19 @@ class DeletePruningSpec extends AnyFunSuite {
       assert(lost.isEmpty,
         s"predicate #$i [$p] -> filters $filters pruned file(s) with matching rows: $lost")
       // the never-match short-circuit must agree with ground truth too
-      if (DeletePruning.neverMatches(cond))
+      val scanned = planned(p)
+      if (DeletePruning.neverMatches(cond)) {
+        never += 1
         assert(matchingFiles.isEmpty, s"predicate #$i [$p] declared unsatisfiable but matched")
+        assert(scanned.isEmpty, s"predicate #$i [$p] matches nothing but planned a scan")
+      }
+      // the read path: Spark's pushdown into the scan keeps every file
+      // with a matching row, and the filtered read returns exactly them
+      val unplanned = matchingFiles -- scanned.getOrElse(Set.empty)
+      assert(unplanned.isEmpty, s"predicate #$i [$p] read skipped file(s) with matching rows: $unplanned")
+      assert(df.filter(p).count() == matching.length, s"predicate #$i [$p]: filtered count")
     }
+    assert(never >= neverShapes.size, s"only $never predicates short-circuited")
     // the generator must actually exercise the translator, not just the
     // conservative no-filter path
     assert(translated > 200, s"only $translated/300 predicates translated — generator too weak")
