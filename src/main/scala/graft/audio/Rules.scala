@@ -1,7 +1,7 @@
 package graft.audio
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{array, lit, struct}
+import org.apache.spark.sql.{Column, GraftPlans, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types._
 
 /** The decoded payload of a rule — the analog of the reference's typed
@@ -75,13 +75,76 @@ object Rules {
     StructField("ts_offset_s", LongType),
   ))
 
+  /** Type of [[literal]]'s `e`: every event column that depends only on the
+    * rule's payload, in the order [[derive]] yields them. `risk_score` and
+    * `compliance_status` are the two that always have a value (as the
+    * per-row CASE chains they replace did); `event_description` is
+    * `description_prefix ‖ clip_id ‖ description_suffix`. */
+  val derivedSchema: StructType = StructType(Seq(
+    StructField("risk_score", DoubleType, nullable = false),
+    StructField("finding_severity", StringType),
+    StructField("finding_title", StringType),
+    StructField("finding_type", StringType),
+    StructField("compliance_control", StringType),
+    StructField("compliance_requirements", StringType),
+    StructField("compliance_standards", StringType),
+    StructField("compliance_status", StringType, nullable = false),
+    StructField("description_prefix", StringType),
+    StructField("description_suffix", StringType),
+  ))
+
   /** Type of one rule element in [[literal]]. */
   val ruleStruct: StructType = StructType(Seq(
     StructField("rule_id", StringType),
     StructField("pattern", StringType),
     StructField("decode_ok", BooleanType),
     StructField("r", payloadSchema),
+    StructField("e", derivedSchema, nullable = false),
   ))
+
+  /** Type of [[literal]]: a rule array holds no NULL element. */
+  val ruleArray: ArrayType = ArrayType(ruleStruct, containsNull = false)
+
+  private def nullIfEmpty(s: String): String = if (s == null || s.isEmpty) null else s
+
+  /** The rule-only event columns of one payload (reference
+    * transformToSecurityEvent, processor.go:345-460), computed once per
+    * rule instead of once per event row. Case-sensitive throughout:
+    *  - severity (M4/M5): an unknown severity maps to MEDIUM yet scores
+    *    0.0 (processor.go:463-493, processor_test.go:398 vs :431); an
+    *    empty one leaves finding_severity unset;
+    *  - title: printf("%s - %s") even when the policy is empty (" - rule");
+    *    an empty rule name gives the bare policy;
+    *  - compliance status (M6): pass → COMPLIANT, anything else →
+    *    NON_COMPLIANT;
+    *  - description template (M3) switched on the result; an empty rule
+    *    name renders as "unknown" (processor.go:359-378).
+    * A malformed payload (None) folds as a payload of NULL fields, so `e`
+    * is never NULL; such a rule never reaches the event mapping. */
+  private def derive(payload: Option[Payload]): Row = {
+    val Payload(_, policy, rule, severity, category, result, _) =
+      payload.getOrElse(Payload(null, null, null, null, null, null, 0L))
+    val (upper, risk) = severity match {
+      case "critical" => ("CRITICAL", 10.0)
+      case "high" => ("HIGH", 8.9)
+      case "medium" => ("MEDIUM", 6.9)
+      case "low" => ("LOW", 3.9)
+      case "" | null => (null, 0.0)
+      case _ => ("MEDIUM", 0.0)
+    }
+    val prefix = result match {
+      case "fail" => "Policy violation on "
+      case "pass" => "Policy check passed on "
+      case "error" => "Policy check error on "
+      case "skip" => "Policy check skipped on "
+      case _ => "Policy evaluation on "
+    }
+    val (pol, rul) = (nullIfEmpty(policy), nullIfEmpty(rule))
+    val title = if (rul == null) policy else if (policy == null) null else s"$policy - $rule"
+    Row(risk, upper, title, pol, rul, pol, nullIfEmpty(category),
+      if (result == "pass") "COMPLIANT" else "NON_COMPLIANT",
+      prefix, " for rule " + Option(rul).getOrElse("unknown"))
+  }
 
   /** Rules that survive the tolerant decode (X3: a malformed payload skips
     * that match, reference processor.go:229-241) and the IN-list status
@@ -91,21 +154,20 @@ object Rules {
   def surviving(allowed: Seq[String]): Seq[RuleDef] =
     all.filter(_.payload.exists(p => allowed.isEmpty || allowed.contains(p.result)))
 
-  /** `rules` as ONE literal Catalyst array of [[ruleStruct]] — the rule set
+  /** `rules` as ONE Catalyst literal of type [[ruleArray]] — the rule set
     * folded into the plan. Each element carries `rule_id`, `pattern`,
-    * `decode_ok` and the decoded payload struct `r` (NULL when the payload
-    * is malformed), so per-clip matching is a pure expression over the
-    * literal (`filter(literal, contains(transcript, pattern))`, see
-    * [[graft.operators.Pipeline.matching]]): no join against the rule set
-    * and no JSON parsing per row. */
+    * `decode_ok`, the decoded payload struct `r` (NULL when the payload is
+    * malformed) and `e`, the rule-only event columns [[derive]]d from it.
+    * Per-clip matching is one kernel call over the literal (see
+    * [[graft.operators.Pipeline.matching]]) and the event mapping reads
+    * `r` and `e` as struct fields: no join against the rule set, no JSON
+    * parsing and no per-rule CASE chain per row. */
   def literal(rules: Seq[RuleDef]): Column =
-    array(rules.map { rd =>
-      val r = rd.payload.fold(lit(null)) { p =>
-        struct(lit(p.message), lit(p.policy), lit(p.rule), lit(p.severity),
-          lit(p.category), lit(p.result), lit(p.tsOffsetS))
-      }
-      struct(lit(rd.ruleId), lit(rd.pattern), lit(rd.decodeOk), r).cast(ruleStruct)
-    }: _*).cast(ArrayType(ruleStruct)) // the cast types the empty array too
+    GraftPlans.column(Literal.create(rules.map { rd =>
+      val r = rd.payload.map(p => Row(p.message, p.policy, p.rule, p.severity, p.category,
+        p.result, p.tsOffsetS)).orNull
+      Row(rd.ruleId, rd.pattern, rd.decodeOk, r, derive(rd.payload))
+    }, ruleArray))
 
   private def sq(s: String): String = "'" + s.replace("'", "''") + "'"
 

@@ -1,13 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftPlans, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal, RuntimeReplaceable, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.audio.Rules
 
 /** One custom SQL function bound to Catalyst the way Spark's own built-ins
   * are: a `RuntimeReplaceable` whose replacement is a single `StaticInvoke`
@@ -58,6 +59,19 @@ object KernelCall {
     fns.foreach { case (name, build) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, build, "scala_udf")
     }
+
+  /** The call `build(args)` as a Column, bound without the function
+    * registry — for plans built in sessions that never [[register]]. */
+  def column(build: Seq[Expression] => Expression, args: Column*): Column =
+    GraftPlans.column(build(args.map(GraftPlans.expression)))
+}
+
+/** The rule-match kernel ([[SqlKernels.ruleMatch]]) over a transcript and a
+  * [[Rules.literal]] rule array. Not a registered SQL function: the events
+  * plans build it with [[KernelCall.column]]. */
+case class RuleMatch(children: Seq[Expression]) extends KernelCall("rule_match", "ruleMatch",
+    Rules.ruleArray, Seq("transcript" -> StringType, "rules" -> Rules.ruleArray)) {
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
 /** Every custom SQL function's kernel in Catalyst's physical types — the
@@ -102,6 +116,25 @@ object SqlKernels {
 
   def resample(pcm: ArrayData, srcHz: Int, dstHz: Int): ArrayData =
     arr(PcmCodec.resample(pcm.toFloatArray(), srcHz, dstHz))
+
+  private val RuleFields = Rules.ruleStruct.length
+  private val PatternOrdinal = Rules.ruleStruct.fieldIndex("pattern")
+
+  /** The elements of `rules` (a [[Rules.literal]] array) whose `pattern`
+    * occurs in `transcript`, in rule order. The elements are returned as
+    * they are, not copied. */
+  def ruleMatch(transcript: UTF8String, rules: ArrayData): ArrayData = {
+    val n = rules.numElements()
+    val hits = new Array[Any](n)
+    var k = 0
+    var i = 0
+    while (i < n) {
+      val rule = rules.getStruct(i, RuleFields)
+      if (transcript.contains(rule.getUTF8String(PatternOrdinal))) { hits(k) = rule; k += 1 }
+      i += 1
+    }
+    new GenericArrayData(hits.take(k))
+  }
 
   /** Σ x·y over the common prefix. */
   def dot(x: ArrayData, y: ArrayData): Double = {

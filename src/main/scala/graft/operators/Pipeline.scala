@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.audio.{RuleDef, Rules}
+import graft.functions.{KernelCall, RuleMatch}
 
 /** The reference's per-record normalize/classify/enrich pipeline
   * (reference: /root/reference/internal/openreports/processor.go:50-320 and
@@ -13,10 +14,14 @@ import graft.audio.{RuleDef, Rules}
   * (processor.go:463-493; pinned by processor_test.go:398 vs :431).
   *
   * Scale notes: the static rule set is folded into the plan as one literal
-  * array ([[Rules.literal]]), so rule matching is a per-row expression — no
-  * join, no exchange, no JSON parsing. The whole match+transform is one
-  * map-only pass over a single scan (PlanSpec-pinned) — embarrassingly
-  * parallel, which is what makes the N→4N ≥0.8 scaling criterion reachable.
+  * array ([[Rules.literal]]) that also carries every event column depending
+  * only on the rule, computed once per rule in Scala. Rule matching is one
+  * compiled kernel call per row ([[matching]]) — no join, no exchange, no
+  * JSON parsing, no lambda — and the mapping reads the per-rule columns as
+  * struct fields. The whole match+explode+transform is one map-only
+  * WholeStageCodegen stage over a single scan (PlanSpec-pinned) —
+  * embarrassingly parallel, which is what makes the N→4N ≥0.8 scaling
+  * criterion reachable.
   */
 object Pipeline {
 
@@ -29,15 +34,16 @@ object Pipeline {
 
   // ------------------------------------------- X1+X3+F2: the match kernel
   /** The rule-match kernel every events path shares: per clip, the array of
-    * `rules` whose pattern occurs in the transcript (X1 substring match over
-    * the rule set folded into the plan by [[Rules.literal]]); NULL when the
-    * gate fails. Tolerant decode (X3) and status filter (F2) are properties
-    * of the static rules, decided when choosing `rules`
-    * ([[Rules.surviving]]), so the row loop does one `contains` per
-    * candidate rule and never parses JSON. */
+    * `rules` whose pattern occurs in the transcript, in rule order (X1
+    * substring match over the rule set folded into the plan by
+    * [[Rules.literal]]); NULL when the gate fails. Tolerant decode (X3) and
+    * status filter (F2) are properties of the static rules, decided when
+    * choosing `rules` ([[Rules.surviving]]), so the row loop does one
+    * `contains` per candidate rule and never parses JSON. The call is a
+    * `StaticInvoke` of [[graft.functions.SqlKernels.ruleMatch]], so it
+    * compiles into the surrounding WholeStageCodegen stage. */
   def matching(rules: Seq[RuleDef]): Column =
-    when(gate, filter(Rules.literal(rules),
-      rr => contains(col("transcript"), rr.getField("pattern"))))
+    when(gate, KernelCall.column(RuleMatch, col("transcript"), Rules.literal(rules)))
 
   /** How many of `rules` match the clip; 0 when the gate fails. */
   def matchCount(rules: Seq[RuleDef]): Column =
@@ -46,11 +52,13 @@ object Pipeline {
     size(coalesce(matching(rules), Rules.literal(Nil)))
 
   /** The kernel's explode: one row per (clip, matching rule) carrying the
-    * rule's `rule_id` and decoded payload struct `r`. */
+    * rule's `rule_id`, decoded payload struct `r` and rule-only event
+    * columns `e`. */
   def explodeMatches(clips: DataFrame, rules: Seq[RuleDef]): DataFrame =
     clips.withColumn("m", explode(matching(rules)))
       .withColumn("rule_id", col("m.rule_id"))
       .withColumn("r", col("m.r"))
+      .withColumn("e", col("m.e"))
       .drop("m")
 
   // ------------------------------------------------------- E2: event key
@@ -66,43 +74,6 @@ object Pipeline {
     val tail = substring_index(clipId, "-", -2)
     when(length(tail) < length(clipId),
       clipId.substr(lit(1), length(clipId) - length(tail) - 1))
-  }
-
-  // ------------------------------------------------- M4/M5/M6 lookup maps
-  /** mapSeverityToUppercase (M4): case-sensitive; anything unknown → MEDIUM.
-    * Caller is responsible for the "empty severity ⇒ unset" rule. */
-  def severityUpper(sev: Column): Column =
-    when(sev === "critical", "CRITICAL")
-      .when(sev === "high", "HIGH")
-      .when(sev === "medium", "MEDIUM")
-      .when(sev === "low", "LOW")
-      .otherwise("MEDIUM")
-
-  /** calculateRiskScoreFromSeverity (M5): computed from the RAW severity,
-    * so unknown/empty → 0.0 even when finding_severity says MEDIUM. */
-  def riskScore(sev: Column): Column =
-    when(sev === "critical", 10.0)
-      .when(sev === "high", 8.9)
-      .when(sev === "medium", 6.9)
-      .when(sev === "low", 3.9)
-      .otherwise(0.0)
-
-  /** mapResultToComplianceStatus (M6): pass → COMPLIANT, everything else →
-    * NON_COMPLIANT. */
-  def complianceStatus(result: Column): Column =
-    when(result === "pass", "COMPLIANT").otherwise("NON_COMPLIANT")
-
-  // --------------------------------------------------------- M3: template
-  /** event.description template switched on result status (M3); empty rule
-    * name renders as "unknown" (reference processor.go:359-378). */
-  def eventDescription(result: Column, scopeName: Column, rule: Column): Column = {
-    val r = when(rule.isNull || rule === "", lit("unknown")).otherwise(rule)
-    val tail = concat(scopeName, lit(" for rule "), r)
-    when(result === "fail", concat(lit("Policy violation on "), tail))
-      .when(result === "pass", concat(lit("Policy check passed on "), tail))
-      .when(result === "error", concat(lit("Policy check error on "), tail))
-      .when(result === "skip", concat(lit("Policy check skipped on "), tail))
-      .otherwise(concat(lit("Policy evaluation on "), tail))
   }
 
   // ------------------------------------------------------- E1: owner refs
@@ -125,19 +96,16 @@ object Pipeline {
     * shared verbatim by [[events]] and [[fullPipeline]] (which wraps the
     * non-carry columns in a pass-through guard). Expects columns `clip_id
     * sr_hz dur_ms codec tenant_id event_id event_time rule_id` plus the
-    * decoded payload struct `r`. Event ids are content-derived (sha256)
-    * instead of UUIDv4 — replay-stable exactly-once output requires
-    * deterministic ids (SURVEY §7.6.2); documented divergence from
-    * reference M2. */
+    * rule element's decoded payload struct `r` and its rule-only event
+    * columns `e` (the severity/risk/compliance lookups M4-M6, the title and
+    * the description template M3, derived once per rule by
+    * [[Rules.literal]]). Event ids are content-derived (sha256) instead of
+    * UUIDv4 — replay-stable exactly-once output requires deterministic ids
+    * (SURVEY §7.6.2); documented divergence from reference M2. */
   def eventFields: Seq[(String, Column)] = {
-    val sev = col("r.severity")
-    val res = col("r.result")
-    val pol = col("r.policy")
-    val rul = col("r.rule")
-    val cat = col("r.category")
     val off = col("r.ts_offset_s")
-    val rewritten = when(off > 0,
-        col("event_time") + make_interval(lit(0), lit(0), lit(0), lit(0), lit(0), lit(0), off.cast("double")))
+    // whole seconds added to the micros, in event_time's own type
+    val rewritten = when(off > 0, timestamp_add("SECOND", off, col("event_time")))
       .otherwise(col("event_time"))
     Seq(
       "clip_id" -> col("clip_id"),
@@ -152,29 +120,28 @@ object Pipeline {
       "event_category" -> lit("COMPLIANCE"),
       "event_name" -> lit("Compliance finding event"),
       "event_type" -> lit("COMPLIANCE_FINDING"),
-      "event_description" -> eventDescription(res, col("clip_id"), rul),
+      "event_description" -> concat(col("e.description_prefix"), col("clip_id"), col("e.description_suffix")),
       "product_name" -> lit(""),
       "product_vendor" -> lit(""),
       "smartscape_type" -> when(col("codec") === "wav", "AUDIO_CLIP"),
-      "risk_score" -> riskScore(sev),
+      "risk_score" -> col("e.risk_score"),
       "object_id" -> concat(lit("uid-"), md5(col("clip_id"))),
       "object_type" -> col("codec"),
       "finding_description" -> col("r.message"),
       "finding_id" -> sha2(concat_ws("|", col("clip_id"), col("rule_id"), lit("finding")), 256),
-      "finding_severity" -> when(sev.isNotNull && sev =!= "", severityUpper(sev)),
+      "finding_severity" -> col("e.finding_severity"),
       "finding_time_created" -> when(off > 0, date_format(rewritten, "yyyy-MM-dd'T'HH:mm:ss'Z'")),
-      // title: printf("%s - %s") even when policy is empty (" - rule")
-      "finding_title" -> when(rul =!= "", concat(pol, lit(" - "), rul)).otherwise(pol),
-      "finding_type" -> when(pol =!= "", pol),
+      "finding_title" -> col("e.finding_title"),
+      "finding_type" -> col("e.finding_type"),
       "finding_url" -> lit(""),
-      "compliance_control" -> when(rul =!= "", rul),
-      "compliance_requirements" -> when(pol =!= "", pol),
-      "compliance_standards" -> when(cat =!= "", cat),
-      "compliance_status" -> complianceStatus(res),
+      "compliance_control" -> col("e.compliance_control"),
+      "compliance_requirements" -> col("e.compliance_requirements"),
+      "compliance_standards" -> col("e.compliance_standards"),
+      "compliance_status" -> col("e.compliance_status"),
       "body" -> col("r.message"),
       "event_key" -> eventKey(col("clip_id")),
       "event_time" -> rewritten,
-      "match_status" -> res)
+      "match_status" -> col("r.result"))
   }
 
   /** Columns the R2 pass-through branch carries through unchanged; every
@@ -213,6 +180,7 @@ object Pipeline {
       .withColumn("mrule", explode_outer(matching(Rules.surviving(allowed))))
       .withColumn("rule_id", col("mrule.rule_id"))
       .withColumn("r", col("mrule.r"))
+      .withColumn("e", col("mrule.e"))
     val isEvent = col("mrule").isNotNull
     exploded.select(eventFields.filterNot(_._1 == "match_status").map { case (n, c) =>
       (if (carryCols(n)) c else when(isEvent, c)).as(n)

@@ -412,11 +412,13 @@ final class GraftScan(table: GraftTable, schema: StructType,
   // partition columns; when the manifests PROVE that (min == max and an
   // exact ZERO null count — parquet bounds never cover nulls — for every
   // selected file), the scan reports KeyGroupedPartitioning and Spark plans
-  // groupBy/join on those keys WITHOUT a shuffle (enable
-  // spark.sql.sources.v2.bucketing.enabled; Spark groups same-key files
-  // into one partition). Any non-conforming file — pre-partitioning history,
-  // missing stats, unsupported type — degrades the whole scan to unknown
-  // partitioning: a plain scan, never a wrong answer.
+  // groupBy/join on those keys WITHOUT a shuffle. Spark honours this by
+  // default (spark.sql.sources.v2.bucketing.enabled is on) and groups all
+  // files of one key into one partition, so a plain read of a
+  // directory-partitioned table also runs ONE task per partition value.
+  // Any non-conforming file — pre-partitioning history, missing stats,
+  // unsupported type — degrades the whole scan to unknown partitioning: a
+  // plain scan, never a wrong answer.
 
   /** Typed Catalyst partition-key value for one key column, or None if
     * this file cannot prove single-valuedness for it. */

@@ -38,6 +38,20 @@ class CodegenSpec extends AnyFunSuite {
     assert(out2.isNullAt(0) && out2.isNullAt(1))
   }
 
+  test("RuleMatch codegen compiles, matches eval, keeps rule order, null transcript gives null") {
+    val Seq(tr) = refs(StringType)
+    val rules = org.apache.spark.sql.GraftPlans.expression(graft.audio.Rules.literal(graft.audio.Rules.all))
+    val m = RuleMatch(Seq(tr, rules)).replacement
+    val proj = GenerateUnsafeProjection.generate(Seq(m))
+    def ids(a: ArrayData): Seq[String] =
+      (0 until a.numElements()).map(i => a.getStruct(i, graft.audio.Rules.ruleStruct.length).getString(0))
+    val row = InternalRow(str("user 4, then access denied"))
+    assert(ids(proj(row).getArray(0)) == Seq("r-access-denied", "r-malformed"))
+    assert(ids(m.eval(row).asInstanceOf[ArrayData]) == Seq("r-access-denied", "r-malformed"))
+    assert(ids(proj(InternalRow(str("nothing"))).getArray(0)).isEmpty)
+    assert(proj(InternalRow(null)).isNullAt(0) && m.eval(InternalRow(null)) == null)
+  }
+
   test("PcmSynth/PcmDecode codegen compiles, matches eval, handles nulls") {
     val Seq(freq, sr, dur, codec) = refs(DoubleType, IntegerType, IntegerType, StringType)
     val synth = PcmSynth(Seq(freq, sr, dur, codec))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, MakeInterval}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,9 +33,26 @@ class PlanSpec extends AnyFunSuite {
       s"the static rule payloads must not be JSON-decoded per row:\n$plan")
   }
 
+  /** The match kernel compiles: the explode runs inside a WholeStageCodegen
+    * stage (a lambda, being interpreted, would keep the Generate out), and
+    * the plan holds no lambda and no `make_interval` (the offset is a
+    * `timestamp_add`). */
+  private def assertCodegenKernel(plan: SparkPlan): Unit = {
+    val generates = plan.collect { case g: GenerateExec => g }
+    val compiled = plan.collect { case w: WholeStageCodegenExec => w.child.collect { case g: GenerateExec => g } }.flatten
+    assert(generates.nonEmpty && compiled.size == generates.size,
+      s"the Generate must sit inside WholeStageCodegen:\n$plan")
+    val exprs = plan.collect { case p => p.expressions }.flatten
+    assert(!exprs.exists(_.exists(_.isInstanceOf[LambdaFunction])), s"lambda in the events plan:\n$plan")
+    assert(!exprs.exists(_.exists(_.isInstanceOf[MakeInterval])), s"make_interval in the events plan:\n$plan")
+  }
+
   test("events pipeline: single scan, no join, no exchange, no JSON decode") {
-    assertKernelPlan(planOf(Pipeline.events(spark, ClipTable.clips(spark, sf))))
-    assertKernelPlan(planOf(Pipeline.events(spark, ClipTable.clips(spark, sf), Seq("fail"))))
+    Seq(Nil, Seq("fail")).foreach { allowed =>
+      val plan = Pipeline.events(spark, ClipTable.clips(spark, sf), allowed).queryExecution.executedPlan
+      assertKernelPlan(plan.toString)
+      assertCodegenKernel(plan)
+    }
   }
 
   test("streaming eventsObserved: single scan, no join, no exchange, no JSON decode") {
@@ -47,8 +66,9 @@ class PlanSpec extends AnyFunSuite {
       ms.addData(Clip("clip-t0-s0-0000000001", 16000, 500, "wav", "login ok user 4",
         java.sql.Timestamp.valueOf("2025-09-19 10:00:00"), 7L, 1L))
       q.processAllAvailable()
-      assertKernelPlan(q.asInstanceOf[StreamingQueryWrapper]
-        .streamingQuery.lastExecution.executedPlan.toString)
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assertKernelPlan(plan.toString)
+      assertCodegenKernel(plan)
     } finally q.stop()
   }
 

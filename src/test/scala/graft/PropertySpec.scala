@@ -71,6 +71,63 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("match kernel equals the filter lambda it replaced; edges: empty transcript, rule order, gate, no rules") {
+    import org.apache.spark.sql.functions._
+    val rules = Rules.surviving(Nil)
+    // the per-row higher-order form the kernel replaced
+    val byLambda = when(Pipeline.gate, filter(Rules.literal(rules),
+      rr => contains(col("transcript"), rr.getField("pattern"))))
+    samples(batchGen, 3).foreach { rows =>
+      val out = TestSpark.clipsDf(rows)
+        .select(Pipeline.matching(rules).as("got"), byLambda.as("ref")).collect()
+      out.foreach(r => assert(r.get(0) == r.get(1)))
+    }
+    val df = TestSpark.clipsDf(Seq(
+      ("clip-a", "wav", ""),                                      // gated in, nothing matches
+      ("clip-b", "wav", "user 3, then access denied, then user 1"), // out of rule order
+      ("clip-c", "opus-stub", "access denied"),                   // gate fails: codec
+      ("clip-d", "wav", null)))                                   // gate fails: no transcript
+    val got = df.select(col("clip_id"),
+        Pipeline.matching(rules).getField("rule_id").as("ids"),
+        Pipeline.matchCount(rules).as("n"),
+        Pipeline.matching(Nil).as("none"),
+        Pipeline.matchCount(Nil).as("n0"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    def ids(c: String) = Option(got(c).getAs[scala.collection.Seq[String]]("ids")).map(_.toSeq)
+    assert(ids("clip-a").contains(Seq.empty))
+    assert(ids("clip-b").contains(Seq("r-access-denied", "r-err-empty", "r-case-sev")))
+    assert(ids("clip-c").isEmpty && ids("clip-d").isEmpty)
+    assert(Seq("clip-a", "clip-b", "clip-c", "clip-d").map(got(_).getAs[Int]("n")) == Seq(0, 3, 0, 0))
+    assert(got("clip-a").getAs[scala.collection.Seq[Any]]("none").isEmpty && got("clip-c").isNullAt(3))
+    assert(got.values.forall(_.getAs[Int]("n0") == 0))
+  }
+
+  test("event-time offset: timestamp_add equals the make_interval form it replaced, in the input type") {
+    import org.apache.spark.sql.functions._
+    val transcript = Rules.all.map(_.pattern).mkString(" ")
+    val base = TestSpark.clipsDf(Seq(("clip-t0-s0-0000000001", "wav", transcript),
+        ("clip-t0-s0-0000000002", "wav", transcript)))
+      .withColumn("event_time", when(col("event_id") === 0L, col("event_time"))) // NULL on clip 2
+    val rules = Rules.surviving(Nil)
+    val offsets = rules.flatMap(_.payload).map(_.tsOffsetS).distinct.sorted
+    assert(offsets == Seq(0L, 15L, 30L, 45L, 60L, 120L))
+    val off = col("r.ts_offset_s")
+    val byInterval = when(off > 0, col("event_time") +
+      make_interval(lit(0), lit(0), lit(0), lit(0), lit(0), lit(0), off.cast("double")))
+      .otherwise(col("event_time"))
+    Seq("timestamp", "timestamp_ntz").foreach { tsType =>
+      val clips = base.withColumn("event_time", col("event_time").cast(tsType))
+      val out = Pipeline.explodeMatches(clips, rules)
+        .select(off.as("off"), Pipeline.eventFields.toMap.apply("event_time").as("got"), byInterval.as("ref"))
+      assert(out.schema("got").dataType == clips.schema("event_time").dataType, tsType)
+      val rows = out.collect()
+      assert(rows.length == 2 * rules.size, tsType)
+      assert(rows.map(_.getLong(0)).distinct.sorted.toSeq == offsets, tsType)
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"$tsType off=${r.getLong(0)}"))
+      assert(rows.count(_.isNullAt(1)) == rules.size, tsType)
+    }
+  }
+
   test("X2 coercion: total function with the 3-way branch semantics") {
     val s = spark
     import s.implicits._

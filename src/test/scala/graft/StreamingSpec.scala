@@ -1515,6 +1515,9 @@ class StreamingSpec extends AnyFunSuite {
         clip("clip-t0-s0-0000000002", "login ok user 4", "2025-09-19 10:01:00", 2),   // 1 valid + 1 malformed
         clip("clip-t0-s0-0000000003", "login ok", "2025-09-19 10:02:00", 3))          // valid only
       q.processAllAvailable()
+      // progress reaches the listener asynchronously: wait for the batch
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (listener.byBatch.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       def total(k: String) = listener.byBatch.values.map(_.getOrElse(k, 0L)).sum
       assert(total("errors_decode_error_total") == 2,
         s"expected 2 labeled decode errors, got ${listener.byBatch}")
