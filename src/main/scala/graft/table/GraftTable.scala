@@ -1,7 +1,9 @@
 package graft.table
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileVisitResult, Files, Path, Paths, SimpleFileVisitor, StandardCopyOption,
+  StandardOpenOption}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, GraftPlans, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -979,6 +981,45 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
     * mismatch in [[vacuum]] or [[gcOrphans]] DELETES live data. */
   private def canon(s: String): String = Paths.get(s).toAbsolutePath.normalize.toString
 
+  /** Sweeps data/ in one traversal (partition layouts nest files under
+    * col=value dirs): deletes every data file whose canonical path `live`
+    * rejects, with its Hadoop `.crc` sidecar, and every directory left
+    * holding no live data file, with its `_SUCCESS` markers, so an expired
+    * or orphaned batch leaves nothing behind. Returns the number of data
+    * files deleted. */
+  private def sweepData(live: String => Boolean): Int = {
+    val dataRoot = p("data")
+    var deleted = 0
+    // per open directory, innermost first: does its subtree hold a live file
+    var held = List.empty[Boolean]
+    if (Files.exists(dataRoot)) Files.walkFileTree(dataRoot, new SimpleFileVisitor[Path] {
+      override def preVisitDirectory(d: Path, a: BasicFileAttributes): FileVisitResult = {
+        held ::= false
+        FileVisitResult.CONTINUE
+      }
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = {
+        val n = f.getFileName.toString
+        // a sidecar `.x.parquet.crc` lives and dies with `x.parquet`
+        val data = if (n.startsWith(".") && n.endsWith(".parquet.crc"))
+          f.resolveSibling(n.substring(1, n.length - ".crc".length)) else f
+        if (data.getFileName.toString.endsWith(".parquet")) {
+          if (live(canon(data.toString))) held = true :: held.tail
+          else if (Files.deleteIfExists(f) && (data eq f)) deleted += 1
+        }
+        FileVisitResult.CONTINUE
+      }
+      override def postVisitDirectory(d: Path, e: java.io.IOException): FileVisitResult = {
+        if (e != null) throw e
+        val h = held.head
+        held = held.tail
+        if (h && held.nonEmpty) held = true :: held.tail
+        if (!h && d != dataRoot) deleteTree(d)
+        FileVisitResult.CONTINUE
+      }
+    })
+    deleted
+  }
+
   /** Retention: expire snapshots older than `keepFromVersion` and delete
     * every data file and manifest no snapshot ≥ keepFromVersion references.
     * The retention CONTRACT (same as any snapshot table): time travel to
@@ -1001,17 +1042,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       (keepFromVersion + 1 to cur).flatMap(k => manifestsAddedAt(k).getOrElse(Nil))).toSet
     val keptFiles = keptManifests.flatMap(m => manifestFiles(m).map(f => canon(f.path)))
 
-    var deleted = 0
-    val dataRoot = p("data")
-    if (Files.exists(dataRoot)) {
-      // recursive: partition-layout batches nest files under col=value dirs
-      val walk = Files.walk(dataRoot)
-      try walk.iterator().asScala.foreach { f =>
-        if (f.getFileName.toString.endsWith(".parquet") && !keptFiles.contains(canon(f.toString))) {
-          Files.delete(f); deleted += 1
-        }
-      } finally walk.close()
-    }
+    val deleted = sweepData(keptFiles)
     // expired snapshots + manifests last: readers resolve files first, so
     // a crash mid-vacuum leaves only harmless extra metadata. Kept delta
     // snapshots resolve through their PARENT chain, which bottoms out at
@@ -1141,14 +1172,7 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       val keptFiles = referenced.toSet
         .filter(m => Files.exists(p("manifests", m)))
         .flatMap((m: String) => manifestFiles(m).map(f => canon(f.path)))
-      val dataRoot = p("data")
-      if (Files.exists(dataRoot)) {
-        val walk = Files.walk(dataRoot)
-        try walk.iterator().asScala.foreach { f =>
-          if (f.getFileName.toString.endsWith(".parquet") &&
-              !keptFiles.contains(canon(f.toString))) rm(f)
-        } finally walk.close()
-      }
+      removed += sweepData(keptFiles)
     }
     if (removed > 0) invalidateMetaCaches()
     removed
@@ -1421,7 +1445,11 @@ final class GraftTable(val root: String, checkpointInterval: Int = 64,
       // empty outputs carry no rows: off the manifest and the disk
       val (live, empty) = writtenFiles(dataDir, spark.sessionState.newHadoopConf(), next.schema)
         .partition(_.rows > 0)
-      empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
+      empty.foreach { f =>
+        val path = Paths.get(f.path)
+        Files.deleteIfExists(path.resolveSibling(s".${path.getFileName}.crc"))
+        Files.deleteIfExists(path)
+      }
       val metrics = metricsOf(live.map(_.rows).sum)
       if (metrics.isEmpty) deleteTree(dataDir) // whole tree: stray _SUCCESS/empty value dirs too
       metrics.map { m =>

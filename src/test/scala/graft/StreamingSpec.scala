@@ -15,6 +15,13 @@ import org.apache.spark.sql.execution.datasources.FilePartition
 case class Clip(clip_id: String, sr_hz: Int, dur_ms: Int, codec: String,
                 transcript: String, event_time: Timestamp, tenant_id: Long, event_id: Long)
 
+/** Holds a test's sink write open (see the stopped-inside-commit test):
+  * the UDF that reads it runs in this JVM's executor threads. */
+object StopProbe {
+  @volatile var armed = false
+  val entered = new java.util.concurrent.CountDownLatch(1)
+}
+
 /** North-rule streaming machinery: watermarked windows with late-data drop,
   * stream-stream join, CEP via flatMapGroupsWithState (parity with the
   * batch oracle), exactly-once sink, checkpoint resume. */
@@ -406,6 +413,40 @@ class StreamingSpec extends AnyFunSuite {
       .foreachBatch(sink.write _).start()
     q.processAllAvailable(); q.stop()
     assert(dst.read(s).count() == 5)
+  }
+
+  test("vacuum and gcOrphans leave no expired batch directory, sidecar or marker") {
+    val s = spark
+    import s.implicits._
+    val t = new GraftTable(Files.createTempDirectory("graft_vac_dirs").toString)
+    (0 until 3).foreach(i => t.commit(
+      Seq((i, "wav"), (i + 10, "flac")).toDF("id", "codec").coalesce(1), i.toLong, Seq("codec")))
+    val data = java.nio.file.Paths.get(t.root, "data")
+    def tree(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val w = Files.walk(data)
+      try w.iterator().asScala.filter(_ != data).map(data.relativize(_).toString).toSeq.sorted
+      finally w.close()
+    }
+    assert(tree().exists(_.endsWith("._SUCCESS.crc")) && tree().exists(_.endsWith(".parquet.crc")))
+    t.compact(s, targetFiles = 1)
+    assert(t.vacuum(keepFromVersion = t.version) == 6)
+    val left = tree()
+    assert(left.forall(_.startsWith("rewrite=v3")), s"expired batch directories survived: $left")
+    // every sidecar still has its data file
+    val crcs = left.filter(_.endsWith(".parquet.crc"))
+    assert(crcs.nonEmpty && crcs.forall { c =>
+      val f = java.nio.file.Paths.get(c)
+      left.contains(f.resolveSibling(f.getFileName.toString.drop(1).dropRight(4)).toString)
+    }, s"orphan sidecars: $left")
+    assert(t.read(s).count() == 6)
+    // an aborted writer's batch (data, sidecar, markers) goes with gcOrphans
+    val lost = data.resolve("batch=9").resolve("codec=wav")
+    Files.createDirectories(lost)
+    Seq("part-0.parquet", ".part-0.parquet.crc").foreach(n => Files.write(lost.resolve(n), Array[Byte](1)))
+    Seq("_SUCCESS", "._SUCCESS.crc").foreach(n => Files.write(lost.getParent.resolve(n), Array[Byte]()))
+    assert(t.gcOrphans() == 1)
+    assert(tree() == left)
   }
 
   test("vacuum + periodic checkpoint: resumed reader gets only its delta") {
@@ -1325,6 +1366,47 @@ class StreamingSpec extends AnyFunSuite {
     val got = table.read(s).select("event_uid").collect().map(_.getString(0)).sorted
     assert(got.length == expected.length)
     assert(got.sameElements(expected)) // identical output rows, no dupes/gaps
+  }
+
+  test("a query stopped inside its commit restarts to exactly-once rows, no unlisted data dir") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val table = new GraftTable(Files.createTempDirectory("graft_stop").toString)
+    val ckpt = Files.createTempDirectory("ckpt_stop").toString
+    val ms = MemoryStream[Long]
+    // holds the commit's write job open while armed: stop() lands inside it
+    val hold = udf { (v: Long) =>
+      if (StopProbe.armed) { StopProbe.entered.countDown(); Thread.sleep(30000) }
+      v
+    }
+    def start() = ms.toDF().dropDuplicates("value").writeStream
+      .option("checkpointLocation", ckpt)
+      .foreachBatch((df: DataFrame, id: Long) => new ExactlyOnceSink(table)
+        .write(df.withColumn("value", hold(col("value"))), id))
+      .start()
+    val q1 = start()
+    ms.addData(1L, 2L, 2L)
+    q1.processAllAvailable()
+    StopProbe.armed = true
+    ms.addData(3L, 1L, 4L)
+    try {
+      assert(StopProbe.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      q1.stop() // interrupts the write job: FileFormatWriter aborts it
+    } finally StopProbe.armed = false
+    assert(table.committedBatchIds == Set(0L))
+    val q2 = start()
+    q2.processAllAvailable(); q2.stop()
+    assert(table.committedBatchIds == Set(0L, 1L))
+    assert(table.read(s).select("value").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L))
+    // every data directory is the one a manifest lists
+    val data = java.nio.file.Paths.get(table.root, "data")
+    val dirs = {
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(data)
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+    assert(dirs == Set("batch=0", "batch=1"))
   }
 
   test("V2 source: table-to-table stream with resume is exactly-once") {
