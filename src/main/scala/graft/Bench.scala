@@ -89,31 +89,6 @@ object Bench {
     f"""{"alu_eff_8_32":${pair(mem = false)}%.3f,"mem_eff_8_32":${pair(mem = true)}%.3f}"""
   }
 
-  private def session(cpus: Int): SparkSession = {
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // MICROS over deprecated INT96: INT96 footers carry no usable
-      // min/max, which disables GraftTable manifest stats / file pruning
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-    // RocksDB state store for the stateful (cep) mode: state off-heap on
-    // local disk with incremental snapshots — the >heap-state configuration
-    val s = (if (sys.env.contains("SPARK_GRAFT_BENCH_ROCKSDB"))
-      b0.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else b0)
-      // zstd over snappy: ~2× smaller event files — the sink is disk-bound
-      // in this single-disk sandbox and compression CPU scales with cores
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Stage a replicated clip table (metadata + transcript) as `nFiles`
     * parquet files. File-count choreography is the batch-parallelism lever
     * (streaming batch parallelism = files per trigger, not cores): with
@@ -144,7 +119,6 @@ object Bench {
     // task synthesizing the whole staged corpus), and the shuffle then
     // moves small clip rows, not multi-KB byte payloads
     val clips = if (mode == "audio" || mode == "features") {
-      graft.functions.AudioFunctions.register(spark)
       import graft.functions.AudioFunctions._
       clips0.repartition(nFiles).withColumn("bytes",
         pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -168,7 +142,7 @@ object Bench {
   private def runPipeline(cpus: Int, inputDir: String, nClips: Long,
                           mode: String = "sink",
                           maxFilesPerTrigger: Int = 32): RunResult = {
-    val spark = session(cpus)
+    val spark = Sessions.local(cpus)
     try {
       val schema = spark.read.parquet(inputDir).schema
       // tmpfs: the sandbox's single shared disk is wildly noisy (identical
@@ -206,7 +180,6 @@ object Bench {
           // ALU-bound point on the intensity axis next to decode-only's
           // DRAM-bound point. ONE arm so the two modes can never drift
           // into measuring different pipeline shapes.
-          graft.functions.AudioFunctions.register(spark)
           import graft.functions.AudioFunctions._
           val feature =
             if (mode == "features") pcm_features(col("bytes"), col("codec")).as("ft")
@@ -277,7 +250,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
     // -------- part 1: per-query timings
-    val spark = session(cpus)
+    val spark = Sessions.local(cpus)
     val results =
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) Seq.empty[(String, Double)]
       else SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Extra benchmark main for guide §1.4-style isolation — NOT the driver's
   * harness (Bench.scala is frozen for measurement; this main exists so
@@ -45,17 +44,7 @@ object BenchExtra {
     val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
     explainDir.foreach(d => Files.createDirectories(Paths.get(d)))
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-extra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
 
     // Locale.ROOT formatting throughout: the f-interpolator uses the JVM
     // default locale, and a comma-decimal locale would print unparseable

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.audio.Rules
 import graft.metrics.Metrics
@@ -272,26 +271,11 @@ object Main {
       }
       return
     }
-    val builder0 = SparkSession.builder()
-      .appName("graft-streaming-cep")
-      .config("spark.sql.session.timeZone", "UTC")
-      // MICROS over deprecated INT96: INT96 footers carry no usable
-      // min/max, which disables GraftTable manifest stats / file pruning
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // At 10^12-clip scale CEP/join state outgrows executor heaps — RocksDB
     // state store spills to local disk with incremental checkpointing.
-    val builder = if (conf.rocksdb)
-      builder0.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else builder0
-    // spark-submit injects spark.master; default to local when run directly
-    val spark = (if (sys.props.contains("spark.master")) builder
-      else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.AudioFunctions.register(spark)
+    if (conf.rocksdb) spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     // table maintenance: no stream, no checkpoint — operate on --output
     // (vacuum already ran Spark-free before the session was built)

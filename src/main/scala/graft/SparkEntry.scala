@@ -58,9 +58,7 @@ object SparkEntry {
         // from footers (≤ files.length reads, early exit at `want`)
         val conf = df.sparkSession.sessionState.newHadoopConf()
         def rowGroups(file: String): Int = scala.util.Try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(file), conf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val reader = graft.table.GraftTable.openParquet(new org.apache.hadoop.fs.Path(file), conf)
           try reader.getRowGroups.size()
           finally reader.close()
         }.getOrElse(0)
@@ -125,7 +123,6 @@ object SparkEntry {
     // decoded sample count is oracle-checkable arithmetically from
     // (sr_hz, dur_ms, codec). SNR invariant is pinned in PcmSpec.
     "pcm_decode_meta" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -200,7 +197,6 @@ object SparkEntry {
     // by the same sine bands as mm_audio_features (the resampled sine
     // keeps amplitude 0.5 → rms ~354, peak ~500) plus an SNR test.
     "mm_resample_meta" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       graft.functions.VecFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
@@ -322,7 +318,6 @@ object SparkEntry {
     // decode defect (byte order, scale, container offset) lands far
     // outside either band. Exact float values are pinned in PcmSpec (SNR).
     "mm_audio_features" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       graft.functions.VecFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
@@ -350,7 +345,6 @@ object SparkEntry {
     // offset) earning its flags against closed forms of the synth'd sine:
     // zcr ≈ 2·f·n/sr, rms ≈ 0.3536 (A=0.5), peak ≈ 0.5, dc ≈ 0
     "mm_clip_quality" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -373,7 +367,6 @@ object SparkEntry {
     // threshold), so the end is asserted within one frame of the clip's
     // integer-ms length ((n·1000) div sr) rather than exactly
     "mm_segments" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -392,7 +385,6 @@ object SparkEntry {
     // audio query whose oracle is a closed form over event_id rather
     // than an acceptance band.
     "mm_dominant_freq" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -412,7 +404,6 @@ object SparkEntry {
     // then RE-measured from the normalized bytes — the round trip must
     // land in [248, 252]·10⁻³ and emit exactly 2 bytes/sample.
     "mm_loudnorm" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -434,7 +425,6 @@ object SparkEntry {
     // 0.537 within the acceptance band (PcmSpec sweeps the whole
     // fixture grid to prove the band holds everywhere).
     "mm_clip_detect" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -459,7 +449,6 @@ object SparkEntry {
     // map-side-combinable shuffle on an 80-value key; output size is
     // scale-independent.
     "dedup_audio_fp" -> ((s, dir) => {
-      graft.functions.AudioFunctions.register(s)
       import graft.functions.AudioFunctions._
       clips(s, dir).filter(Pipeline.gate)
         .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))

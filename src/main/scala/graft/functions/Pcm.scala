@@ -580,8 +580,7 @@ case class PcmResample(children: Seq[Expression]) extends KernelCall("pcm_resamp
 object AudioFunctions {
   /** Column builders resolve through the function registry at analysis
     * time, so callers must have run [[register]] on the session first —
-    * every engine entry point (SparkEntry/Verify/Bench/streaming jobs)
-    * does. Spark 4's Column is API-agnostic and no longer exposes a public
+    * every session built by [[graft.Sessions.local]] has. Spark 4's Column is API-agnostic and no longer exposes a public
     * Expression constructor; registry resolution is the supported path. */
   def pcm_synth(freqHz: Column, srHz: Column, durMs: Column, codec: Column): Column =
     call_function("pcm_synth", freqHz, srHz, durMs, codec)

@@ -83,7 +83,6 @@ object StreamingJobs {
     * audio + quality metadata) a downstream trainer consumes; pair with
     * the exactly-once sink for the full ingest pipeline. */
   def audioPrep(spark: SparkSession, clipStream: DataFrame): DataFrame = {
-    graft.functions.AudioFunctions.register(spark)
     import graft.functions.AudioFunctions._
     clipStream.filter(Pipeline.gate)
       .withColumn("bytes", pcm_synth(clipFreq(col("event_id")), col("sr_hz"), col("dur_ms"), col("codec")))
@@ -134,7 +133,6 @@ object StreamingJobs {
     * (exact dedup over ALL history stays with the batch path). */
   def audioDedupStream(spark: SparkSession, clipStream: DataFrame,
                        watermark: String = "1 hour"): DataFrame = {
-    graft.functions.AudioFunctions.register(spark)
     import graft.functions.AudioFunctions._
     clipStream.filter(Pipeline.gate)
       // a clip with no samples (sr·dur < 1000 ⇒ n = 0) or a nonsense rate
@@ -185,45 +183,54 @@ object StreamingJobs {
   def streamingCep(spark: SparkSession, events: DataFrame,
                    withinS: Long = Cep.DefaultWithinS): Dataset[Cep.Detection] = {
     import spark.implicits._
-    val rows = events
+    // grouped by the column, not a typed key lambda: no per-row
+    // deserialize-call-serialize of the key (AppendColumns) before the
+    // shuffle; the groups and the state key are the same
+    cepRows(events).groupBy(col("event_key")).as[String, CepRow]
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        cepGroup(withinS) _)
+  }
+
+  /** The CEP operator's input: the A and B events under a 1 h watermark,
+    * with the columns of [[CepRow]]. */
+  private[graft] def cepRows(events: DataFrame): DataFrame =
+    events
       .filter(col("rule_id").isin(Cep.RuleA, Cep.RuleB))
       .withWatermark("event_time", "1 hour")
       .select(col("event_key"), col("clip_id"), col("rule_id"), col("event_time"))
-      .as[CepRow]
 
-    rows.groupByKey(_.event_key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (key: String, it: Iterator[CepRow], state: GroupState[CepState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = it.toSeq.sortBy(r => (tsUs(r.event_time), r.clip_id, r.rule_id))
-            var st = state.getOption match {
-              case Some(CepState(us)) if us >= 0 => Cep.ArmState(Some(us))
-              case _ => Cep.ArmState(None)
-            }
-            val out = Seq.newBuilder[Cep.Detection]
-            var maxUs = Long.MinValue
-            sorted.foreach { r =>
-              val (next, det) = Cep.step(st,
-                Cep.SeqEvent(r.event_key, r.clip_id, r.rule_id, tsUs(r.event_time)), withinS)
-              st = next
-              det.foreach(out += _)
-              maxUs = math.max(maxUs, tsUs(r.event_time))
-            }
-            state.update(CepState(st.lastAUs.getOrElse(-1L)))
-            if (maxUs != Long.MinValue) {
-              // A group whose newest event already trails the watermark
-              // (wide event-time span within one micro-batch) would set a
-              // timeout in the past — an engine error. Clamp to just past
-              // the watermark: the armed A is expired anyway, this evicts
-              // it at the next trigger.
-              val wantMs = maxUs / 1000L + withinS * 1000L
-              state.setTimeoutTimestamp(math.max(wantMs, state.getCurrentWatermarkMs() + 1L))
-            }
-            out.result().iterator
-          }
-        })
-  }
+  /** One key's rows of one micro-batch through [[Cep.step]], from and back
+    * to its state. */
+  private[graft] def cepGroup(withinS: Long)(key: String, it: Iterator[CepRow],
+                                             state: GroupState[CepState]): Iterator[Cep.Detection] =
+    if (state.hasTimedOut) {
+      state.remove()
+      Iterator.empty
+    } else {
+      val sorted = it.toSeq.sortBy(r => (tsUs(r.event_time), r.clip_id, r.rule_id))
+      var st = state.getOption match {
+        case Some(CepState(us)) if us >= 0 => Cep.ArmState(Some(us))
+        case _ => Cep.ArmState(None)
+      }
+      val out = Seq.newBuilder[Cep.Detection]
+      var maxUs = Long.MinValue
+      sorted.foreach { r =>
+        val (next, det) = Cep.step(st,
+          Cep.SeqEvent(r.event_key, r.clip_id, r.rule_id, tsUs(r.event_time)), withinS)
+        st = next
+        det.foreach(out += _)
+        maxUs = math.max(maxUs, tsUs(r.event_time))
+      }
+      state.update(CepState(st.lastAUs.getOrElse(-1L)))
+      if (maxUs != Long.MinValue) {
+        // A group whose newest event already trails the watermark
+        // (wide event-time span within one micro-batch) would set a
+        // timeout in the past — an engine error. Clamp to just past
+        // the watermark: the armed A is expired anyway, this evicts
+        // it at the next trigger.
+        val wantMs = maxUs / 1000L + withinS * 1000L
+        state.setTimeoutTimestamp(math.max(wantMs, state.getCurrentWatermarkMs() + 1L))
+      }
+      out.result().iterator
+    }
 }

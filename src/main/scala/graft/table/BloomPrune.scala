@@ -2,9 +2,7 @@ package graft.table
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.column.values.bloomfilter.BloomFilter
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.sources._
@@ -61,8 +59,7 @@ object BloomPrune {
     val probeCols = filters.flatMap(equalityCols).toSet.intersect(bloomCols)
     if (probeCols.isEmpty) return true
     try {
-      val rd = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), hconf))
+      val rd = GraftTable.openParquet(new org.apache.hadoop.fs.Path(path), hconf)
       try {
         val blocks = rd.getFooter.getBlocks.asScala.toSeq
         if (blocks.isEmpty) return true

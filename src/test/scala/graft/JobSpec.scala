@@ -234,6 +234,65 @@ class JobSpec extends AnyFunSuite {
     assert(p.get("partition_by").toString == "[]" && p.get("rows").asLong() == 1L)
   }
 
+  /** Runs `graft.Main` outside `spark-submit` in a JVM of its own at
+    * width 2 (Main stops its session on exit; this suite shares one). */
+  private def runMain(args: String*): Unit = {
+    import scala.jdk.CollectionConverters._
+    val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(a => a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val log = Files.createTempFile("graft_main", ".log").toFile
+    val pb = new ProcessBuilder((Seq(javaBin, "-Xmx1g") ++ jvmArgs ++
+      Seq("-cp", sys.props("java.class.path"), "graft.Main") ++ args).asJava)
+    pb.environment().put("SPARK_GRAFT_CPUS", "2")
+    pb.redirectErrorStream(true).redirectOutput(log)
+    val p = pb.start()
+    val done = p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)
+    if (!done) p.destroyForcibly()
+    def tail = Files.readAllLines(log.toPath).asScala.takeRight(30).mkString("\n")
+    assert(done && p.exitValue == 0, s"Main ${args.mkString(" ")} failed:\n$tail")
+  }
+
+  test("Main --job events writes zstd-compressed parquet") {
+    val s = spark
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    val in = Files.createTempDirectory("main_zstd_in").resolve("clips").toString
+    val out = Files.createTempDirectory("main_zstd_out").toString
+    (0 until 20).map(i => Clip(f"clip-t${i % 3}-s0-$i%010d", 16000, 300, "wav",
+      "access denied", TestSpark.T0, 1L, i.toLong)).toDF().write.parquet(in)
+    runMain("--input", in, "--output", out, "--job", "events",
+      "--checkpoint", Files.createTempDirectory("main_zstd_ckpt").toString)
+    val files = new GraftTable(out).dataFiles
+    assert(files.nonEmpty)
+    val codecs = files.flatMap { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), s.sessionState.newHadoopConf()))
+      try rd.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+      finally rd.close()
+    }.toSet
+    assert(codecs == Set(org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD))
+  }
+
+  test("a fresh Main --job cep checkpoint pins width shuffle partitions") {
+    val s = spark
+    import s.implicits._
+    def at(t: String) = java.sql.Timestamp.valueOf(t)
+    val in = Files.createTempDirectory("main_cep_in").resolve("clips").toString
+    val out = Files.createTempDirectory("main_cep_out").toString
+    val ckpt = Files.createTempDirectory("main_cep_ckpt").toString
+    Seq(Clip("clip-k1-s0-0000000001", 16000, 300, "wav", "access denied", at("2025-09-19 10:00:00"), 1L, 1L),
+      Clip("clip-k1-s0-0000000002", 16000, 300, "wav", "privilege escalation",
+        at("2025-09-19 10:30:00"), 1L, 2L)).toDF().write.parquet(in)
+    runMain("--input", in, "--output", out, "--checkpoint", ckpt, "--job", "cep")
+    // offsets/0: a version line, then the batch metadata with the pinned conf
+    val meta = Files.readAllLines(java.nio.file.Paths.get(ckpt, "offsets", "0")).get(1)
+    val conf = new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta).get("conf")
+    assert(conf.get("spark.sql.shuffle.partitions").asText() == "2", meta)
+    assert(new GraftTable(out).read(s).count() == 1L)
+  }
+
   test("streaming source is manifest-gated: uncommitted data files invisible") {
     val s = spark
     import s.implicits._

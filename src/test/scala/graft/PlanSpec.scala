@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, MakeInterval}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, LambdaFunction, MakeInterval}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min}
 import org.scalatest.funsuite.AnyFunSuite
@@ -69,6 +71,27 @@ class PlanSpec extends AnyFunSuite {
       val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
       assertKernelPlan(plan.toString)
       assertCodegenKernel(plan)
+    } finally q.stop()
+  }
+
+  test("streaming CEP groups by the event_key column: no AppendColumns, one hash exchange on it") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    val ms = MemoryStream[Clip]
+    val q = graft.streaming.StreamingJobs.streamingCep(s,
+      graft.streaming.StreamingJobs.events(s, ms.toDF()))
+      .writeStream.format("memory").queryName("plan_cep").start()
+    try {
+      ms.addData(Clip("clip-k1-s0-0000000001", 16000, 500, "wav", "access denied",
+        java.sql.Timestamp.valueOf("2025-09-19 10:00:00"), 7L, 1L))
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(!plan.toString.contains("AppendColumns"), plan)
+      val keys = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+        .map { case h: HashPartitioning => h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+               case other => Seq(other.toString) }
+      assert(keys == Seq(Seq("event_key")), plan)
     } finally q.stop()
   }
 

@@ -111,6 +111,43 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("CEP state checkpointed under a typed key lambda resumes under column grouping") {
+    val s = spark
+    import s.implicits._
+    implicit val sq = s.sqlContext
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    import graft.streaming.{CepRow, CepState}
+    val ms = MemoryStream[Clip]
+    val ckpt = Files.createTempDirectory("ckpt_cep_regroup").toString
+    val table = new GraftTable(Files.createTempDirectory("graft_cep_regroup").toString)
+    val events = StreamingJobs.events(s, ms.toDF())
+    // the grouping streamingCep used before: the key from a typed lambda
+    val typed = StreamingJobs.cepRows(events).as[CepRow].groupByKey(_.event_key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        StreamingJobs.cepGroup(Cep.DefaultWithinS) _)
+    def run(cep: org.apache.spark.sql.Dataset[Cep.Detection], batch: Seq[Clip]): Unit = {
+      val q = cep.toDF().writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(new ExactlyOnceSink(table).write _).start()
+      try { ms.addData(batch: _*); q.processAllAvailable() } finally q.stop()
+    }
+    val first = Seq(
+      clip("clip-g1-s0-0000000001", "access denied", "2025-09-19 10:00:00", 1),
+      clip("clip-g2-s0-0000000002", "access denied", "2025-09-19 10:00:00", 2),
+      clip("clip-g2-s0-0000000003", "privilege escalation", "2025-09-19 10:20:00", 3))
+    // g1's B fires only on the A armed in the typed query's state
+    val second = Seq(
+      clip("clip-g1-s0-0000000004", "privilege escalation", "2025-09-19 10:30:00", 4),
+      clip("clip-g3-s0-0000000005", "access denied", "2025-09-19 10:35:00", 5),
+      clip("clip-g3-s0-0000000006", "privilege escalation", "2025-09-19 10:40:00", 6))
+    run(typed, first)
+    run(StreamingJobs.streamingCep(s, events), second)
+    val got = table.read(s).as[Cep.Detection].collect().toSet
+    val want = Cep.detectBatch(Pipeline.events(s, (first ++ second).toDF()))
+      .as[Cep.Detection].collect().toSet
+    assert(got == want)
+    assert(got.map(_.event_key) == Set("clip-g1", "clip-g2", "clip-g3"))
+  }
+
   test("watermarked streaming sliding window (10 min / 5 min)") {
     val s = spark
     import s.implicits._

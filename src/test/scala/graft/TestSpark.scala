@@ -5,16 +5,7 @@ import java.sql.Timestamp
 
 /** One shared local session for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      // MICROS over deprecated INT96: INT96 footers carry no usable
-      // min/max, which disables GraftTable manifest stats / file pruning
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val T0: Timestamp = Timestamp.valueOf("2025-09-19 07:31:02")
 
